@@ -93,32 +93,17 @@ def find_rgps(
     max_hops: int = 200,
     core_frac: float = 0.95,
     dominance: float = 0.7,
-    reuse_cache: bool = False,
 ) -> DataFrame:
     """Full RGP query: returns the reference's 15-column result
     (RGPs.ipynb:473-488) ordered lists sorted by genome position."""
-    # r16 measured NEGATIVE result (VERDICT r15 #5, guide §5.1): the
-    # ordinal frame is read three times and the membership twice, so
-    # caching both was tried — stages did drop 57->41, but cached
-    # frames lose AQE partition coalescing (InMemoryRelation pins the
-    # exchange's 32 partitions; tasks 60->230) and the alternating
-    # same-session A/B (OPTIMIZATION_r16.md) put the cached variant at
-    # ~2x the uncached wall (clean mins 5.3 vs 2.75 s).  The fixture
-    # query is stage-LATENCY-bound, not recompute-bound (inputs are
-    # already persisted by _fixture_graph), so recompute wins; the
-    # ``reuse_cache`` switch stays for re-running the A/B on future
-    # Spark versions where cached plans coalesce.
-    def _reuse(df: DataFrame) -> DataFrame:
-        return df.cache() if reuse_cache else df
-
-    pos = _reuse(_ordinals(graph.features))
+    # Not cached: cached frames lose AQE partition coalescing (A/B in
+    # OPTIMIZATION_r16.md).
+    pos = _ordinals(graph.features)
     anchors = anchor_pairs(graph, n_strains, core_frac, dominance)
 
     # Features realizing each anchor cluster, with their strain+ordinal.
-    memb = _reuse(
-        graph.ortholog.join(
-            pos.select("feature_id", "strain", "pos"), "feature_id"
-        )
+    memb = graph.ortholog.join(
+        pos.select("feature_id", "strain", "pos"), "feature_id"
     )
     f1 = memb.select(
         F.col("cluster_id").alias("c1"),

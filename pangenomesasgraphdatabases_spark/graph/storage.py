@@ -1,25 +1,29 @@
 """Persistence for the pangenome graph: Parquet as the internal format
 (typed, columnar — replaces the reference's header-only CSV
-interchange, SURVEY.md section 1.1), with the partitioning strategy a
-100 TB deployment needs baked into the layout:
+interchange, SURVEY.md section 1.1).
 
-- `features` partitioned by strain prefix buckets: genome-order windows
-  then read one genome entirely within a partition (partition pruning
-  for single-strain queries, no shuffle for per-strain windows when the
-  in-memory frame is already strain-partitioned).
-- edge tables laid out by join key so co-located joins are possible via
-  bucketing (saveAsTable path) or at minimum benefit from file-level
-  min/max pruning.
+A saved graph is one flat parquet directory per table,
+``<path>/<table>``, plus ``<path>/_schema.json``: each table's Spark
+schema, written after every table has committed.  The schema file is
+the commit marker — a save that fails partway leaves none, and
+``load_graph`` refuses a directory without it — and it lets
+``load_graph`` open the tables without a Spark job (no footer schema
+inference, no parallel partition listing).
 
-CSV writers are kept for reference-format compatibility (S6).
+Co-located join layouts live in ``save_bucketed_tables`` (saveAsTable
+path); ``compact_parquet`` rewrites small-file directories.
 """
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from pangenomesasgraphdatabases_spark.graph.build import PangenomeGraph
+
+_SCHEMA_FILE = "_schema.json"
 
 _TABLES = (
     "features",
@@ -75,39 +79,60 @@ def materialize_graph(
         list(pool.map(_one, rest))
 
 
-def save_graph(graph: PangenomeGraph, path: str, strain_buckets: int = 64) -> None:
-    """Write every vertex/edge table as parquet under <path>/<table>.
+def _hadoop_path(spark: SparkSession, path: str):
+    """(FileSystem, Path) for ``path``, so non-local stores work too."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
 
-    features/feature_in_strain gain a `strain_bucket` partition column
-    (stable hash mod strain_buckets) so a 770-strain — or 770k-strain —
-    dataset neither creates one tiny partition per strain nor loses
-    strain pruning entirely.  Table writes go through materialize_graph
-    (r15): eight independent parquet jobs overlap instead of running
-    back-to-back."""
+
+def save_graph(graph: PangenomeGraph, path: str) -> None:
+    """Write every vertex/edge table as flat parquet under
+    <path>/<table>, then commit by writing <path>/_schema.json.
+
+    Table writes go through materialize_graph (r15): eight independent
+    parquet jobs overlap instead of running back-to-back.  A schema
+    file left by an earlier save is deleted first, so a save that fails
+    partway leaves a directory load_graph refuses."""
+    spark = graph.ortholog.sparkSession
+    fs, schema_path = _hadoop_path(spark, f"{path}/{_SCHEMA_FILE}")
+    fs.delete(schema_path, False)
 
     def _write(df, name: str) -> None:
-        if name in ("features", "feature_in_strain"):
-            df = df.withColumn(
-                "strain_bucket",
-                F.pmod(F.xxhash64("strain"), F.lit(strain_buckets)),
-            )
-            df.write.mode("overwrite").partitionBy("strain_bucket").parquet(
-                f"{path}/{name}"
-            )
-        else:
-            df.write.mode("overwrite").parquet(f"{path}/{name}")
+        df.write.mode("overwrite").parquet(f"{path}/{name}")
 
     materialize_graph(graph, _write)
+    schemas = {name: getattr(graph, name).schema.jsonValue() for name in _TABLES}
+    out = fs.create(schema_path, True)
+    try:
+        out.write(bytearray(json.dumps(schemas).encode("utf-8")))
+    finally:
+        out.close()
 
 
 def load_graph(spark: SparkSession, path: str) -> PangenomeGraph:
-    dfs = {}
-    for name in _TABLES:
-        df = spark.read.parquet(f"{path}/{name}")
-        if "strain_bucket" in df.columns:
-            df = df.drop("strain_bucket")
-        dfs[name] = df
-    return PangenomeGraph(**dfs)
+    """Open a graph written by save_graph.  Reads each table with the
+    schema recorded in <path>/_schema.json, so no Spark job runs.
+    Raises FileNotFoundError when the schema file is missing: the save
+    never committed."""
+    fs, schema_path = _hadoop_path(spark, f"{path}/{_SCHEMA_FILE}")
+    if not fs.exists(schema_path):
+        raise FileNotFoundError(
+            f"load_graph: no {_SCHEMA_FILE} under {path}; not a committed save_graph output"
+        )
+    stream = fs.open(schema_path)
+    try:
+        raw = spark._jvm.org.apache.hadoop.io.IOUtils.readFullyToByteArray(stream)
+    finally:
+        stream.close()
+    schemas = json.loads(bytes(raw).decode("utf-8"))
+    return PangenomeGraph(
+        **{
+            name: spark.read.schema(StructType.fromJson(schemas[name])).parquet(
+                f"{path}/{name}"
+            )
+            for name in _TABLES
+        }
+    )
 
 
 def save_bucketed_tables(

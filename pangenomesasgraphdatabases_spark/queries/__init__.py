@@ -296,7 +296,7 @@ CHANGED_THIS_ROUND: tuple[str, ...] = (
     "emb_pq_codes",
     "ann_pq_adc_topk",
     "emb_pq_distortion_report",
-    # find_rgps gained the (default-off) reuse_cache switch:
+    # find_rgps (its cache A/B was measured, not shipped; OPTIMIZATION_r16.md):
     "pangenome_rgp",
 )
 

@@ -12,7 +12,7 @@ from pangenomesasgraphdatabases_spark.session import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("pytest", cpus=8, shuffle_partitions=8)
+    s = get_spark("pytest", shuffle_partitions=8)
     yield s
 
 

@@ -2,16 +2,32 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 
 def test_save_load_roundtrip(spark, pangenome, tmp_path_factory):
+    import os
+
     from pangenomesasgraphdatabases_spark.graph.rgp import find_rgps
-    from pangenomesasgraphdatabases_spark.graph.storage import load_graph, save_graph
+    from pangenomesasgraphdatabases_spark.graph.storage import _TABLES, load_graph, save_graph
 
     path = str(tmp_path_factory.mktemp("graph_store"))
-    save_graph(pangenome, path, strain_buckets=4)
+    save_graph(pangenome, path)
+    assert not [d for _, dirs, _ in os.walk(path) for d in dirs if d.startswith("strain_bucket=")]
+
+    # The saved schema file lets load_graph open every table without
+    # submitting a Spark job (no footer inference, no parallel listing).
+    tracker = spark.sparkContext.statusTracker()
+    jobs_before = set(tracker.getJobIdsForGroup(None))
     g2 = load_graph(spark, path)
+    assert set(tracker.getJobIdsForGroup(None)) == jobs_before
+
+    # Names and types in order; parquet reads every column back nullable.
+    for name in _TABLES:
+        built = [(f.name, f.dataType.simpleString()) for f in getattr(pangenome, name).schema]
+        loaded = [(f.name, f.dataType.simpleString()) for f in getattr(g2, name).schema]
+        assert loaded == built, name
 
     # Multiset comparison on feature_id, not bare counts: one r16 full-suite
     # run read 342 rows back for a 332-row frame (unreproducible in 20
@@ -39,6 +55,16 @@ def test_save_load_roundtrip(spark, pangenome, tmp_path_factory):
         for r in find_rgps(g2).collect()
     }
     assert before == after and before
+
+
+def test_load_graph_requires_schema_file(spark, tmp_path):
+    """A directory without _schema.json (an uncommitted or foreign
+    save) fails loudly instead of falling back to schema inference."""
+    from pangenomesasgraphdatabases_spark.graph.storage import load_graph
+
+    spark.range(3).write.parquet(str(tmp_path / "features"))
+    with pytest.raises(FileNotFoundError, match="_schema.json"):
+        load_graph(spark, str(tmp_path))
 
 
 def test_compact_parquet_reduces_files(spark, tmp_path):

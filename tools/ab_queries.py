@@ -31,7 +31,7 @@ def main() -> None:
     names = sys.argv[3:]
     spark = get_spark("ab-queries")
     registry = all_queries()
-    m = re.search(r"sf([0-9.]+)/?$", sf_dir)
+    m = re.search(r"sf(\d+(?:\.\d+)?)/?$", sf_dir)
     sf = float(m.group(1)) if m else -1.0  # ADVICE r15: parse numerically
     warm = _warmup_dir(sf_dir, sf)
     for name in names:
