@@ -1,63 +1,26 @@
-"""Benchmark harness: runs headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints
-ONE compact JSON line: {"metric", "value", "unit", "queries", "sf"}.
+"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
+(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS], then the
+770-strain x 6000-feature graph build, and prints ONE compact JSON line:
+{"metric", "value", "unit", "queries", "fixed_total_sec",
+"build_min_sec", "sf"}.
 
 Each query is forced end-to-end with the noop datasource (full
-materialization, no driver collect).  Every headline entry runs
-$SPARK_GRAFT_REPS times (default 3) and reports the per-query MEDIAN
-(VERDICT r4 #7: single-run numbers made sub-second deltas look like
-regressions).
+materialization, no driver collect).  Every headline entry runs exactly
+$SPARK_GRAFT_REPS reps (default 3; the build runs at least 5) and
+reports the plain median of its wall times.
 
 Output contract (VERDICT r6 #1): stdout carries EXACTLY ONE compact
-JSON line (the r6 line, carrying per-rep arrays inline, outgrew the
-driver's tail capture and round 6 lost its parsed bench).  Everything
-else — raw reps, first-rep cold series, per-rep CPU-steal jiffies —
-goes to ``BENCH_DETAIL.json`` next to this file and to stderr; the
-driver-shaped run (sf0.1) also archives a per-round copy
-``BENCH_DETAIL_r0N.json`` so rep history survives round boundaries
-(VERDICT r7 #7).
+JSON line; the driver's tail capture loses a longer one.  Everything
+else goes to ``BENCH_DETAIL.json`` next to this file (mirrored to
+stderr); the driver-shaped run (sf0.1) also archives a per-round copy
+``BENCH_DETAIL_r0N.json`` so rep history survives round boundaries.
 
-Steal annotation (VERDICT r6 #2/#3): the shared sandbox shows bursty
-co-tenant CPU steal (measured rep sets like 58.2 s @ 3,784 steal
-jiffies vs 12.4 s @ 26 on identical plans).  Every rep samples
-``/proc/stat`` steal around itself so a polluted median is
-self-evident from the artifacts; the compact line also carries
-``build_min_sec`` (min-of-reps for the graph build) as the
-steal-robust companion to the median.
-
-Host-speed calibration (r9, VERDICT r8 "What's wrong" #1): a
-constant-work CPU+shuffle micro-job runs after warmup and again after
-the last timed query; the compact line carries ``host_speed_index``
-(best probe / pinned CALIBRATION_REF_SEC).  A uniform cross-query
-slowdown with index >> 1 reads as host drift from the artifact alone;
-a real regression moves queries while the index stays ~1.
-
-Steal-aware retry (r8): a rep whose steal delta exceeds 300 jiffies
-is polluted (~3x wall on this sandbox) and gets retried, bounded at
-2x the planned rep count; ALL reps stay in the detail artifact and
-the reported figure is the median over the clean reps when any exist
-(identical to plain median-of-reps on a calm host).  Before this, a
-steal storm could put 3 of 5 build reps at 39-54 s with 15 s clean
-reps beside them and the headline median reported the storm, not the
-engine.
-
-Bandwidth gate (r16, VERDICT r15 #1): steal-only gating is blind to
-memory-bus co-tenancy — the r15 driver run recorded
-doc_jaccard_containment reps [26.2, 49.9, 37.4, 3.75] at steal
-[4216, 96, 66, 6]: the steal-96/66 reps were bus-stalled (calibration
-bw probe 1.44 GiB/s vs the 7.1 reference) yet counted clean, so the
-"clean median" reported 37.38 for a 3.75 s query.  Every rep now also
-samples a ~20 ms driver-side DRAM micro-probe before and after
-itself; a rep whose worse probe reads below BW_CLEAN_FRACTION of
-BW_REF_GIBS is bandwidth-dirty and treated exactly like a stolen rep
-(retried, kept in the artifact, excluded from the clean median).
-When no rep passes BOTH gates the fallback prefers steal-clean reps
-over the plain median (the old methodology's figure stays in the
-detail artifact as ``median_steal_gate_only``).  The compact line
-additionally carries ``clean_min_total_sec`` (sum of per-query
-min-of-clean-reps) and the detail artifact a per-query ``clean_min``
-map so a storm-inflated median is self-evident next to its own
-clean floor."""
+The host is shared, so wall time is weather.  Each rep therefore also
+records, beside its wall time, the ``/proc/stat`` steal jiffies it
+suffered and the Spark status-store counters of the jobs it ran
+(``COUNTERS``): executor CPU and bytes read and shuffled do not stretch
+with co-tenant load, so they are the regression signal, and a steal
+storm is visible in the artifact instead of being gated away."""
 
 from __future__ import annotations
 
@@ -72,6 +35,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pangenomesasgraphdatabases_spark.queries.registry import all_queries
 from pangenomesasgraphdatabases_spark.session import get_spark
+from perfbench.probes import ProcessTree, SparkProbe
 
 HEADLINE = [
     "gi_scan_flagship",
@@ -115,15 +79,19 @@ HEADLINE = [
     # r13 (VERDICT r12 #8): the builtin aligner family, tracked from
     # birth — the exact-hit pipeline (seeding join + X-drop) and the
     # scored partial-identity variant that pins the extension
-    # arithmetic.  bench_reconcile anchors from SCALE.md r12's 5.66 s
-    # base point (dedicated corpus; these md5-corpus queries are the
-    # driver-shape proxies).
+    # arithmetic.  SCALE.md r12 has the 5.66 s base point on a
+    # dedicated corpus; these md5-corpus queries are the driver-shape
+    # proxies.
     "blast_builtin_exact_hits",
     "blast_builtin_scored_hits",
     # r14 birth anchor: the gapped banded-SW path end-to-end (hits ->
     # gapped Karlin-Altschul bits -> per-subject adapter -> enrich
     # writeback) — the aligner family's remaining unbenched path.
     "blast_builtin_gapped_enrich",
+    # The sorted-adjacency triangle and clustering-coefficient queries
+    # (their shuffle fell from 243 MB to 27 MB in the rewrite).
+    "graph_triangle_count",
+    "graph_clustering_coefficient",
 ]
 
 # Bench hygiene (VERDICT r9 #8): HEADLINE grows as heavy queries are
@@ -163,6 +131,19 @@ FIXED_HEADLINE = (
 )
 
 
+# Status-store counters recorded for every rep (perfbench.probes names).
+COUNTERS = ("jobs", "tasks", "executor_cpu_s", "input_mb", "shuffle_write_mb")
+
+_SF_RE = re.compile(r"sf(\d+(?:\.\d+)?)/?$")
+
+
+def parse_sf(path: str) -> float:
+    """Scale factor of a path ending in ``sf<N>`` (``/`` allowed after
+    it); -1.0 when the path names none, e.g. ``sf0.0.1``."""
+    m = _SF_RE.search(path)
+    return float(m.group(1)) if m else -1.0
+
+
 def _read_steal() -> int:
     """Cumulative steal jiffies (aggregate ``cpu`` line, field 8
     0-indexed) from /proc/stat; 0 where unavailable (non-Linux)."""
@@ -174,240 +155,94 @@ def _read_steal() -> int:
         return 0
 
 
-# A rep whose steal delta exceeds this is co-tenant-polluted (a clean
-# rep on this sandbox reads < ~100 jiffies; storms read thousands and
-# cost ~3x wall — SCALE.md).  Polluted reps are RETRIED, bounded at 2x
-# the planned rep count, and every rep (polluted included) stays in
-# the detail artifact; the reported median is over the clean reps when
-# any exist.  On a calm host this is byte-identical to the old
-# median-of-reps; in a storm it reports the same number of CLEAN reps
-# instead of letting co-tenant weather masquerade as a regression
-# (r8: a stormed run measured the build median at 39.2 s with clean
-# reps of 15.0 s sitting right next to it).
-STEAL_CLEAN_JIFFIES = 300
-
-# A rep is bandwidth-dirty when the worse of its two ~20 ms DRAM
-# micro-probes reads below this fraction of BW_REF_GIBS (r16, VERDICT
-# r15 #1: the r15 storm ran the bus at 1.44/7.1 = 20% and steal-only
-# gating reported a 10x-inflated "clean" median).  0.7 clears calm-host
-# jitter (calm probes read 8.4-10.9 GiB/s, > 1.18x ref) while catching
-# the 2-5x co-tenant stalls that matter.
-BW_CLEAN_FRACTION = 0.7
-
-
-def _clean_flags(
-    steals: list[int],
-    bw_gibs: list[float] | None = None,
-    threshold: int = STEAL_CLEAN_JIFFIES,
-) -> list[bool]:
-    """Per-rep both-gates cleanliness: steal under threshold AND the
-    rep's worse bandwidth probe at/above the clean floor.  ``bw_gibs``
-    None (old callers / non-Linux) degrades to the steal-only gate."""
-    if bw_gibs is None:
-        bw_gibs = [BW_REF_GIBS] * len(steals)
-    floor = BW_CLEAN_FRACTION * BW_REF_GIBS
-    return [
-        s <= threshold and b >= floor for s, b in zip(steals, bw_gibs)
-    ]
-
-
-def _clean_median(
-    times: list[float],
-    steals: list[int],
-    threshold: int = STEAL_CLEAN_JIFFIES,
-    bw_gibs: list[float] | None = None,
-) -> float:
-    """Median over the reps that pass BOTH gates (steal + bandwidth);
-    when none do, falls back to the steal-clean reps (bandwidth gate
-    waived — better than averaging CPU storms in), then to the plain
-    median (never an empty sample)."""
-    flags = _clean_flags(steals, bw_gibs, threshold)
-    clean = [t for t, ok in zip(times, flags) if ok]
-    if not clean:
-        clean = [t for t, s in zip(times, steals) if s <= threshold]
-    return round(statistics.median(clean if clean else times), 3)
-
-
-def _clean_min(
-    times: list[float],
-    steals: list[int],
-    threshold: int = STEAL_CLEAN_JIFFIES,
-    bw_gibs: list[float] | None = None,
-) -> float:
-    """Min over the same clean sample `_clean_median` uses — the
-    storm-robust companion figure (VERDICT r15 #1 ordered co-reporting
-    it: a headline median deviating >2x from its own clean-min is the
-    harness-defect signature)."""
-    flags = _clean_flags(steals, bw_gibs, threshold)
-    clean = [t for t, ok in zip(times, flags) if ok]
-    if not clean:
-        clean = [t for t, s in zip(times, steals) if s <= threshold]
-    return round(min(clean if clean else times), 3)
-
-
-def _reps_done(
-    times: list[float],
-    steals: list[int],
-    planned: int,
-    threshold: int = STEAL_CLEAN_JIFFIES,
-    bw_gibs: list[float] | None = None,
-) -> bool:
-    """Stop once `planned` both-gates-clean reps exist, hard-capped at
-    2x `planned` total reps so a permanent storm cannot loop forever."""
-    clean = sum(_clean_flags(steals, bw_gibs, threshold))
-    return len(times) >= planned and (
-        clean >= planned or len(times) >= 2 * planned
-    )
-
-
-# --- Host-speed calibration (VERDICT r8 "What's wrong" #1) -------------------
-#
-# r8's bench regressed ~21% UNIFORMLY across 24 queries whose code had
-# not changed — host drift (memory-bandwidth / LLC co-tenancy) that
-# /proc/stat steal cannot see.  Adjudicating that required a judge
-# diffing code across rounds; the artifact should carry the evidence
-# itself.  A constant-work CPU+shuffle micro-job (spark.range -> hash
-# -> groupBy hash-agg; fully deterministic, zero I/O, independent of
-# sf) runs right after warmup and again after the last query; the
-# compact line reports ``host_speed_index`` = min-of-probes /
-# CALIBRATION_REF_SEC.  ~1.0 on a calm host; a uniformly slow round
-# shows index >> 1 alongside uniformly slow queries (drift), while a
-# real regression moves queries but not the index.
-#
-# CALIBRATION_REF_SEC is the calm-host BENCH-CONTEXT floor: the best
-# probe inside a full r9 driver-shape run (local[32], steal 0-2
-# jiffies on every probe rep, post-bench probe reps
-# [1.286, 0.663, 0.555]).  The in-bench JVM is far deeper JIT-warmed
-# than a fresh session (fresh-session mins read 0.79-0.85, ~1.5x),
-# which is why the probe runs at BOTH ends and the index uses the
-# best — by the post-probe the JIT state is reproducible
-# run-to-run.  FIXED denominator; do NOT re-measure per run or the
-# index degenerates to 1.0 by construction.  Calibrated for the
-# DRIVER SHAPE: an ad-hoc run with SPARK_GRAFT_CPUS=8 reads ~2x from
-# thread count alone, so compare indices only between same-shape
-# runs.
-CALIBRATION_REF_SEC = 0.56
-CALIBRATION_ROWS = 10_000_000
-
-# Memory-BANDWIDTH probe (r12): the CPU+shuffle micro-job is blind to
-# the bandwidth/LLC co-tenancy this sandbox exhibits (r11: ann mins
-# floated 3.8 -> 6.4 across same-code same-day sessions at CPU index
-# 1.02-1.21; SCALE.md documents the signature).  A driver-side numpy
-# streaming sum over a 512 MiB array reads DRAM directly —
-# single-thread, deterministic, no JVM involvement — and the compact
-# line carries ``host_bw_index`` = REF / best-observed GiB/s (like
-# the CPU index, ~1.0 calm, > 1 when co-tenants hold the memory bus).
-# Reference pinned from the r12 window (best of repeated samples,
-# 7.1 GiB/s); same caveat as CALIBRATION_REF_SEC: a FIXED denominator,
-# never re-measured per run.
-BW_REF_GIBS = 7.1
-BW_PROBE_BYTES = 512 * 2**20
-
-
-# Lazily-allocated buffer for the per-rep quick probe: 128 MiB streams
-# in ~18 ms at the 7.1 GiB/s reference — cheap enough to bracket every
-# rep — while still far exceeding LLC so it measures DRAM, not cache.
-_BW_QUICK_BYTES = 128 * 2**20
-_bw_quick_arr = None
-
-
-def _bw_quick() -> float:
-    """One ~20 ms driver-side DRAM streaming read, in GiB/s.  The
-    buffer allocates once (allocation itself writes the bytes and
-    would otherwise bill every probe); only the sum is timed."""
-    global _bw_quick_arr
-    import numpy as np
-
-    if _bw_quick_arr is None:
-        _bw_quick_arr = np.ones(_BW_QUICK_BYTES // 8, dtype=np.float64)
-    t0 = time.time()
-    _bw_quick_arr.sum()
-    dt = max(time.time() - t0, 1e-9)
-    return round(_bw_quick_arr.nbytes / dt / 2**30, 2)
-
-
-def _bandwidth_probe(reps: int = 3) -> tuple[float, list[float]]:
-    """Best-of-reps GiB/s for the driver-side streaming sum (best,
-    not median: the probe asks how fast the memory bus CAN go)."""
-    import numpy as np
-
-    arr = np.ones(BW_PROBE_BYTES // 8, dtype=np.float64)
-    rates: list[float] = []
-    for _ in range(reps):
-        t0 = time.time()
-        arr.sum()
-        dt = time.time() - t0
-        rates.append(round(arr.nbytes / dt / 2**30, 2))
-    return max(rates), rates
-
-
-def _calibration_probe(spark, reps: int = 3) -> tuple[float, list[float], list[int]]:
-    """Min-of-reps wall seconds for the constant-work micro-job (min,
-    not median: the probe asks 'how fast CAN this host go right now',
-    so co-tenant bursts should not inflate it), plus per-rep times and
-    steal deltas for the detail artifact."""
-    from pyspark.sql import functions as F
-
-    times: list[float] = []
-    steals: list[int] = []
-    for _ in range(reps):
-        s0 = _read_steal()
-        t0 = time.time()
-        (
-            spark.range(0, CALIBRATION_ROWS, 1, 32)
-            .select(
-                (F.col("id") % 1_000_000).alias("k"),
-                # pmod keeps the running sums inside long range under
-                # ANSI mode (sum of raw xxhash64 overflows).
-                F.pmod(F.xxhash64("id"), F.lit(1_000_003)).alias("h"),
-            )
-            .groupBy("k")
-            .agg(F.sum("h").alias("s"), F.count(F.lit(1)).alias("c"))
-            .agg(F.sum("s").alias("chk"), F.sum("c").alias("n"))
-            .write.format("noop")
-            .mode("overwrite")
-            .save()
-        )
-        times.append(round(time.time() - t0, 3))
-        steals.append(_read_steal() - s0)
-    return min(times), times, steals
-
-
 def _warmup_dir(sf_dir: str, sf: float) -> str | None:
     """Smallest sibling sf* directory below the measured scale — the
     codegen-warmup input (derived from the layout, not hardcoded:
     ADVICE r4)."""
-    parent = os.path.dirname(os.path.abspath(sf_dir.rstrip("/")))
+    here = os.path.abspath(sf_dir.rstrip("/"))
+    parent = os.path.dirname(here)
     best: tuple[float, str] | None = None
     try:
         entries = os.listdir(parent)
     except OSError:
         return None
     for name in entries:
-        m = re.fullmatch(r"sf([0-9.]+)", name)
+        val = parse_sf(name)
         full = os.path.join(parent, name)
-        if not m or not os.path.isdir(full) or full == os.path.abspath(sf_dir.rstrip("/")):
+        if val < 0 or not os.path.isdir(full) or full == here:
             continue
-        val = float(m.group(1))
         if (sf < 0 or val < sf) and (best is None or val < best[0]):
             best = (val, full)
     return best[1] if best else None
 
 
+def new_probe(spark) -> SparkProbe:
+    """Status-store probe for ``timed_rep`` on this session's JVM."""
+    return SparkProbe(spark, ProcessTree(), spark.sparkContext.defaultParallelism)
+
+
+def timed_rep(spark, probe: SparkProbe, run) -> dict:
+    """Times one ``run()`` and returns its wall seconds, the steal
+    jiffies it suffered and the ``COUNTERS`` of the Spark jobs it
+    submitted.  Then drops cached frames: queries cache intermediates
+    (shingles, centroids), and each rep (and each later query) must
+    measure its own work, not heap pressure from earlier ones."""
+    mark = probe.mark()
+    s0 = _read_steal()
+    t0 = time.perf_counter()
+    run()
+    wall = time.perf_counter() - t0
+    steal = _read_steal() - s0
+    counters = probe.since(mark, wall)
+    spark.catalog.clearCache()
+    rep = {"wall_s": round(wall, 3), "steal_jiffies": steal}
+    rep.update({k: round(counters[k], 4) for k in COUNTERS})
+    return rep
+
+
+def summarize(reps: list[dict]) -> dict:
+    """Plain median and min of the reps' wall times, with the reps."""
+    walls = [r["wall_s"] for r in reps]
+    return {
+        "median_s": round(statistics.median(walls), 3),
+        "min_s": min(walls),
+        "reps": reps,
+    }
+
+
+def _noop(df) -> None:
+    df.write.format("noop").mode("overwrite").save()
+
+
+def compact_line(entries: dict[str, dict], sf: float) -> str:
+    """The one stdout line: per-entry medians, their total, the total
+    over ``FIXED_HEADLINE`` and the build's min."""
+    timings = {n: e["median_s"] for n, e in entries.items()}
+    return json.dumps(
+        {
+            "metric": "headline_queries_total",
+            "value": round(sum(timings.values()), 3),
+            "unit": "sec",
+            "queries": timings,
+            "fixed_total_sec": round(sum(v for n, v in timings.items() if n in FIXED_HEADLINE), 3),
+            "build_min_sec": entries["graph_build_770x6000"]["min_s"],
+            "sf": sf,
+        }
+    )
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     reps = max(1, int(os.environ.get("SPARK_GRAFT_REPS", "3")))
-    m = re.search(r"sf([0-9.]+)", sf_dir)
-    sf = float(m.group(1)) if m else -1.0
+    sf = parse_sf(sf_dir)
 
     spark = get_spark("pangenome-bench")
     registry = all_queries()
+    probe = new_probe(spark)
 
     # Warm the JVM + parquet footers so per-query numbers measure the
     # plan, not first-touch overhead.
-    registry["genome_ordinal"].fn(spark, sf_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
+    _noop(registry["genome_ordinal"].fn(spark, sf_dir))
     # Whole-stage-codegen warmup: run each headline plan once against
     # the SMALLEST scale factor.  Spark caches compiled classes by
     # generated source, so this compiles every fused stage (the
@@ -422,7 +257,7 @@ def main() -> None:
             if q is None:
                 continue
             try:
-                q.fn(spark, warm_dir).write.format("noop").mode("overwrite").save()
+                _noop(q.fn(spark, warm_dir))
             except Exception as e:
                 # Warmup is best-effort, but a failure here usually
                 # means the timed run fails too — surface it (stderr;
@@ -430,226 +265,61 @@ def main() -> None:
                 print(f"WARN warmup {name} failed: {e}", file=sys.stderr)
             spark.catalog.clearCache()
 
-    def _timed_reps(
-        run, planned: int
-    ) -> tuple[list[float], list[int], list[float], float]:
-        times: list[float] = []
-        steals: list[int] = []
-        bw: list[float] = []
-        # Bandwidth bracket (r16): probe before the first rep, then
-        # after every rep — the post-probe of rep k doubles as the
-        # pre-probe of rep k+1, so each rep costs ONE extra ~20 ms
-        # probe.  A rep's figure is its worse bracket end.
-        rate_before = _bw_quick()
-        while True:
-            s0 = _read_steal()
-            t0 = time.time()
-            run()
-            times.append(round(time.time() - t0, 3))
-            steals.append(_read_steal() - s0)
-            rate_after = _bw_quick()
-            bw.append(min(rate_before, rate_after))
-            rate_before = rate_after
-            # Queries cache intermediates (shingles, centroids); drop
-            # them so each rep (and later queries) measures its own
-            # work, not heap pressure from earlier ones.
-            spark.catalog.clearCache()
-            if _reps_done(times, steals, planned, bw_gibs=bw):
-                break
-        return times, steals, bw, _clean_median(times, steals, bw_gibs=bw)
-
-    # Calibration probe #1: right after warmup, before any timed query
-    # (paired with probe #2 after the build so drift WITHIN the run is
-    # visible too).
-    cal_pre, cal_pre_times, cal_pre_steal = _calibration_probe(spark)
-    bw_pre, bw_pre_rates = _bandwidth_probe()
-
-    raw: dict[str, list[float]] = {}
-    steal: dict[str, list[int]] = {}
-    bw_reps: dict[str, list[float]] = {}
-    timings: dict[str, float] = {}
+    entries: dict[str, dict] = {}
     for name in HEADLINE:
         q = registry.get(name)
         if q is None:
             continue
-        raw[name], steal[name], bw_reps[name], timings[name] = _timed_reps(
-            lambda q=q: q.fn(spark, sf_dir)
-            .write.format("noop")
-            .mode("overwrite")
-            .save(),
-            reps,
-        )
+        runs = [timed_rep(spark, probe, lambda: _noop(q.fn(spark, sf_dir))) for _ in range(reps)]
+        entries[name] = summarize(runs)
 
     # Reference-scale graph build: 770 strains x 6000 features = 4.62M
     # feature nodes — the dataset behind BASELINE.md's ~2072 s Neo4j
-    # build.  Inputs are materialized (persisted + forced) BEFORE the
-    # timer: the reference's 2072 s measures the database build from
-    # already-prepared CSV files, so synthetic-data generation does not
-    # belong inside the timed section.
+    # build, which measures the database build from already-prepared
+    # CSV files.  So the inputs are re-persisted and forced before
+    # every rep, outside the timer (timed_rep's clearCache drops them),
+    # and data synthesis never bills to the build.
     from pangenomesasgraphdatabases_spark.graph.build import build_graph
-    from pangenomesasgraphdatabases_spark.graph.fixtures import (
-        synthetic_feature_tables,
-    )
+    from pangenomesasgraphdatabases_spark.graph.fixtures import synthetic_feature_tables
+    from pangenomesasgraphdatabases_spark.graph.storage import materialize_graph
 
     f, c, comp = synthetic_feature_tables(spark, 770, 6000)
 
-    # The build is the longest entry (~14 s clean), so a co-tenant CPU
-    # stall hitting 2 of 3 reps drags the median far off the true cost
-    # (observed rep sets like [60.8, 13.5, 28.9] on the shared
-    # sandbox).  Extra reps make the median land on clean runs; the
-    # metric itself stays the median (methodology unchanged).
-    graph_reps = max(reps, 5)
-
-    # r15 (guide §2.6, documented in OPTIMIZATION_r15.md): the eight
-    # output tables are INDEPENDENT jobs, so they are submitted from a
-    # small thread pool (materialize_graph) instead of back-to-back —
-    # the same tables, same noop sink, same timed region; only the
-    # driver-side sequencing changed, exactly as a production build job
-    # materializing a graph would overlap its writers.
-    from pangenomesasgraphdatabases_spark.graph.storage import (
-        materialize_graph,
-    )
-
     def _run_build() -> None:
+        # The eight output tables are independent jobs, submitted from
+        # a small thread pool as a production build job would overlap
+        # its writers (OPTIMIZATION_r15.md).
         g = build_graph(spark, f, c, comp, persist=True)
-        materialize_graph(
-            g, lambda df, _n: df.write.format("noop").mode("overwrite").save()
-        )
+        materialize_graph(g, lambda df, _n: _noop(df))
 
-    # The build loop is hand-rolled (not _timed_reps) because each rep
-    # must re-persist the INPUTS outside the timer — clearCache drops
-    # them, and the reference's 2072 s baseline measures the build from
-    # already-prepared files, so data synthesis never bills to the rep.
-    times_b: list[float] = []
-    steals_b: list[int] = []
-    bw_b: list[float] = []
-    while True:
+    build_reps = []
+    # The build is the longest entry, so it gets extra reps: a
+    # co-tenant stall on one of three reps would move the median.
+    for _ in range(max(reps, 5)):
         for src in (f, c, comp):
             src.persist().count()
-        # Probe AFTER the (untimed) input re-persist so the bracket
-        # hugs the timed region.
-        rate_before = _bw_quick()
-        s0 = _read_steal()
-        t0 = time.time()
-        _run_build()
-        times_b.append(round(time.time() - t0, 3))
-        steals_b.append(_read_steal() - s0)
-        bw_b.append(min(rate_before, _bw_quick()))
-        spark.catalog.clearCache()
-        if _reps_done(times_b, steals_b, graph_reps, bw_gibs=bw_b):
-            break
-    raw["graph_build_770x6000"] = times_b
-    steal["graph_build_770x6000"] = steals_b
-    bw_reps["graph_build_770x6000"] = bw_b
-    timings["graph_build_770x6000"] = _clean_median(
-        times_b, steals_b, bw_gibs=bw_b
-    )
-    build_min = round(min(times_b), 3)
+        build_reps.append(timed_rep(spark, probe, _run_build))
+    entries["graph_build_770x6000"] = summarize(build_reps)
 
-    # Calibration probe #2: after the last timed work.  The reported
-    # index uses the BEST probe of the run (the host's demonstrated
-    # capability this session); both ends land in the detail artifact
-    # so a mid-run weather change is itself visible.
-    cal_post, cal_post_times, cal_post_steal = _calibration_probe(spark)
-    cal_best = min(cal_pre, cal_post)
-    host_speed_index = round(cal_best / CALIBRATION_REF_SEC, 3)
-    bw_post, bw_post_rates = _bandwidth_probe()
-    host_bw_index = round(BW_REF_GIBS / max(bw_pre, bw_post), 3)
-
-    total = round(sum(timings.values()), 3)
-    fixed_total = round(
-        sum(v for n, v in timings.items() if n in FIXED_HEADLINE), 3
-    )
-    # Co-reported figures (r16, VERDICT r15 #1): per-query clean-min
-    # beside the clean median, plus the OLD steal-gate-only medians so
-    # the methodology change is auditable round-over-round.
-    clean_mins = {
-        n: _clean_min(raw[n], steal[n], bw_gibs=bw_reps.get(n))
-        for n in raw
-    }
-    clean_min_total = round(sum(clean_mins.values()), 3)
-    detail = {
-        "reps": raw,
-        # Per-rep steal-jiffy deltas: wall time tracks steal almost
-        # perfectly on this sandbox, so a polluted rep is identifiable
-        # from the artifact itself (VERDICT r6 #2/#3).
-        "steal_jiffies": steal,
-        # Per-rep bandwidth brackets (worse of the rep's two ~20 ms
-        # DRAM probes, GiB/s) — the r16 second cleanliness gate.
-        "bw_gibs": bw_reps,
-        "clean_min": clean_mins,
-        "median_steal_gate_only": {
-            n: _clean_median(raw[n], steal[n]) for n in raw
-        },
-        # First-rep (cold) series, explicit: round-over-round claims
-        # compare median-vs-median, with rep1 available for honest
-        # cold-cost accounting (VERDICT r5 "What's wrong" #2).
-        "rep1": {n: v[0] for n, v in raw.items() if v},
-        "graph_build_min_sec": build_min,
-        # Constant-work probe evidence: both ends of the run, per-rep,
-        # with steal — a uniform host slowdown is self-evident from
-        # the artifact (VERDICT r8 "What's wrong" #1).
-        "calibration": {
-            "ref_sec": CALIBRATION_REF_SEC,
-            "pre_reps": cal_pre_times,
-            "pre_steal": cal_pre_steal,
-            "post_reps": cal_post_times,
-            "post_steal": cal_post_steal,
-            "best_sec": cal_best,
-            "host_speed_index": host_speed_index,
-        },
-        "bandwidth": {
-            "ref_gibs": BW_REF_GIBS,
-            "pre_rates": bw_pre_rates,
-            "post_rates": bw_post_rates,
-            "best_gibs": max(bw_pre, bw_post),
-            "host_bw_index": host_bw_index,
-        },
-        "sf": sf,
-    }
+    detail = {"sf": sf, "counters": list(COUNTERS), "entries": entries}
     repo = os.path.dirname(os.path.abspath(__file__))
-    detail_path = os.path.join(repo, "BENCH_DETAIL.json")
-    with open(detail_path, "w") as fh:
+    with open(os.path.join(repo, "BENCH_DETAIL.json"), "w") as fh:
         json.dump(detail, fh, indent=1)
     # Per-round archive (VERDICT r7 #7): BENCH_DETAIL.json is
-    # overwritten every run, so the steal-annotated rep history would
-    # die at the round boundary; keep a copy keyed by the round the
-    # window was composed for.  Only the driver-shaped run (default
-    # sf0.1) archives — ad-hoc sf0.001 iteration runs don't clobber it.
+    # overwritten every run, so keep a copy keyed by the round the
+    # window was composed for.  Only the driver-shaped run (sf0.1)
+    # archives — ad-hoc sf0.001 iteration runs don't clobber it.
     if abs(sf - 0.1) < 1e-9:
         try:
-            from pangenomesasgraphdatabases_spark.queries import (
-                WINDOW_ROUND,
-            )
+            from pangenomesasgraphdatabases_spark.queries import WINDOW_ROUND
 
-            archive = os.path.join(
-                repo, f"BENCH_DETAIL_r{WINDOW_ROUND:02d}.json"
-            )
+            archive = os.path.join(repo, f"BENCH_DETAIL_r{WINDOW_ROUND:02d}.json")
             with open(archive, "w") as fh:
                 json.dump(detail, fh, indent=1)
         except Exception:
             pass  # archiving must never fail the bench contract
     print(json.dumps(detail), file=sys.stderr)
-
-    # stdout: EXACTLY this one compact line (~1 KB) — the driver's
-    # tail capture must be able to parse it (VERDICT r6 #1).
-    print(
-        json.dumps(
-            {
-                "metric": "headline_queries_total",
-                "value": total,
-                "unit": "sec",
-                "queries": timings,
-                "fixed_total_sec": fixed_total,
-                "clean_min_total_sec": clean_min_total,
-                "build_min_sec": build_min,
-                "host_speed_index": host_speed_index,
-                "host_bw_index": host_bw_index,
-                "sf": sf,
-            }
-        )
-    )
-
+    print(compact_line(entries, sf))
 
 if __name__ == "__main__":
     main()

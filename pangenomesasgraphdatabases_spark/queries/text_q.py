@@ -4416,9 +4416,10 @@ def _duplicate_spans(spark: SparkSession, sf_dir: str):
     # have).  Hot-gram caveat at crawl scale: a gram duplicated g
     # times lands its g rows in ONE window buffer (spillable
     # WindowExec buffer) — same single-reducer hot key the join shape
-    # has, minus a shuffle.  MEASURED r12 (tools/hotgram_ab.py,
-    # SCALE.md): on a planted 100k/300k-duplicate gram the window
-    # shape beats the salted two-stage agg 3.9-4.6x with ZERO spill —
+    # has, minus a shuffle.  MEASURED r12 (SCALE.md, "Round 12: the
+    # hot-gram window-over-key hazard"): on a planted
+    # 100k/300k-duplicate gram the window shape beats the salted
+    # two-stage agg 3.9-4.6x with ZERO spill —
     # the hot buffer is ~MBs; a gram must duplicate ~10^8 times
     # before the buffer strains a task, and WindowExec spills there
     # rather than failing.  Unsalted by evidence, not assumption.

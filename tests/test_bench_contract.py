@@ -7,9 +7,11 @@ headline set because the run loop `registry.get(name)`-skips)."""
 from __future__ import annotations
 
 import importlib.util
+import json
 import os
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+SF = "/root/testdata/sf0.001"
 
 
 def _load_bench():
@@ -43,102 +45,54 @@ def test_read_steal_is_nonnegative_int():
 
 
 def test_compact_line_stays_parseable():
-    """The compact stdout line for the CURRENT headline set must stay
-    far under the driver's tail capture (~1.5 KB budget, VERDICT r6
-    #1).  Rendered with worst-case 4-digit-seconds values."""
-    import json
-
+    """The compact stdout line for the CURRENT headline set carries
+    exactly the pinned keys and stays far under the driver's tail
+    capture (~1.5 KB budget, VERDICT r6 #1).  Rendered with worst-case
+    4-digit-seconds values."""
     bench = _load_bench()
-    queries = {n: 9999.999 for n in bench.HEADLINE}
-    queries["graph_build_770x6000"] = 9999.999
-    line = json.dumps(
-        {
-            "metric": "headline_queries_total",
-            "value": 99999.999,
-            "unit": "sec",
-            "queries": queries,
-            "build_min_sec": 9999.999,
-            "fixed_total_sec": 9999.999,
-            "clean_min_total_sec": 99999.999,
-            "host_speed_index": 9.999,
-            "host_bw_index": 9.999,
-            "sf": 0.1,
-        }
-    )
+    names = [*bench.HEADLINE, "graph_build_770x6000"]
+    entries = {n: {"median_s": 9999.999, "min_s": 9999.999, "reps": []} for n in names}
+    line = bench.compact_line(entries, 0.1)
+    assert "\n" not in line
     assert len(line) <= 1500, f"compact bench line {len(line)} B > 1.5 KB budget"
+    parsed = json.loads(line)
+    assert set(parsed) == {
+        "metric",
+        "value",
+        "unit",
+        "queries",
+        "sf",
+        "fixed_total_sec",
+        "build_min_sec",
+    }
+    assert list(parsed["queries"]) == names
 
 
-def test_bandwidth_probe_contract():
-    """The r12 memory-bandwidth leg: best-of-reps GiB/s with all reps
-    retained, reference fixed (never re-measured per run)."""
+def test_warmup_dir_skips_unparseable_sibling(tmp_path):
+    """A sibling named like ``sf0.0.1`` names no scale factor: the
+    warm-up picks the smallest real sibling instead of raising."""
     bench = _load_bench()
-    best, rates = bench._bandwidth_probe(reps=2)
-    assert len(rates) == 2 and best == max(rates)
-    assert all(r > 0 for r in rates)
-    assert bench.BW_REF_GIBS == 7.1  # pinned r12 denominator
+    for name in ("sf0.001", "sf0.1", "sf0.0.1"):
+        (tmp_path / name).mkdir()
+    measured = str(tmp_path / "sf0.1")
+    assert bench.parse_sf(measured) == 0.1
+    assert bench.parse_sf(measured + "/") == 0.1
+    assert bench.parse_sf(str(tmp_path / "sf0.0.1")) == -1.0
+    assert bench._warmup_dir(measured, 0.1) == str(tmp_path / "sf0.001")
 
 
-def test_steal_retry_rule():
-    """The steal-aware rep policy is a pure function: clean median
-    ignores polluted reps, falls back when all are polluted, and the
-    stop rule caps at 2x planned."""
-    from bench import _clean_median, _reps_done
+def test_rep_counters_repeat(spark):
+    """Two reps of a deterministic query submit the same jobs and
+    tasks and move the same bytes; CPU time is left out because it
+    moves with JIT warm-up."""
+    from pangenomesasgraphdatabases_spark.queries.registry import all_queries
 
-    # storm on reps 1-2, clean 3-5: median over the clean three
-    times = [39.2, 54.1, 15.0, 14.4, 13.1]
-    steals = [11206, 7152, 69, 33, 24]
-    assert _clean_median(times, steals) == 14.4
-    # all polluted: plain median, never an empty sample
-    assert _clean_median([10.0, 20.0, 30.0], [999, 999, 999]) == 20.0
-    # stop: 3 planned, 3 clean -> done
-    assert _reps_done([1, 1, 1], [0, 0, 0], 3)
-    # 3 planned, one polluted -> keep going
-    assert not _reps_done([1, 1, 1], [0, 999, 0], 3)
-    # hard cap at 2x planned even if never clean
-    assert _reps_done([1] * 6, [999] * 6, 3)
-    assert not _reps_done([1] * 5, [999] * 5, 3)
-
-
-def test_bandwidth_gate_rule():
-    """The r16 second gate (VERDICT r15 #1): a rep whose DRAM probe
-    bracket reads below 70% of the reference is dirty even at zero
-    steal — the r15 doc_jaccard_containment failure mode (reps
-    [26.2, 49.9, 37.4, 3.75] at steal [4216, 96, 66, 6]: only the
-    3.75 s rep ran on a healthy bus)."""
-    from bench import (
-        BW_CLEAN_FRACTION,
-        BW_REF_GIBS,
-        _clean_median,
-        _clean_min,
-        _reps_done,
-    )
-
-    times = [26.2, 49.9, 37.4, 3.75]
-    steals = [4216, 96, 66, 6]
-    bw = [1.4, 1.5, 1.6, 9.8]  # the bus during each rep, GiB/s
-    # both gates: only the last rep is clean -> median == min == 3.75
-    assert _clean_median(times, steals, bw_gibs=bw) == 3.75
-    assert _clean_min(times, steals, bw_gibs=bw) == 3.75
-    # old steal-only gate (bw omitted) reproduces the r15 defect
-    assert _clean_median(times, steals) == 37.4
-    # all reps bw-dirty: fall back to the steal-clean sample, not the
-    # plain all-reps median
-    assert _clean_median(times, steals, bw_gibs=[1.0] * 4) == 37.4
-    # steal-clean but bw-dirty reps do NOT satisfy the stop rule
-    assert not _reps_done([1, 1, 1], [0, 0, 0], 3, bw_gibs=[1.0, 9.0, 9.0])
-    assert _reps_done([1, 1, 1], [0, 0, 0], 3, bw_gibs=[9.0, 9.0, 9.0])
-    # threshold sanity: the calm-host floor clears the gate
-    assert 9.8 >= BW_CLEAN_FRACTION * BW_REF_GIBS
-    assert 1.6 < BW_CLEAN_FRACTION * BW_REF_GIBS
-
-
-def test_bw_quick_probe_contract():
-    """The per-rep quick probe returns a positive GiB/s and reuses its
-    buffer (allocation must not bill every probe)."""
-    import bench
-
-    r1 = bench._bw_quick()
-    arr_id = id(bench._bw_quick_arr)
-    r2 = bench._bw_quick()
-    assert r1 > 0 and r2 > 0
-    assert id(bench._bw_quick_arr) == arr_id
+    bench = _load_bench()
+    q = all_queries()["multiway_join_revenue"]
+    probe = bench.new_probe(spark)
+    reps = [bench.timed_rep(spark, probe, lambda: bench._noop(q.fn(spark, SF))) for _ in range(2)]
+    stable = ("jobs", "tasks", "input_mb", "shuffle_write_mb")
+    first, second = ({k: r[k] for k in stable} for r in reps)
+    assert first == second, (first, second)
+    assert reps[0]["jobs"] > 0 and reps[0]["tasks"] > 0
+    assert set(reps[0]) == {"wall_s", "steal_jiffies", *bench.COUNTERS}

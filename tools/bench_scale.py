@@ -5,7 +5,7 @@ driver-side or skew surprises that plan reading and sf0.1 hide).
 Runs each heavy sf-table query against /root/testdata/sf0.1 and
 .scale/sf1 (built by tools/gen_scale_data.py), and the graph-build +
 RGP pipeline at 770x6000 vs 770x60000 features, then prints one JSON
-line and rewrites SCALE.md.
+line of results (SCALE.md records them by hand).
 
 A scaling factor near the data ratio (10x) means linear data-parallel
 behavior; sublinear means fixed overheads still dominate at sf0.1;
@@ -29,6 +29,7 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from bench import _read_steal
 from pangenomesasgraphdatabases_spark.queries.registry import all_queries
 from pangenomesasgraphdatabases_spark.session import get_spark
 
@@ -176,18 +177,9 @@ def main() -> None:
     )
     from pangenomesasgraphdatabases_spark.graph.rgp import find_rgps
 
-    def _read_steal() -> int:
-        """Cumulative steal jiffies (/proc/stat aggregate cpu line) —
-        the same probe bench.py uses; co-tenant bursts cost ~3x a
-        clean rep (SCALE.md), so each graph rep carries its own
-        steal delta and MIN-of-reps is the steal-robust statistic."""
-        try:
-            with open("/proc/stat") as fh:
-                parts = fh.readline().split()
-            return int(parts[8]) if len(parts) > 8 else 0
-        except (OSError, ValueError):
-            return 0
-
+    # Co-tenant bursts cost ~3x a clean rep (SCALE.md), so each graph
+    # rep carries its own steal delta and MIN-of-reps is the reported
+    # statistic.
     def run_graph(
         n_strains: int, per_strain: int, reps: int
     ) -> dict[str, list]:

@@ -26,10 +26,6 @@ import sys
 
 import duckdb
 
-SRC = sys.argv[1]
-OUT = sys.argv[2]
-N = int(sys.argv[3]) if len(sys.argv) > 3 else 10_000
-
 DUP_ID_BASE = 900_000_000
 DUP_TEXT = " ".join(f"boilerplate{i} footer{i % 7}" for i in range(30))
 # One fixed non-zero vector; bit-identical across copies.
@@ -39,6 +35,8 @@ DUP_VEC = "[" + ", ".join(
 
 
 def main() -> None:
+    SRC, OUT = sys.argv[1], sys.argv[2]
+    N = int(sys.argv[3]) if len(sys.argv) > 3 else 10_000
     os.makedirs(OUT, exist_ok=True)
     con = duckdb.connect()
     con.execute(

@@ -15,7 +15,7 @@ import sys
 REPO = "/root/repo"
 sys.path.insert(0, REPO)
 
-QUERIES = sys.argv[2:] or [
+QUERIES = [
     "gi_scan_flagship",
     "events_tumbling_counts",
     "events_sliding_avg",
@@ -23,7 +23,6 @@ QUERIES = sys.argv[2:] or [
     "emb_label_stats",
     "zscore_vs_group",
 ]
-SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 
 WORKER = r"""
 import sys, json, hashlib
@@ -66,29 +65,36 @@ print(json.dumps(out))
 """
 
 
-def run(mode: str) -> dict:
+def main() -> None:
     import json
 
-    r = subprocess.run(
-        [sys.executable, "-c", WORKER, mode, SF, *QUERIES],
-        capture_output=True, text=True, timeout=600,
-    )
-    if r.returncode != 0:
-        print(r.stderr[-3000:])
-        raise SystemExit(f"{mode} worker failed")
-    return json.loads(r.stdout.strip().splitlines()[-1])
+    sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    queries = sys.argv[2:] or QUERIES
+
+    def run(mode: str) -> dict:
+        r = subprocess.run(
+            [sys.executable, "-c", WORKER, mode, sf, *queries],
+            capture_output=True, text=True, timeout=600,
+        )
+        if r.returncode != 0:
+            print(r.stderr[-3000:])
+            raise SystemExit(f"{mode} worker failed")
+        return json.loads(r.stdout.strip().splitlines()[-1])
+
+    std = run("std")
+    hostile = run("hostile")
+    bad = 0
+    for n in queries:
+        s, h = std[n], hostile[n]
+        ok = s == h
+        bad += not ok
+        print(f"{'OK  ' if ok else 'DIFF'} {n}: std={s['rows']}r {s['hash'][:12]} "
+              f"hostile={h['rows']}r {h['hash'][:12]}")
+        if not ok and s["dtypes"] != h["dtypes"]:
+            print(f"     dtypes std={s['dtypes']} hostile={h['dtypes']}")
+    print("env-sensitive queries:", bad)
+    sys.exit(1 if bad else 0)
 
 
-std = run("std")
-hostile = run("hostile")
-bad = 0
-for n in QUERIES:
-    s, h = std[n], hostile[n]
-    ok = s == h
-    bad += not ok
-    print(f"{'OK  ' if ok else 'DIFF'} {n}: std={s['rows']}r {s['hash'][:12]} "
-          f"hostile={h['rows']}r {h['hash'][:12]}")
-    if not ok and s["dtypes"] != h["dtypes"]:
-        print(f"     dtypes std={s['dtypes']} hostile={h['dtypes']}")
-print("env-sensitive queries:", bad)
-sys.exit(1 if bad else 0)
+if __name__ == "__main__":
+    main()
