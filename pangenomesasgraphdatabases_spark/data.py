@@ -75,9 +75,3 @@ def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     the nanosAsLong conf is harmless when the file stores micros)."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     return normalize_events(spark.read.parquet(f"{sf_dir}/events.parquet"))
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view (for spark.sql-based queries)."""
-    for name in TABLES:
-        table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -34,25 +34,12 @@ class PangenomeGraph:
     feature_in_strain: DataFrame
     cluster_in_strain: DataFrame
 
-    def register_views(self, spark: SparkSession, prefix: str = "pg_") -> None:
-        for name in (
-            "features",
-            "clusters",
-            "strains",
-            "ortholog",
-            "feature_neighbour",
-            "cluster_neighbour",
-            "feature_in_strain",
-            "cluster_in_strain",
-        ):
-            getattr(self, name).createOrReplaceTempView(prefix + name)
 
-
-def load_feature_nodes(feature_nodes: DataFrame, composition: DataFrame | None) -> DataFrame:
-    """Typed FEATURE load (01_creatingDatabase.cypher:2-26) + GC/CAI
-    enrichment merge (02_addNucleotideCompositionMetrics.cypher:4-11,
-    an OLTP MERGE loop there — a single left join here)."""
-    f = feature_nodes.select(
+def load_feature_nodes(feature_nodes: DataFrame) -> DataFrame:
+    """Typed FEATURE load (01_creatingDatabase.cypher:2-26).  The GC/CAI
+    enrichment merge (02_addNucleotideCompositionMetrics.cypher:4-11)
+    is joined onto the slim hub in build_graph."""
+    return feature_nodes.select(
         F.col("Name").cast("string").alias("feature_id"),
         F.col("Start").cast("int").alias("feature_start"),
         F.col("End").cast("int").alias("feature_end"),
@@ -64,18 +51,6 @@ def load_feature_nodes(feature_nodes: DataFrame, composition: DataFrame | None) 
         F.nullif(F.col("FullSequences").cast("string"), F.lit("")).alias("full_sequence"),
         F.col("FeatureType").cast("string").alias("feature_type"),
     )
-    if composition is not None:
-        comp = composition.select(
-            F.col("featureID").cast("string").alias("feature_id"),
-            F.col("GC").cast("double").alias("GC"),
-            F.col("CAI").cast("double").alias("CAI"),
-        )
-        f = f.join(comp, "feature_id", "left")
-    else:
-        f = f.withColumn("GC", F.lit(None).cast("double")).withColumn(
-            "CAI", F.lit(None).cast("double")
-        )
-    return f
 
 
 def load_cluster_nodes(cluster_nodes: DataFrame) -> DataFrame:
@@ -95,154 +70,6 @@ def load_cluster_nodes(cluster_nodes: DataFrame) -> DataFrame:
         F.lit(False).alias("lonely_cluster"),
         F.col("reference_locus").cast("string").alias("reference_locus"),
         F.col("Seq").cast("string").alias("reference_sequence"),
-    )
-
-
-def ortholog_edges(features: DataFrame, clusters: DataFrame) -> DataFrame:
-    """ORTHOLOG edges: UNWIND feature_ids + indexed match
-    (01_creatingDatabase.cypher:60-68) == explode + inner join (the
-    inner join drops ids with no FEATURE node, as MATCH does)."""
-    exploded = clusters.select(
-        "cluster_id", F.explode("feature_ids").alias("feature_id")
-    )
-    return exploded.join(features.select("feature_id"), "feature_id", "inner").select(
-        "feature_id", "cluster_id"
-    )
-
-
-def lonely_clusters(features: DataFrame, ortholog: DataFrame) -> DataFrame:
-    """Singleton clusters for features with no ORTHOLOG edge
-    (01_creatingDatabase.cypher:70-89): cluster_id = feature_id,
-    description = feature name, number_genomes = 1, lengths from the
-    feature, reference_sequence = the feature's full_sequence."""
-    lonely = features.join(ortholog, "feature_id", "left_anti")
-    return lonely.select(
-        F.col("feature_id").alias("cluster_id"),
-        F.col("name").alias("description"),
-        F.lit(50).alias("threshold"),
-        F.lit(1).alias("number_genomes"),
-        F.col("length").alias("min_length"),
-        F.col("length").alias("max_length"),
-        F.col("length").cast("double").alias("average_length"),
-        F.array(F.col("feature_id")).alias("feature_ids"),
-        F.lit(True).alias("lonely_cluster"),
-        F.col("feature_id").alias("reference_locus"),
-        F.col("full_sequence").alias("reference_sequence"),
-    )
-
-
-def feature_neighbour_edges(features: DataFrame) -> DataFrame:
-    """FEATURE-[:NEIGHBOUR]->FEATURE adjacency along each genome.
-
-    Reference: pirateToDatabase.py:299-327 (sequential sort+lag loop
-    whose cross-strain guard is buggy at strain boundaries, :314) and
-    01_creatingDatabase.cypher:109-119.  Implemented with the intended
-    semantics: Window.partitionBy(strain) can never leak a cross-strain
-    edge (divergence documented in SURVEY.md section 7.5).
-    """
-    w = Window.partitionBy("strain").orderBy("feature_start", "feature_id")
-    return (
-        features.select(
-            "strain",
-            "feature_id",
-            "feature_start",
-            F.lag("feature_id").over(w).alias("src_feature_id"),
-        )
-        .filter(F.col("src_feature_id").isNotNull())
-        .select(
-            "src_feature_id",
-            F.col("feature_id").alias("dst_feature_id"),
-            "strain",
-        )
-    )
-
-
-def cluster_neighbour_edges(
-    feature_neighbour: DataFrame, ortholog: DataFrame, features: DataFrame
-) -> DataFrame:
-    """CLUSTER-[:NEIGHBOUR]->CLUSTER aggregated adjacency
-    (01_creatingDatabase.cypher:91-106).  The reference's 898-second
-    MERGE accumulation is a groupBy: count + collect_list of member
-    strains (duplicates kept, per ON MATCH append semantics; list
-    sorted here for determinism — the reference's order is CSV order).
-    """
-    src_c = ortholog.select(
-        F.col("feature_id").alias("src_feature_id"), F.col("cluster_id").alias("src_cluster_id")
-    )
-    dst_c = ortholog.select(
-        F.col("feature_id").alias("dst_feature_id"), F.col("cluster_id").alias("dst_cluster_id")
-    )
-    return (
-        feature_neighbour.join(src_c, "src_feature_id")
-        .join(dst_c, "dst_feature_id")
-        .groupBy("src_cluster_id", "dst_cluster_id")
-        .agg(
-            F.count(F.lit(1)).cast("int").alias("number_of_members"),
-            F.sort_array(F.collect_list("strain")).alias("members"),
-        )
-    )
-
-
-def cluster_feature_types(clusters: DataFrame, ortholog: DataFrame, features: DataFrame) -> DataFrame:
-    """cluster.feature_type (01_creatingDatabase.cypher:121-127): three
-    sequential SET passes pseudogene -> tRNA -> CDS; last write wins,
-    so a cluster with any CDS member is 'CDS', else any tRNA -> 'tRNA',
-    else any pseudogene -> 'pseudogene'."""
-    prio = (
-        features.select("feature_id", "feature_type")
-        .join(ortholog, "feature_id")
-        .groupBy("cluster_id")
-        .agg(
-            F.max(
-                F.when(F.col("feature_type") == "CDS", 3)
-                .when(F.col("feature_type") == "tRNA", 2)
-                .when(F.col("feature_type") == "pseudogene", 1)
-            ).alias("prio")
-        )
-        .select(
-            "cluster_id",
-            F.when(F.col("prio") == 3, "CDS")
-            .when(F.col("prio") == 2, "tRNA")
-            .when(F.col("prio") == 1, "pseudogene")
-            .alias("feature_type"),
-        )
-    )
-    return clusters.join(prio, "cluster_id", "left")
-
-
-def backfill_reference_sequences(clusters: DataFrame, features: DataFrame) -> DataFrame:
-    """Backfill NULL reference_sequence from the reference-locus
-    feature's full_sequence (01_creatingDatabase.cypher:129-133).
-
-    Standalone operator form (generic over any features frame).
-    build_graph inlines a need-first variant instead (r15): when
-    `features` is itself a join lineage, the need-filter here sits
-    ABOVE that join and cannot push below it, so the whole lineage
-    would re-execute to produce a handful of ref rows.
-
-    Need-driven: only clusters with a NULL reference_sequence look up a
-    feature, so the feature table is first semi-filtered to exactly
-    those loci (a map-side broadcast filter at runtime — AQE sizes the
-    tiny `need` side) instead of sort-merging all features against the
-    cluster dim."""
-    need = (
-        clusters.filter(F.col("reference_sequence").isNull())
-        .select("reference_locus")
-        .distinct()
-    )
-    ref = (
-        features.select(
-            F.col("feature_id").alias("reference_locus"),
-            F.col("full_sequence").alias("_ref_full_seq"),
-        )
-        .join(need, "reference_locus")
-    )
-    return (
-        clusters.join(ref, "reference_locus", "left")
-        .withColumn(
-            "reference_sequence", F.coalesce("reference_sequence", "_ref_full_seq")
-        )
-        .drop("_ref_full_seq")
     )
 
 
@@ -324,7 +151,7 @@ def build_graph(
     invariant relied on throughout: a feature belongs to at most one
     gene family, so the join is 1:1 and `fc` has exactly one row per
     feature."""
-    features0 = load_feature_nodes(feature_nodes, None)  # typed, no comp join
+    features0 = load_feature_nodes(feature_nodes)
     base_clusters = load_cluster_nodes(cluster_nodes)
 
     exploded = base_clusters.select(
@@ -368,8 +195,7 @@ def build_graph(
     # Unpersisted: one scan of the typed input + a join against the slim
     # cache, materialized only when the features table itself is read.
     features = (
-        features0.drop("GC", "CAI")
-        .join(lonely_flag, "feature_id", "left")
+        features0.join(lonely_flag, "feature_id", "left")
         .select(
             "feature_id",
             "feature_start",
@@ -424,16 +250,16 @@ def build_graph(
         )
     )
     clusters = base_clusters.unionByName(lonely).join(prio, "cluster_id", "left")
-    # Reference-sequence backfill, need-first (r15, guide §2.4/§3.2):
-    # `backfill_reference_sequences(clusters, features)` is correct but
-    # its `ref` side is the DERIVED features frame — a 4.6M×4.6M
+    # Reference-sequence backfill (cypher:129-133), need-first (r15):
+    # only clusters with a NULL reference_sequence look up a feature.
+    # Joining the DERIVED features frame instead would be a 4.6M×4.6M
     # left join whose need-filter cannot push below the join, so the
     # whole features lineage re-executed inside the clusters table
     # (measured: the clusters noop paid seconds re-running a join that
-    # produces a handful of need rows).  Inlined here with the need
-    # semi-filter applied to the RAW scan first (broadcast at runtime),
-    # and the lonely null-rewrite (cypher:88) applied from the cached
-    # slim hub — same effective sequence per locus by construction.
+    # produces a handful of need rows).  Here the need semi-filter is
+    # applied to the RAW scan first (broadcast at runtime), and the
+    # lonely null-rewrite (cypher:88) from the cached slim hub — same
+    # effective sequence per locus by construction.
     need = (
         clusters.filter(F.col("reference_sequence").isNull())
         .select("reference_locus")

@@ -36,12 +36,11 @@ _TABLES = (
     "cluster_in_strain",
 )
 
+# Table jobs materialize_graph runs at once after ortholog.
+_MATERIALIZE_WORKERS = 4
 
-def materialize_graph(
-    graph: PangenomeGraph,
-    write,
-    max_workers: int = 4,
-) -> None:
+
+def materialize_graph(graph: PangenomeGraph, write) -> None:
     """Materialize every graph table by submitting the independent
     output jobs from a small thread pool (r15, guide §2.6: actions are
     only sequential because driver code calls them sequentially — the
@@ -74,7 +73,7 @@ def materialize_graph(
 
     _one("ortholog")
     rest = [n for n in _TABLES if n != "ortholog"]
-    with ThreadPoolExecutor(max_workers=max_workers) as pool:
+    with ThreadPoolExecutor(max_workers=_MATERIALIZE_WORKERS) as pool:
         # list() drains the iterator so the first failure re-raises.
         list(pool.map(_one, rest))
 

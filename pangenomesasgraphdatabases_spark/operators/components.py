@@ -9,9 +9,8 @@ large-star points every above-self neighbour at the local minimum,
 small-star re-points every below-self neighbour — and the edge set
 converges to a forest of STARS whose root is each component's global
 minimum, in O(log^2 n) rounds (O(log n) observed).  The loop is
-driver-side control flow over distributed joins (like
-operators/traversal.py `expand_paths`) with `localCheckpoint` per
-round and an edge-set fixpoint probe.
+driver-side control flow over distributed joins with
+`localCheckpoint` per round and an edge-set fixpoint probe.
 
 r12 history: plain min-label propagation (one hop per round) blew the
 50-round cap on a planted 100k supercritical geometric component —

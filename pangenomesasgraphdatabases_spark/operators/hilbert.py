@@ -1,8 +1,9 @@
 """Hilbert-curve data layout — the locality upgrade over Z-order.
 
 Both curves give every output file a compact rectangle of (A, B)
-space for min/max file pruning (operators/zorder).  The difference is
-the seam structure: consecutive Z-values jump across the grid at
+space for min/max file pruning (queries/pipeline_q lays lineitem out
+along each: `lineitem_zorder_layout`, `lineitem_hilbert_layout`).
+The difference is the seam structure: consecutive Z-values jump across the grid at
 power-of-two boundaries (the Morton "Z" shape), while consecutive
 Hilbert indexes are ALWAYS grid neighbours — so a range of Hilbert
 indexes covers a blob, not a comb.  Measured honestly
@@ -120,19 +121,3 @@ def with_hilbert_index(
             f"CAST({d_new} AS BIGINT) AS hd",
         )
     return cur.selectExpr(*carry, f"hd AS {out}")
-
-
-def hilbert_repartition(
-    df: DataFrame, col_x: str, col_y: str, n_files: int, bits: int = 8
-) -> DataFrame:
-    """Range-partition `df` into `n_files` by Hilbert index of
-    (col_x, col_y) and sort within partitions — each written file
-    covers one contiguous curve segment, i.e. one compact blob of the
-    2-D key space (tighter min/max file bounds than the Z-order comb
-    on the same data)."""
-    ranged = (
-        with_hilbert_index(df, col_x, col_y, bits, "_h")
-        .repartitionByRange(n_files, "_h")
-        .sortWithinPartitions("_h")
-    )
-    return ranged.drop("_h")

@@ -43,14 +43,10 @@ reconstructed in [0, 4095] then max-value-scaled onto the uint8 RGB
 surface) and Pq=1 16-bit quantization tables, and ``encode_jpeg12``
 produces extended-sequential (SOF1) 12-bit grayscale streams with
 two-pass optimal Huffman tables — the scientific/medical-corpus
-form.  r14 also adds LOSSLESS JPEG (SOF3, Annex H — the DICOM
-still-image process): DPCM prediction with all seven selectors,
-huffman-of-differences with the SSSS=16 escape, mod-65536
-reconstruction, precisions 2..16, sample-exact round trip
-(``encode_jpeg_lossless`` / ``decode_jpeg_lossless_samples``).  The
-decoder raises NotImplementedError with an actionable message for
-the variants outside huffman coding (arithmetic coding,
-hierarchical) — those remain the PIL boundary.
+form.  The decoder raises NotImplementedError with an actionable
+message for the processes outside huffman DCT coding (lossless SOF3,
+arithmetic coding, hierarchical) — those remain the PIL boundary;
+no registered query produces them.
 """
 
 from __future__ import annotations
@@ -570,243 +566,10 @@ def encode_jpeg12(
     )
 
 
-def _find_marker(data: bytes, want: int) -> bool:
-    """Walk the HEADER segment structure (stops at SOS/EOI — never
-    scans entropy data, where any byte pair can occur) and report
-    whether marker ``want`` appears."""
-    i = 2
-    while i + 4 <= len(data):
-        if data[i] != 0xFF:
-            return False
-        marker = data[i + 1]
-        if marker == want:
-            return True
-        if marker in (0xD9, 0xDA):  # EOI / SOS: header walk ends
-            return False
-        if marker == 0x01 or 0xD0 <= marker <= 0xD7:
-            i += 2
-            continue
-        (seglen,) = struct.unpack(">H", data[i + 2 : i + 4])
-        i += 2 + seglen
-    return False
-
-
-# --- Lossless JPEG (SOF3, T.81 Annex H) --------------------------------------
-
-
-def _ll_predict(
-    recon: np.ndarray,
-    y: int,
-    x: int,
-    sel: int,
-    p: int,
-    pt: int,
-    restart_y: int = 0,
-    restart_x: int = 0,
-) -> int:
-    """T.81 H.1.2.1 prediction for sample (y, x): the first sample of
-    the scan — and of each restart interval, whose origin is
-    ``(restart_y, restart_x)`` — uses 1 << (P - Pt - 1); the rest of
-    that FIRST LINE uses Ra (the spec mandates selector 1 for the
-    first line at scan start AND after each restart — review finding
-    r14); the first column of later lines uses Rb; elsewhere the
-    scan's selector ``sel``."""
-    if y == restart_y and x == restart_x:
-        return 1 << (p - pt - 1)
-    if y == restart_y:
-        return int(recon[y, x - 1])
-    if x == 0:
-        return int(recon[y - 1, x])
-    ra, rb, rc = (
-        int(recon[y, x - 1]),
-        int(recon[y - 1, x]),
-        int(recon[y - 1, x - 1]),
-    )
-    if sel == 1:
-        return ra
-    if sel == 2:
-        return rb
-    if sel == 3:
-        return rc
-    if sel == 4:
-        return ra + rb - rc
-    if sel == 5:
-        return ra + ((rb - rc) >> 1)
-    if sel == 6:
-        return rb + ((ra - rc) >> 1)
-    if sel == 7:
-        return (ra + rb) >> 1
-    raise ValueError(f"lossless predictor selector {sel}")
-
-
-def decode_jpeg_lossless(data: bytes) -> np.ndarray:
-    """Lossless JPEG (SOF3) -> (h, w, 3) uint8 RGB: the raw samples
-    from :func:`decode_jpeg_lossless_samples`, max-value scaled onto
-    the uint8 surface for precisions > 8 (like the 12-bit DCT
-    path)."""
-    sample, prec = decode_jpeg_lossless_samples(data)
-    maxv = (1 << prec) - 1
-    v = np.clip(sample.astype(np.int64), 0, maxv)
-    if prec > 8:
-        v = np.round(v * (255.0 / maxv))
-    g = v.astype(np.uint8)
-    return np.repeat(g[..., None], 3, axis=2)
-
-
-def decode_jpeg_lossless_samples(data: bytes) -> tuple[np.ndarray, int]:
-    """Lossless JPEG (SOF3, T.81 Annex H — the DICOM/medical
-    still-image form) -> ((h, w) uint16 samples, precision): DPCM
-    prediction (7 selectors + the spec's first-sample/first-line/
-    first-column rules) with DC-style huffman categories, SSSS=16 as
-    the +32768 escape, mod-65536 reconstruction, restart-marker
-    resets, precisions 2..16 — sample-EXACT by construction (the
-    round-trip property test pins it at every predictor x precision).
-    Single grayscale component (the overwhelmingly common lossless
-    layout; multi-component interleave raises the documented
-    boundary)."""
-    if data[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG payload")
-    huff: dict[int, dict[tuple[int, int], int]] = {}
-    frame = None
-    dri = 0
-    i = 2
-    while i + 4 <= len(data):
-        if data[i] != 0xFF:
-            raise ValueError("JPEG marker desync")
-        marker = data[i + 1]
-        if marker == 0xD9:
-            break
-        if marker == 0x01 or 0xD0 <= marker <= 0xD7:
-            i += 2
-            continue
-        (seglen,) = struct.unpack(">H", data[i + 2 : i + 4])
-        seg = data[i + 4 : i + 2 + seglen]
-        if marker == 0xC3:
-            precision = seg[0]
-            if not 2 <= precision <= 16:
-                raise ValueError(f"lossless precision {precision}")
-            fh, fw = struct.unpack(">HH", seg[1:5])
-            if seg[5] != 1:
-                raise NotImplementedError(
-                    "multi-component lossless JPEG not supported (the "
-                    "medical/DICOM form is single-component grayscale)"
-                )
-            frame = {"h": fh, "w": fw, "prec": precision}
-        elif marker == 0xC4:
-            p = 0
-            while p < len(seg):
-                cls, tid = seg[p] >> 4, seg[p] & 15
-                bits = list(seg[p + 1 : p + 17])
-                nvals = sum(bits)
-                vals = list(seg[p + 17 : p + 17 + nvals])
-                if cls == 0:
-                    huff[tid] = build_huffman_decoder(bits, vals)
-                p += 17 + nvals
-        elif marker == 0xDD:
-            (dri,) = struct.unpack(">H", seg[:2])
-        elif marker == 0xDA:
-            if frame is None:
-                raise ValueError("lossless SOS before SOF3")
-            ncomp = seg[0]
-            if ncomp != 1:
-                raise NotImplementedError(
-                    "multi-component lossless scan not supported"
-                )
-            td = seg[2] >> 4
-            sel = seg[3]  # Ss = predictor selector
-            pt = seg[5] & 15  # Al = point transform
-            h, w, prec = frame["h"], frame["w"], frame["prec"]
-            table = huff[td]
-            br = _BitReader(data, i + 2 + seglen)
-            recon = np.zeros((h, w), dtype=np.int64)
-            restart_y = restart_x = 0
-            for y in range(h):
-                for x in range(w):
-                    if dri and (y * w + x) and (y * w + x) % dri == 0:
-                        # restart: entropy state resets and the
-                        # prediction re-initializes as at scan start
-                        # (T.81 H.2.2) — the interval's first LINE
-                        # then uses the Ra rule via _ll_predict
-                        br.restart()
-                        restart_y, restart_x = y, x
-                    s = br.huff(table)
-                    diff = 32768 if s == 16 else br.receive_extend(s)
-                    pred = _ll_predict(
-                        recon, y, x, sel, prec, pt, restart_y, restart_x
-                    )
-                    recon[y, x] = (pred + diff) & 0xFFFF
-            sample = ((recon << pt) & 0xFFFF).astype(np.uint16)
-            return sample, prec
-        i += 2 + seglen
-    raise ValueError("lossless JPEG without a scan")
-
-
-def encode_jpeg_lossless(
-    arr: np.ndarray, predictor: int = 1, precision: int | None = None
-) -> bytes:
-    """(h, w) uint16 grayscale -> lossless JPEG (SOF3), single
-    component, selected ``predictor`` (1..7), two-pass optimal
-    huffman table — decode_jpeg recovers the samples EXACTLY (the
-    whole point of the process; pinned by the round-trip property
-    test across all seven predictors and precisions 8/12/16)."""
-    if arr.ndim != 2 or arr.dtype != np.uint16:
-        raise ValueError("encode_jpeg_lossless expects (h, w) uint16")
-    if not 1 <= predictor <= 7:
-        raise ValueError("predictor must be 1..7")
-    if precision is None:
-        precision = max(2, int(arr.max(initial=1)).bit_length())
-    if arr.max(initial=0) > (1 << precision) - 1:
-        raise ValueError(f"samples exceed precision {precision}")
-    h, w = arr.shape
-    a = arr.astype(np.int64)
-
-    def diffs():
-        for y in range(h):
-            for x in range(w):
-                pred = _ll_predict(a, y, x, predictor, precision, 0)
-                dm = (int(a[y, x]) - pred) & 0xFFFF
-                yield dm - 65536 if dm > 32768 else dm
-
-    freq: dict[int, int] = {}
-    for d in diffs():
-        s = 16 if d == 32768 else int(abs(d)).bit_length()
-        freq[s] = freq.get(s, 0) + 1
-    bits, vals = gen_optimal_table(freq)
-    codes = build_huffman_codes(bits, vals)
-    bwr = _BitWriter()
-    for d in diffs():
-        if d == 32768:
-            code, length = codes[16]
-            bwr.write(code, length)
-            continue
-        s = int(abs(d)).bit_length()
-        code, length = codes[s]
-        bwr.write(code, length)
-        if s:
-            bwr.write(d if d >= 0 else d + (1 << s) - 1, s)
-    scan = bwr.flush()
-
-    def seg(marker: int, payload: bytes) -> bytes:
-        return bytes([0xFF, marker]) + struct.pack(">H", len(payload) + 2) + payload
-
-    return (
-        b"\xff\xd8"
-        + seg(0xC4, bytes([0x00]) + bytes(bits) + bytes(vals))
-        + seg(
-            0xC3,
-            bytes([precision])
-            + struct.pack(">HH", h, w)
-            + bytes([1, 1, 0x11, 0]),
-        )
-        + seg(0xDA, bytes([1, 1, 0x00, predictor, 0, 0]))
-        + scan
-        + b"\xff\xd9"
-    )
-
-
 # --- Decoder -----------------------------------------------------------------
 
 _SOF_UNSUPPORTED = {
+    0xC3: "lossless JPEG (SOF3)",
     0xC5: "differential sequential JPEG (SOF5)",
     0xC6: "differential progressive JPEG (SOF6)",
     0xC7: "differential lossless JPEG (SOF7)",
@@ -861,8 +624,7 @@ def decode_jpeg(data: bytes) -> np.ndarray:
     multi-table and between-scan DQT/DHT segments.  Every scan
     accumulates into per-component coefficient stores; dequantize +
     IDCT + color-convert happen once at EOI.  12-bit frames and Pq=1
-    tables decode for real (r14), and lossless SOF3 streams dispatch
-    to :func:`decode_jpeg_lossless`; arithmetic-coded and
+    tables decode for real (r14); lossless, arithmetic-coded and
     hierarchical variants raise NotImplementedError naming the PIL
     boundary."""
     if data[:2] != b"\xff\xd8":
@@ -873,10 +635,6 @@ def decode_jpeg(data: bytes) -> np.ndarray:
     progressive = False
     coefs = None
     dri = 0
-    if _find_marker(data, 0xC3):
-        # lossless (SOF3) is a different process entirely — DPCM
-        # prediction + huffman of differences, no DCT/quantization
-        return decode_jpeg_lossless(data)
     i = 2
     while i + 4 <= len(data):
         if data[i] != 0xFF:

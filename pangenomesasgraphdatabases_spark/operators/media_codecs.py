@@ -2,36 +2,25 @@
 
 Real decoders for the formats that need no external media library:
 uncompressed BMP (24/32-bit and paletted 1/4/8-bit since r14),
-binary PPM (P6), PCM WAV, and (since r7)
-8-bit PNG — PNG's DEFLATE layer is stdlib ``zlib``, so a full,
-spec-correct decoder (all five row filters, gray/RGB/RGBA color
-types, CRC-checked chunks; since r13 also palette color at bit
-depths 1/2/4/8, Adam7 interlace with per-pass filtering, and 16-bit
-channels via high-byte downconversion) needs no
-external library at all — plus
-huffman-DCT JFIF JPEG (operators/jpeg_codec: Annex K tables,
-canonical Huffman, orthonormal DCT, 4:4:4/4:2:0, restart markers,
-baseline interleaved + non-interleaved multi-scan + progressive SOF2
-with successive approximation; pure numpy).  These back the
-``decode_stub=False`` path of operators/multimodal — the decode is
-genuinely real for these formats.  The video/audio CONTAINER layer
-(MP4 box walk, Ogg page/packet walk) is real too since r8 —
-operators/containers — so the remaining boundary where PIL/ffmpeg
-would plug in is the compressed elementary-stream decode inside those
-containers (H.264/AAC/Vorbis/Opus DSP) and the exotic still-image
-variants nothing in the pipeline emits (arithmetic/lossless JPEG —
-12-bit/Pq=1 decodes for real since r14, jpeg_codec), each a
-documented NotImplementedError — PNG itself is complete across every
-legal depth/color-type/interlace combination, and WAV (r14) now also
-decodes the classic compressed forms: G.711 mu-law (format 7) and
-A-law (format 6) table expansion plus BOTH standard ADPCM families —
-IMA/DVI (format 0x11) and MS ADPCM (format 0x02) — with the fact
-chunk truncating block padding to the true sample count; all are
-published fixed-table algorithms needing no codec library.
+binary PPM (P6), PCM and IEEE-float WAV, and (since r7) PNG — PNG's
+DEFLATE layer is stdlib ``zlib``, so a full, spec-correct decoder
+(all five row filters, gray/RGB/RGBA color types, CRC-checked
+chunks; since r13 also palette color at bit depths 1/2/4/8, Adam7
+interlace with per-pass filtering, and 16-bit channels via high-byte
+downconversion) needs no external library at all — plus huffman-DCT
+JFIF JPEG (operators/jpeg_codec).  ``IMAGE_DECODERS`` dispatches them
+by media type for the real-decode paths of operators/multimodal.
+The video/audio CONTAINER layer (MP4 box walk, Ogg page/packet walk)
+is operators/containers.
 
-Encoders are provided too (fixture generation, resize re-encode);
-every codec round-trips bit-exactly (pytest property — PNG is
-lossless, so encode→decode is identity for every filter type).
+The boundary where PIL/ffmpeg would plug in is a documented
+NotImplementedError: compressed BMP, compressed WAV (G.711, IMA and
+MS ADPCM, MP3) and the JPEG processes outside huffman DCT — no
+registered query produces them.
+
+Encoders (BMP, PPM, WAV, PNG) generate the fixture media; every codec
+round-trips bit-exactly (pytest property — PNG is lossless, so
+encode→decode is identity for every filter type).
 """
 
 from __future__ import annotations
@@ -191,375 +180,19 @@ def encode_wav(samples: np.ndarray, sample_rate: int) -> bytes:
     return b"RIFF" + struct.pack("<I", len(body)) + body
 
 
-# --- G.711 mu-law / A-law (fixed-table companding, CCITT) --------------------
-
-
-def _ulaw_decode_table() -> np.ndarray:
-    """256-entry mu-law byte -> int16 (G.711 expansion: invert, then
-    magnitude ((mant << 3) + 0x84) << exp, bias-corrected)."""
-    out = np.empty(256, dtype=np.int16)
-    for b in range(256):
-        u = ~b & 0xFF
-        t = (((u & 0x0F) << 3) + 0x84) << ((u >> 4) & 7)
-        out[b] = (0x84 - t) if (u & 0x80) else (t - 0x84)
-    return out
-
-
-def _alaw_decode_table() -> np.ndarray:
-    """256-entry A-law byte -> int16 (G.711: XOR 0x55, segment
-    expansion; sign bit SET means positive in A-law)."""
-    out = np.empty(256, dtype=np.int16)
-    for b in range(256):
-        a = b ^ 0x55
-        seg = (a & 0x70) >> 4
-        t = (a & 0x0F) << 4
-        if seg == 0:
-            t += 8
-        elif seg == 1:
-            t += 0x108
-        else:
-            t = (t + 0x108) << (seg - 1)
-        out[b] = t if (a & 0x80) else -t
-    return out
-
-
-_ULAW_TABLE = _ulaw_decode_table()
-_ALAW_TABLE = _alaw_decode_table()
-
-
-def _g711_encode(samples: np.ndarray, table: np.ndarray) -> bytes:
-    """int16 -> companded bytes by NEAREST-CODEWORD quantization
-    against the decode table — optimal by construction (a forward
-    segment-search encoder can only match or do worse), so the
-    fixture encoder needs no second copy of the segment logic."""
-    order = np.argsort(table, kind="stable")
-    sorted_vals = table[order].astype(np.int32)
-    idx = np.searchsorted(sorted_vals, samples.astype(np.int32))
-    idx = np.clip(idx, 0, len(sorted_vals) - 1)
-    left = np.clip(idx - 1, 0, len(sorted_vals) - 1)
-    pick_left = np.abs(sorted_vals[left] - samples) <= np.abs(
-        sorted_vals[idx] - samples
-    )
-    final = np.where(pick_left, left, idx)
-    return order[final].astype(np.uint8).tobytes()
-
-
-# --- IMA / DVI ADPCM (format 0x11) -------------------------------------------
-
-_IMA_INDEX = np.array([-1, -1, -1, -1, 2, 4, 6, 8], dtype=np.int32)
-_IMA_STEP = np.array(
-    [
-        7, 8, 9, 10, 11, 12, 13, 14, 16, 17, 19, 21, 23, 25, 28, 31,
-        34, 37, 41, 45, 50, 55, 60, 66, 73, 80, 88, 97, 107, 118, 130,
-        143, 157, 173, 190, 209, 230, 253, 279, 307, 337, 371, 408,
-        449, 494, 544, 598, 658, 724, 796, 876, 963, 1060, 1166, 1282,
-        1411, 1552, 1707, 1878, 2066, 2272, 2499, 2749, 3024, 3327,
-        3660, 4026, 4428, 4871, 5358, 5894, 6484, 7132, 7845, 8630,
-        9493, 10442, 11487, 12635, 13899, 15289, 16818, 18500, 20350,
-        22385, 24623, 27086, 29794, 32767,
-    ],
-    dtype=np.int32,
-)
-
-
-def _ima_step_nibble(nib: int, pred: int, idx: int) -> tuple[int, int]:
-    """One IMA ADPCM nibble through the shared reconstruction: new
-    (pred, idx).  delta = step/8 + bit0*step/4 + bit1*step/2 +
-    bit2*step, bit3 = sign (the published DVI/IMA recurrence)."""
-    step = int(_IMA_STEP[idx])
-    delta = step >> 3
-    if nib & 1:
-        delta += step >> 2
-    if nib & 2:
-        delta += step >> 1
-    if nib & 4:
-        delta += step
-    pred = pred - delta if (nib & 8) else pred + delta
-    pred = max(-32768, min(32767, pred))
-    idx = max(0, min(88, idx + int(_IMA_INDEX[nib & 7])))
-    return pred, idx
-
-
-def _ima_decode_block(block: bytes, ch: int) -> np.ndarray:
-    """One IMA ADPCM block -> (n, ch) int16.  Per channel: 4-byte
-    header (predictor int16, step index uint8, reserved), then the
-    nibble data in alternating 4-byte (8-nibble) groups per channel,
-    low nibble first."""
-    preds, idxs, chans = [], [], []
-    for c in range(ch):
-        p, i = struct.unpack("<hB", block[c * 4 : c * 4 + 3])
-        preds.append(int(p))
-        idxs.append(max(0, min(88, int(i))))
-        chans.append([int(p)])  # header carries sample 0
-    pos = 4 * ch
-    while pos + 4 * ch <= len(block):
-        for c in range(ch):
-            grp = block[pos + 4 * c : pos + 4 * c + 4]
-            for byte in grp:
-                for nib in (byte & 0x0F, byte >> 4):
-                    preds[c], idxs[c] = _ima_step_nibble(
-                        nib, preds[c], idxs[c]
-                    )
-                    chans[c].append(preds[c])
-        pos += 4 * ch
-    n = min(len(x) for x in chans)
-    out = np.empty((n, ch), dtype=np.int16)
-    for c in range(ch):
-        out[:, c] = np.array(chans[c][:n], dtype=np.int16)
-    return out
-
-
-def encode_wav_ima_adpcm(
-    samples: np.ndarray, sample_rate: int, block_align: int = 256
-) -> bytes:
-    """(n,) or (n, ch<=2) int16 -> IMA ADPCM WAV (format 0x11) with
-    the standard block layout — the fixture/encode side of the r14
-    compressed-WAV decode (the forward quantizer mirrors
-    :func:`_ima_step_nibble`'s reconstruction, the published
-    encoder)."""
-    if samples.dtype != np.int16:
-        raise ValueError("encode_wav_ima_adpcm expects int16 samples")
-    if samples.ndim == 1:
-        samples = samples[:, None]
-    n, ch = samples.shape
-    if ch > 2:
-        raise ValueError("IMA ADPCM fixture encoder supports <= 2 channels")
-    spb = (block_align - 4 * ch) * 2 // ch + 1  # samples per block
-    blocks = []
-    for b0 in range(0, n, spb):
-        seg = samples[b0 : b0 + spb]
-        # pad the tail block to full length (decoder emits the pad;
-        # callers slice by the fact chunk length — fixture use only)
-        if len(seg) < spb:
-            seg = np.vstack([seg, np.repeat(seg[-1:], spb - len(seg), 0)])
-        hdr = b""
-        preds, idxs = [], []
-        for c in range(ch):
-            p = int(seg[0, c])
-            hdr += struct.pack("<hBB", p, 0, 0)
-            preds.append(p)
-            idxs.append(0)
-        body = bytearray()
-        si = 1
-        while si < spb:
-            for c in range(ch):
-                nibs = []
-                for k in range(8):
-                    s = int(seg[min(si + k, spb - 1), c])
-                    step = int(_IMA_STEP[idxs[c]])
-                    diff = s - preds[c]
-                    nib = 0
-                    if diff < 0:
-                        nib = 8
-                        diff = -diff
-                    if diff >= step:
-                        nib |= 4
-                        diff -= step
-                    if diff >= step >> 1:
-                        nib |= 2
-                        diff -= step >> 1
-                    if diff >= step >> 2:
-                        nib |= 1
-                    preds[c], idxs[c] = _ima_step_nibble(
-                        nib, preds[c], idxs[c]
-                    )
-                    nibs.append(nib)
-                for k in range(0, 8, 2):
-                    body.append(nibs[k] | (nibs[k + 1] << 4))
-            si += 8
-        blocks.append(hdr + bytes(body))
-    data = b"".join(blocks)
-    byte_rate = sample_rate * block_align // spb
-    fmt = struct.pack(
-        "<HHIIHHHH", 0x11, ch, sample_rate, byte_rate, block_align, 4, 2, spb
-    )
-    fact = struct.pack("<I", n)
-    body2 = b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-    body2 += b"fact" + struct.pack("<I", len(fact)) + fact
-    body2 += b"data" + struct.pack("<I", len(data)) + data
-    return b"RIFF" + struct.pack("<I", len(body2)) + body2
-
-
-# --- MS ADPCM (format 0x02) --------------------------------------------------
-
-# The published WAVE_FORMAT_ADPCM predictor pairs and adaptation table
-# (Microsoft multimedia standards update; the same seven coefficient
-# sets every decoder ships).
-_MS_COEF1 = np.array([256, 512, 0, 192, 240, 460, 392], dtype=np.int64)
-_MS_COEF2 = np.array([0, -256, 0, 64, 0, -208, -232], dtype=np.int64)
-_MS_ADAPT = np.array(
-    [230, 230, 230, 230, 307, 409, 512, 614,
-     768, 614, 512, 409, 307, 230, 230, 230],
-    dtype=np.int64,
-)
-
-
-def _ms_step(code: int, s1: int, s2: int, delta: int, c1: int, c2: int):
-    """One MS ADPCM 4-bit code -> (sample, new_s1, new_s2, new_delta):
-    predict from the two prior samples, add signed_code * delta,
-    clamp, adapt delta (floor 16).  The /256 is C TRUNCATION toward
-    zero, not Python floor — negative predictor numerators with the
-    signed coefficient sets (e.g. 460/-208) round differently under
-    floor and the error would compound through s1/s2 for the rest of
-    the block when decoding externally-encoded files (review finding
-    r14)."""
-    signed = code - 16 if code > 7 else code
-    num = s1 * c1 + s2 * c2
-    base = -((-num) >> 8) if num < 0 else num >> 8  # trunc toward 0
-    pred = base + signed * delta
-    pred = max(-32768, min(32767, pred))
-    delta = max(16, int(_MS_ADAPT[code]) * delta // 256)
-    return pred, pred, s1, delta
-
-
-def _ms_decode_block(block: bytes, ch: int) -> np.ndarray:
-    """One MS ADPCM block -> (n, ch) int16.  Per-channel header:
-    predictor index (uint8), initial delta (int16), sample1 (int16),
-    sample2 (int16); header carries samples [s2, s1]; then one 4-bit
-    code per sample, channels interleaved high-nibble-first."""
-    preds = [block[c] for c in range(ch)]
-    if any(p > 6 for p in preds):
-        raise ValueError(f"MS ADPCM predictor index out of range: {preds}")
-    off = ch
-    deltas = [
-        struct.unpack("<h", block[off + 2 * c : off + 2 * c + 2])[0]
-        for c in range(ch)
-    ]
-    off += 2 * ch
-    s1 = [
-        struct.unpack("<h", block[off + 2 * c : off + 2 * c + 2])[0]
-        for c in range(ch)
-    ]
-    off += 2 * ch
-    s2 = [
-        struct.unpack("<h", block[off + 2 * c : off + 2 * c + 2])[0]
-        for c in range(ch)
-    ]
-    off += 2 * ch
-    chans = [[s2[c], s1[c]] for c in range(ch)]
-    c1 = [int(_MS_COEF1[p]) for p in preds]
-    c2 = [int(_MS_COEF2[p]) for p in preds]
-    ci = 0
-    for byte in block[off:]:
-        for code in (byte >> 4, byte & 0x0F):
-            c = ci % ch
-            smp, s1[c], s2[c], deltas[c] = _ms_step(
-                code, s1[c], s2[c], deltas[c], c1[c], c2[c]
-            )
-            chans[c].append(smp)
-            ci += 1
-    n = min(len(x) for x in chans)
-    out = np.empty((n, ch), dtype=np.int16)
-    for c in range(ch):
-        out[:, c] = np.array(chans[c][:n], dtype=np.int16)
-    return out
-
-
-def encode_wav_ms_adpcm(
-    samples: np.ndarray, sample_rate: int, block_align: int = 256
-) -> bytes:
-    """(n,) or (n, ch<=2) int16 -> MS ADPCM WAV (format 0x02),
-    predictor set 0 (coef 256/0 — pure first-order), the published
-    forward quantizer mirroring :func:`_ms_step`'s reconstruction."""
-    if samples.dtype != np.int16:
-        raise ValueError("encode_wav_ms_adpcm expects int16 samples")
-    if samples.ndim == 1:
-        samples = samples[:, None]
-    n, ch = samples.shape
-    if ch > 2:
-        raise ValueError("MS ADPCM fixture encoder supports <= 2 channels")
-    spb = (block_align - 7 * ch) * 2 // ch + 2
-    blocks = []
-    for b0 in range(0, n, spb):
-        seg = samples[b0 : b0 + spb]
-        if len(seg) < spb:
-            seg = np.vstack([seg, np.repeat(seg[-1:], spb - len(seg), 0)])
-        s2 = [int(seg[0, c]) for c in range(ch)]
-        s1 = [int(seg[1, c]) for c in range(ch)]
-        deltas = [
-            max(16, int(np.abs(np.diff(seg[:, c].astype(np.int32))).mean())
-                or 16)
-            for c in range(ch)
-        ]
-        hdr = bytes([0] * ch)
-        hdr += b"".join(struct.pack("<h", d) for d in deltas)
-        hdr += b"".join(struct.pack("<h", v) for v in s1)
-        hdr += b"".join(struct.pack("<h", v) for v in s2)
-        codes = []
-        for si in range(2, spb):
-            for c in range(ch):
-                pred = (s1[c] * 256 + s2[c] * 0) // 256
-                diff = int(seg[si, c]) - pred
-                code = max(-8, min(7, (diff + (deltas[c] // 2 if diff >= 0
-                                               else -deltas[c] // 2))
-                                   // max(deltas[c], 1)))
-                code &= 0x0F
-                smp, s1[c], s2[c], deltas[c] = _ms_step(
-                    code, s1[c], s2[c], deltas[c], 256, 0
-                )
-                codes.append(code)
-        if len(codes) % 2:
-            codes.append(0)
-        body = bytes(
-            (codes[i] << 4) | codes[i + 1] for i in range(0, len(codes), 2)
-        )
-        blocks.append(hdr + body)
-    data = b"".join(blocks)
-    # fmt extension: cbSize 32, samples/block, 7 coefficient pairs
-    ext = struct.pack("<HH", spb, 7) + b"".join(
-        struct.pack("<hh", int(a), int(b))
-        for a, b in zip(_MS_COEF1, _MS_COEF2)
-    )
-    fmt = struct.pack(
-        "<HHIIHHH", 0x02, ch, sample_rate,
-        sample_rate * block_align // spb, block_align, 4, len(ext)
-    ) + ext
-    fact = struct.pack("<I", n)
-    body2 = b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-    body2 += b"fact" + struct.pack("<I", len(fact)) + fact
-    body2 += b"data" + struct.pack("<I", len(data)) + data
-    return b"RIFF" + struct.pack("<I", len(body2)) + body2
-
-
-def encode_wav_g711(
-    samples: np.ndarray, sample_rate: int, law: str = "mu"
-) -> bytes:
-    """(n,) or (n, ch) int16 -> G.711 mu-law (format 7) or A-law
-    (format 6) WAV via nearest-codeword companding."""
-    if samples.dtype != np.int16:
-        raise ValueError("encode_wav_g711 expects int16 samples")
-    if samples.ndim == 1:
-        samples = samples[:, None]
-    n, ch = samples.shape
-    table = _ULAW_TABLE if law == "mu" else _ALAW_TABLE
-    tag = 7 if law == "mu" else 6
-    data = _g711_encode(samples.reshape(-1), table)
-    fmt = struct.pack("<HHIIHHH", tag, ch, sample_rate, sample_rate * ch,
-                      ch, 8, 0)
-    fact = struct.pack("<I", n)
-    body = b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-    body += b"fact" + struct.pack("<I", len(fact)) + fact
-    body += b"data" + struct.pack("<I", len(data)) + data
-    return b"RIFF" + struct.pack("<I", len(body)) + body
-
-
 def decode_wav(data: bytes) -> tuple[np.ndarray, int]:
     """RIFF WAV -> ((n, channels) int16 array, sample_rate).  Decodes
     every uncompressed layout: integer PCM at 8 (unsigned), 16, 24,
     and 32 bits, and IEEE float32/float64 (format 3), all normalized
-    to int16 range — and, since r14, the classic compressed forms:
-    G.711 mu-law (format 7) / A-law (format 6) table expansion and
-    the two standard ADPCM families, IMA/DVI (format 0x11) and MS
-    ADPCM (format 0x02, published coefficient pairs + adaptation
-    table) — all fixed-table algorithms.  MP3-in-WAV remains the
-    documented NotImplementedError boundary (a real DSP codec)."""
+    to int16 range.  Compressed forms — G.711 (formats 6/7), IMA and
+    MS ADPCM (0x11/0x02), MP3-in-WAV (0x55) — are the documented
+    NotImplementedError boundary: no registered query produces them."""
     if data[:4] != b"RIFF" or data[8:12] != b"WAVE":
         raise ValueError("not a RIFF/WAVE payload")
     pos = 12
     fmt = None
     fmt_chunk = b""
     raw = None
-    fact_samples = None
     while pos + 8 <= len(data):
         cid = data[pos : pos + 4]
         (size,) = struct.unpack("<I", data[pos + 4 : pos + 8])
@@ -569,11 +202,6 @@ def decode_wav(data: bytes) -> tuple[np.ndarray, int]:
             fmt_chunk = chunk
         elif cid == b"data":
             raw = chunk
-        elif cid == b"fact" and size >= 4:
-            # true per-channel sample count — block-structured codecs
-            # pad their final block, and the fact chunk is how a
-            # conformant decoder knows where the real audio ends
-            (fact_samples,) = struct.unpack("<I", chunk[:4])
         pos += 8 + size + (size & 1)  # chunks are word-aligned
     if fmt is None or raw is None:
         raise ValueError("WAV missing fmt/data chunk")
@@ -614,44 +242,14 @@ def decode_wav(data: bytes) -> tuple[np.ndarray, int]:
     elif audio_format == 3 and bits in (32, 64):
         f = np.frombuffer(raw, "<f4" if bits == 32 else "<f8")
         arr = np.clip(np.round(f * 32767.0), -32768, 32767).astype(np.int16)
-    elif audio_format in (6, 7) and bits == 8:
-        table = _ULAW_TABLE if audio_format == 7 else _ALAW_TABLE
-        arr = table[np.frombuffer(raw, np.uint8)]
-    elif audio_format == 0x11:
-        block_align = fmt[4]
-        if block_align < 4 * ch + 4:
-            raise ValueError(f"IMA ADPCM block_align {block_align} too small")
-        chunks = [
-            _ima_decode_block(raw[p : p + block_align], ch)
-            for p in range(0, len(raw) - (4 * ch) + 1, block_align)
-        ]
-        out = np.vstack(chunks) if chunks else np.empty((0, ch), np.int16)
-        if fact_samples is not None:
-            out = out[:fact_samples]
-        return out, rate
-    elif audio_format == 0x02:
-        block_align = fmt[4]
-        if block_align < 7 * ch + 1:
-            raise ValueError(f"MS ADPCM block_align {block_align} too small")
-        chunks = [
-            _ms_decode_block(raw[p : p + block_align], ch)
-            for p in range(0, len(raw) - (7 * ch) + 1, block_align)
-        ]
-        out = np.vstack(chunks) if chunks else np.empty((0, ch), np.int16)
-        if fact_samples is not None:
-            out = out[:fact_samples]
-        return out, rate
     else:
         raise NotImplementedError(
-            f"only PCM/float/G.711/IMA-ADPCM/MS-ADPCM WAV supported "
-            f"(format={audio_format}, bits={bits}); MP3-in-WAV needs a "
+            f"only PCM/float WAV supported (format={audio_format}, "
+            f"bits={bits}); compressed WAV (G.711, ADPCM, MP3) needs a "
             "codec library"
         )
     n = len(arr) // ch
-    out = arr[: n * ch].reshape(n, ch)
-    if audio_format in (6, 7) and fact_samples is not None:
-        out = out[:fact_samples]
-    return out, rate
+    return arr[: n * ch].reshape(n, ch), rate
 
 
 # --- PNG (8-bit; color types 0/2/4/6; zlib is stdlib) ------------------------
@@ -996,7 +594,6 @@ def decode_png(data: bytes) -> np.ndarray:
 
 from pangenomesasgraphdatabases_spark.operators.jpeg_codec import (  # noqa: E402
     decode_jpeg,
-    encode_jpeg,
 )
 
 IMAGE_DECODERS = {
@@ -1005,26 +602,3 @@ IMAGE_DECODERS = {
     "image/png": decode_png,
     "image/jpeg": decode_jpeg,
 }
-IMAGE_ENCODERS = {
-    "image/bmp": encode_bmp,
-    "image/x-portable-pixmap": encode_ppm,
-    "image/png": encode_png,
-    "image/jpeg": encode_jpeg,
-}
-
-
-def luminance_mean(arr: np.ndarray) -> float:
-    """Rec.601 luma mean of an (h, w, 3) uint8 image."""
-    a = arr.astype(np.float64)
-    return float(
-        (0.299 * a[..., 0] + 0.587 * a[..., 1] + 0.114 * a[..., 2]).mean()
-    )
-
-
-def resize_nearest(arr: np.ndarray, width: int, height: int) -> np.ndarray:
-    """Nearest-neighbor resample of an (h, w, 3) image (floor index
-    mapping, the classic NN kernel)."""
-    h, w = arr.shape[:2]
-    ys = (np.arange(height) * h) // height
-    xs = (np.arange(width) * w) // width
-    return arr[ys][:, xs]

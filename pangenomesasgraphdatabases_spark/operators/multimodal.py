@@ -2,29 +2,28 @@
 
 Images/audio/video are opaque `binary` columns with typed metadata
 structs.  The Spark-side machinery — schema, Arrow batch shape,
-mapInPandas partition flow — is real and tested.  Decode has two
-tiers (r5):
+mapInPandas partition flow — is real and tested.  Every function here
+backs a registered ``media_*`` query:
 
-* ``decode_stub=False`` runs REAL decoders for the library-free
-  formats (operators/media_codecs: uncompressed 24-bit BMP, binary
-  PPM, PCM WAV; since r7 full 8-bit PNG — DEFLATE via stdlib zlib,
-  all five scanline filters, gray/RGB/RGBA — and huffman-DCT JFIF
-  JPEG — operators/jpeg_codec, pure numpy: Huffman + DCT + 4:2:0 +
-  restart markers; since r8 progressive SOF2 and non-interleaved
-  multi-scan baseline too), computing true image luminance / audio
-  RMS features and true nearest-neighbor resizes.  Since r8 the
-  video/audio CONTAINER layer is real too: ``probe_containers``
-  walks MP4 boxes and Ogg pages (operators/containers) for codec
-  identity / geometry / duration / CRC health without decoding any
-  elementary stream.  Since r13 PNG palette color (PLTE, depths
-  1/2/4/8) and Adam7 interlace decode for real too.  The residual
-  ffmpeg boundary is the compressed elementary-stream DECODE inside
-  those containers (H.264/AAC/Vorbis/Opus DSP), plus
-  arithmetic/lossless/12-bit JPEG (PNG decode is complete across
-  every legal depth/color-type/interlace combination).
-* ``decode_stub=True`` keeps the deterministic byte-level fake
-  features (the oracle-hashed `media_feature_extract` path, which
-  wraps text payloads — not decodable media).
+* ``extract_features``: deterministic byte-level features of any
+  payload (`media_feature_extract`, which wraps text documents — not
+  decodable media).
+* ``real_decode_integer_features``: REAL decodes with the
+  library-free codecs (operators/media_codecs: BMP, binary PPM,
+  PCM/float WAV, PNG; operators/jpeg_codec: huffman-DCT JPEG) into
+  exact-integer features (`media_real_decode_features`).
+* ``probe_containers``: walks MP4 boxes and Ogg pages
+  (operators/containers) for codec identity / geometry / duration /
+  CRC health without decoding any elementary stream
+  (`media_container_probe`, `media_wav_probe`).
+* ``perceptual_hash`` and ``audio_fingerprint``: near-duplicate keys
+  over decoded images and audio (`media_phash_pairs`,
+  `media_audio_fp_pairs`).
+
+The residual ffmpeg/PIL boundary is the compressed elementary-stream
+DECODE inside containers (H.264/AAC/Vorbis/Opus DSP), compressed WAV
+and the JPEG processes outside huffman DCT; each raises
+NotImplementedError.
 
 At 100 TB: binary payloads stay columnar in parquet, metadata columns
 support predicate pushdown (filter by media_type/width without
@@ -74,35 +73,12 @@ def documents_as_media(docs: DataFrame) -> DataFrame:
     )
 
 
-def _real_feat(media_type: str, payload: bytes) -> float:
-    """True decoded feature: mean Rec.601 luminance for images, RMS
-    amplitude (int16 units) for audio.  Raises NotImplementedError for
-    formats that need an external library."""
-    import numpy as np
-
-    from pangenomesasgraphdatabases_spark.operators.media_codecs import (
-        IMAGE_DECODERS,
-        decode_wav,
-        luminance_mean,
-    )
-
-    if media_type in IMAGE_DECODERS:
-        return luminance_mean(IMAGE_DECODERS[media_type](payload))
-    if media_type == "audio/wav":
-        samples, _rate = decode_wav(payload)
-        return float(np.sqrt((samples.astype(np.float64) ** 2).mean()))
-    raise NotImplementedError(
-        f"no library-free decoder for {media_type!r}; video/compressed-"
-        "audio containers (MP4, AAC, ...) need ffmpeg/librosa "
-        "(stub boundary)"
-    )
-
-
-def extract_features(media: DataFrame, decode_stub: bool = True) -> DataFrame:
-    """Feature extraction over binary payloads via mapInPandas (Arrow
-    batches; one pandas frame per partition slice).  decode_stub=False
-    REALLY decodes BMP/PPM/WAV (media_codecs) — feat_mean is then the
-    true luminance/RMS; n_bytes/checksum stay byte-level either way."""
+def extract_features(media: DataFrame) -> DataFrame:
+    """Byte-level feature extraction over binary payloads via
+    mapInPandas (Arrow batches; one pandas frame per partition slice):
+    n_bytes, a checksum of the first 64 bytes and the mean of the
+    first 256 — deterministic, no decode, so an SQL oracle recomputes
+    it (`media_feature_extract`)."""
 
     def proc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -111,19 +87,9 @@ def extract_features(media: DataFrame, decode_stub: bool = True) -> DataFrame:
             checksum = payloads.map(
                 lambda b: sum(b[:64]) if b is not None else 0
             )
-            if decode_stub:
-                feat = payloads.map(
-                    lambda b: (sum(b[:256]) / max(len(b[:256]), 1))
-                    if b
-                    else 0.0
-                )
-            else:
-                feat = pd.Series(
-                    [
-                        _real_feat(mt, b) if b else 0.0
-                        for mt, b in zip(pdf["media_type"], payloads)
-                    ]
-                )
+            feat = payloads.map(
+                lambda b: (sum(b[:256]) / max(len(b[:256]), 1)) if b else 0.0
+            )
             yield pd.DataFrame(
                 {
                     "media_id": pdf["media_id"],
@@ -135,73 +101,6 @@ def extract_features(media: DataFrame, decode_stub: bool = True) -> DataFrame:
             )
 
     return media.mapInPandas(proc, FEATURE_SCHEMA)
-
-
-def resize_media(
-    media: DataFrame,
-    target_width: int,
-    target_height: int,
-    decode_stub: bool = True,
-) -> DataFrame:
-    """Resize pass over binary payloads (mapInPandas).
-    decode_stub=False REALLY resizes BMP/PPM images: decode ->
-    nearest-neighbor resample -> re-encode in the same format
-    (media_codecs); unsupported formats raise at the documented
-    boundary.  With the stub the output payload is a deterministic
-    byte resample to target_width*target_height length
-    (stride-sampled, zero-padded) — Arrow batch flow, schema, and
-    metadata update are the same real machinery either way."""
-    n_out = target_width * target_height
-
-    def proc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pangenomesasgraphdatabases_spark.operators.media_codecs import (
-            IMAGE_DECODERS,
-            IMAGE_ENCODERS,
-            resize_nearest,
-        )
-
-        def real_resize(media_type, b):
-            if b is None or len(b) == 0:
-                return b
-            if media_type not in IMAGE_DECODERS:
-                raise NotImplementedError(
-                    f"no library-free resize for {media_type!r} "
-                    "(PIL/ffmpeg boundary)"
-                )
-            arr = IMAGE_DECODERS[media_type](b)
-            return IMAGE_ENCODERS[media_type](
-                resize_nearest(arr, target_width, target_height)
-            )
-
-        def stub_resize(b):
-            if b is None or len(b) == 0:
-                return bytes(n_out)
-            stride = max(len(b) // n_out, 1)
-            out = bytes(b[::stride][:n_out])
-            return out + bytes(n_out - len(out))
-
-        for pdf in batches:
-            if decode_stub:
-                payload = pdf["payload"].map(stub_resize)
-            else:
-                payload = pd.Series(
-                    [
-                        real_resize(mt, b)
-                        for mt, b in zip(pdf["media_type"], pdf["payload"])
-                    ],
-                    dtype="object",
-                )
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "media_type": pdf["media_type"],
-                    "payload": payload,
-                    "meta_width": target_width,
-                    "meta_height": target_height,
-                }
-            )
-
-    return media.mapInPandas(proc, MEDIA_SCHEMA)
 
 
 def synthesize_media(ids: DataFrame) -> DataFrame:
@@ -377,9 +276,8 @@ INT_FEATURE_SCHEMA = T.StructType(
 
 def real_decode_integer_features(media: DataFrame) -> DataFrame:
     """Decode payloads with the REAL library-free codecs and emit
-    exact-INTEGER features — the hash-checkable twin of
-    ``extract_features(decode_stub=False)`` (whose float luminance/RMS
-    would hash-diverge on summation order at the last ulp):
+    exact-INTEGER features (float luminance/RMS would hash-diverge on
+    summation order at the last ulp):
 
     * images: ``pix_sum`` = sum of all decoded RGB bytes, ``lum_num``
       = sum of the Rec.601 luma numerator ``299 R + 587 G + 114 B``
@@ -435,7 +333,9 @@ def real_decode_integer_features(media: DataFrame) -> DataFrame:
                     lums.append(int((s * s).sum()))
                 else:
                     raise NotImplementedError(
-                        f"no library-free decoder for {mt!r}"
+                        f"no library-free decoder for {mt!r}; video/"
+                        "compressed-audio containers (MP4, AAC, ...) "
+                        "need ffmpeg/librosa"
                     )
             yield pd.DataFrame(
                 {
@@ -772,49 +672,6 @@ def synthesize_wav_media(ids: DataFrame) -> DataFrame:
             )
 
     return ids.mapInPandas(gen, MEDIA_SCHEMA)
-
-
-FRAME_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("frame_idx", T.IntegerType(), False),
-        T.StructField("frame_bytes", T.BinaryType(), True),
-    ]
-)
-
-
-def sample_frames(
-    media: DataFrame, frame_size: int, every_n: int = 10
-) -> DataFrame:
-    """Frame sampling for video-like payloads: the payload is a
-    concatenation of fixed-size frame blocks; keep every Nth block.
-    Pure byte slicing — NO decode involved, so this path is fully real
-    (not stubbed).  One output row per sampled frame; at scale the
-    explode happens inside the Arrow batch, and the payload bytes of
-    dropped frames are never shipped downstream."""
-
-    def proc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, frames = [], [], []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                if payload is None:
-                    continue
-                n_frames = len(payload) // frame_size
-                for k in range(0, n_frames, every_n):
-                    ids.append(mid)
-                    idxs.append(k)
-                    frames.append(
-                        bytes(payload[k * frame_size : (k + 1) * frame_size])
-                    )
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(ids, dtype="int64"),
-                    "frame_idx": pd.Series(idxs, dtype="int32"),
-                    "frame_bytes": pd.Series(frames, dtype="object"),
-                }
-            )
-
-    return media.mapInPandas(proc, FRAME_SCHEMA)
 
 
 # --- Perceptual-hash image near-dup (pHash-style grid hash) ------------------

@@ -3,67 +3,16 @@
 AQE's skew-join handling covers most cases at runtime; these helpers
 are for the two shapes AQE doesn't fix:
 
-- `salted_agg`: two-phase aggregation for a heavily skewed group key —
-  phase 1 aggregates (key, salt) partials, phase 2 merges per key.
-  Works for any algebraic aggregate expressed as (partial, merge).
-- `salted_broadcast_join`: explode the small side over the salt domain
-  so a skewed big-side key spreads across `salt_n` tasks.
+- `capped_pair_rows`: i<j pair expansion of a per-row id list with the
+  quadratic hot-list memory hazard capped by chunking.
+- `hot_key_salted_join`: an equi-join that salts only the keys hot on
+  the left side, replicating just their right-side rows.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def with_salt(df: DataFrame, salt_n: int, col_name: str = "_salt") -> DataFrame:
-    """Uniform random-ish salt derived from a stable hash of the whole
-    row (deterministic across retries, unlike rand())."""
-    return df.withColumn(
-        col_name, F.pmod(F.xxhash64(*[F.col(c) for c in df.columns]), F.lit(salt_n))
-    )
-
-
-def salted_agg(
-    df: DataFrame,
-    key: str,
-    partial: dict[str, Column],
-    merge: Callable[[DataFrame], DataFrame],
-    salt_n: int = 16,
-) -> DataFrame:
-    """Two-phase skew-safe aggregation.
-
-    `partial` maps output-column name -> aggregate Column for phase 1
-    (per (key, salt)); `merge` takes the phase-1 frame grouped state
-    and reduces per key.  Example:
-
-        salted_agg(li, "l_suppkey",
-                   {"cnt": F.count(F.lit(1)), "s": F.sum("l_quantity")},
-                   lambda d: d.groupBy("l_suppkey")
-                              .agg(F.sum("cnt").alias("cnt"),
-                                   F.sum("s").alias("s")))
-    """
-    salted = with_salt(df, salt_n)
-    phase1 = salted.groupBy(key, "_salt").agg(
-        *[c.alias(n) for n, c in partial.items()]
-    )
-    return merge(phase1.drop("_salt"))
-
-
-def salted_broadcast_join(
-    big: DataFrame, small: DataFrame, key: str, salt_n: int = 16
-) -> DataFrame:
-    """Skew-safe equi-join: salt the big side, replicate the small side
-    across the salt domain, join on (key, salt).  The small side must
-    actually be broadcastable x salt_n."""
-    big_s = with_salt(big, salt_n)
-    small_s = small.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(salt_n - 1)))
-    )
-    out = big_s.join(F.broadcast(small_s), [key, "_salt"])
-    return out.drop("_salt")
 
 
 # In-row pair expansion builds its pair batch as ONE flatten() value

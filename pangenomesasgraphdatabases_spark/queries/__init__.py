@@ -9,7 +9,8 @@ window each round to maximize CUMULATIVE driver-verified coverage:
   6 hash-fails from the pandas-representation gap — fixed in r3);
 * round 3: the 6 r2 hash-fails first, then the never-checked
   sql-surface/analytics block, then the r3 additions (49/50 green;
-  emb_pca_project is the one rows-only row);
+  the since-deleted full-eigendecomposition PCA projection was the
+  one rows-only row);
 * round 4: events/streaming layer re-proven on regenerated testdata
   (ts nanos->micros) + never-checked + new + anchors — 50/50 green,
   the first fully green round;

@@ -10,8 +10,8 @@ Scale notes (100 TB):
   construction — eval benchmarks are thousands of docs, not billions)
   so the training side never shuffles except the final per-doc count;
 - chunking and sampling are map-side only (no shuffle at all);
-- source caps shuffle once on `source` (skewed mega-domains would use
-  the salted two-phase pattern in operators/skew.py);
+- source caps shuffle once on `source` (skewed mega-domains would need
+  a salted two-phase aggregation);
 - vocab coverage is word-count (map-side partial agg) + a distributed
   top-k (orderBy+limit, NOT a global window over the full vocab).
 
@@ -193,8 +193,8 @@ def doc_source_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     per source, chosen by a deterministic md5-shuffled order (the
     boilerplate/mega-domain cap every crawl pipeline applies so a
     single domain cannot dominate the corpus).  One shuffle on
-    `source`; a skew-prone domain distribution would swap in the
-    salted two-phase aggregation from operators/skew.py."""
+    `source`; a skew-prone domain distribution would swap in a salted
+    two-phase aggregation."""
     d = table(spark, sf_dir, "documents")
     w = Window.partitionBy("source").orderBy(
         F.md5(F.col("doc_id").cast("string")), "doc_id"

@@ -132,62 +132,6 @@ def emb_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     return agg.select("i", "j", "n", cov.alias("cov"))
 
 
-_N_PC = 8
-
-
-def emb_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Library function (NOT registered): project every embedding onto
-    the top-8 principal components via full eigendecomposition.
-    Eigendecomposition has no SQL twin, so this carried the registry's
-    single rows-only row through r4; the driver-hash-checked face of
-    the PCA family is now emb_power_iteration_pc1/_pc2 (bit-exact
-    power/deflation directions), and this stays as the full-spectrum
-    utility, pytest-asserted (variance ordering at fixture scale).
-
-    The covariance matrix (2080 cells — KB-sized regardless of corpus
-    row count) is collected to the driver, numpy.linalg.eigh factors
-    the 64x64 symmetric matrix, and the component vectors are
-    broadcast back as literals: the same driver-boundary pattern as
-    F17 hierarchical clustering (a provably tiny reduction of an
-    arbitrarily large input).  The projection itself is a JVM-side
-    zip_with dot product per component — map-only, no shuffle.
-    Component signs are canonicalized (largest-|loading| coordinate
-    positive) so the output is deterministic."""
-    import numpy as np
-
-    cells = emb_covariance(spark, sf_dir).collect()
-    cov = np.zeros((_DIM, _DIM))
-    for r in cells:
-        cov[r["i"] - 1, r["j"] - 1] = r["cov"]
-        cov[r["j"] - 1, r["i"] - 1] = r["cov"]
-    vals, vecs = np.linalg.eigh(cov)
-    order = np.argsort(vals)[::-1][:_N_PC]
-    comps = []
-    for k in order:
-        v = vecs[:, k]
-        if v[int(np.argmax(np.abs(v)))] < 0:
-            v = -v
-        comps.append([float(x) for x in v])
-
-    e = table(spark, sf_dir, "embeddings")
-    ev = e.select(
-        "vec_id", "label", F.transform("embedding", lambda x: x.cast("double")).alias("v")
-    )
-    proj_cols = [
-        F.aggregate(
-            F.zip_with(
-                "v",
-                F.array(*[F.lit(c) for c in comp]),
-                lambda x, w: x * w,
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ).alias(f"pc{k + 1}")
-        for k, comp in enumerate(comps)
-    ]
-    return ev.select("vec_id", "label", *proj_cols)
-
-
 # SemDeDup threshold: within-cluster pairs at least this cosine-close
 # collapse to the lowest vec_id.  Production SemDeDup runs ~0.95+ on
 # real embeddings; the synthetic corpus's cosine ceiling is ~0.5, so
@@ -438,7 +382,8 @@ def emb_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Dominant principal component via fixed-point power iteration — the
-# oracle-checkable counterpart of emb_pca_project.
+# oracle-checkable form of PCA (a full eigendecomposition has no SQL
+# twin).
 
 _PI_ITERS = 12
 
@@ -588,10 +533,10 @@ def _pi2_oracle_sql() -> str:
 )
 def emb_power_iteration_pc1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Projection onto the k-step power-method direction (k=12, fixed)
-    — the oracle-checkable counterpart of emb_pca_project (whose full
-    eigendecomposition has no SQL twin).  On a corpus whose spectrum
-    decays (real embedding corpora), k steps pin the dominant
-    principal component to machine precision; on the near-isotropic
+    — the oracle-checkable form of PCA (a full eigendecomposition has
+    no SQL twin).  On a corpus whose spectrum decays (real embedding
+    corpora), k steps pin the dominant principal component to machine
+    precision; on the near-isotropic
     synthetic testdata the direction is partially converged, and the
     operator's contract is exactly the fixed-iteration sequence (the
     Rayleigh quotient is monotone in k — pytest).

@@ -321,8 +321,8 @@ def lineitem_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     that are close in BOTH dimensions into the same file — parquet
     min/max stats then skip files for predicates on either column (the
     Delta/Iceberg OPTIMIZE ZORDER story on plain parquet).  zfile is
-    the 64-way file assignment; operators/zorder.zorder_repartition
-    applies it with repartitionByRange for an actual write."""
+    the 64-way file assignment; an actual write would range-partition
+    by zval (repartitionByRange) so each file holds one zfile."""
     li = table(spark, sf_dir, "lineitem")
     z = F.expr(_zvalue_sql("l_partkey % 65536", "l_suppkey % 65536"))
     return li.select(
@@ -533,7 +533,8 @@ def lineitem_hilbert_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     classic quadrant recursion unrolled to 8 arithmetic steps
     (div/mod/CASE, whole-stage codegen, no UDF), one expression
     generator shared with the DuckDB oracle; `hfile` is the 64-way
-    file assignment applied by operators/hilbert.hilbert_repartition.
+    file assignment an actual write would get by range-partitioning
+    on hval.
 
     Scale shape: map-only (zero shuffles) for the key computation;
     the layout write is the one repartitionByRange any clustering

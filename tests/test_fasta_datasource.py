@@ -2,10 +2,12 @@
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 from pyspark.sql import functions as F
 
-RAW = "/root/repo/fixtures_data/pirate_raw"
+RAW = str(Path(__file__).resolve().parent.parent / "fixtures_data" / "pirate_raw")
 
 
 @pytest.fixture(scope="module", autouse=True)

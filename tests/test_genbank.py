@@ -4,8 +4,10 @@ pipeline (reference entry point bp_genbank2gff3.pl, readme.md:29-35)."""
 from __future__ import annotations
 
 import textwrap
+from pathlib import Path
 
-GBK = "/root/repo/fixtures_data/genbank"
+FIXTURES = Path(__file__).resolve().parent.parent / "fixtures_data"
+GBK = str(FIXTURES / "genbank")
 
 
 def test_genbank_features_fixture(spark):
@@ -512,7 +514,7 @@ def test_genbank_gene_model_fixture(spark):
     rows = {
         (r.seqid, r.feature_type, r.feature_id): (r.gb_id, r.gb_parent)
         for r in read_genbank_features(
-            spark, "/root/repo/fixtures_data/genbank/strainC.gbk"
+            spark, f"{GBK}/strainC.gbk"
         ).collect()
     }
     assert rows[("seqC1", "gene", "C_0001")] == ("C_0001", "")
@@ -620,7 +622,7 @@ def test_so_type_mapping(spark):
 
     df = with_so_type(
         read_genbank_features(
-            spark, "/root/repo/fixtures_data/genbank/strainA.gbk"
+            spark, f"{GBK}/strainA.gbk"
         )
     )
     got = {(r.feature_type, r.so_type) for r in df.collect()}
@@ -767,7 +769,7 @@ def test_genbank_top_level_rna_exons(spark):
     rows = {
         (r.feature_type, r.start, r.end): (r.gb_id, r.gb_parent)
         for r in read_genbank_features(
-            spark, "/root/repo/fixtures_data/genbank/strainD.gbk"
+            spark, f"{GBK}/strainD.gbk"
         ).collect()
     }
     assert rows[("ncRNA", 10, 100)] == ("D_0001", "")
@@ -787,7 +789,7 @@ def test_so_type_mapping_table_driven(spark):
         with_so_type,
     )
 
-    gbtx = "/root/repo/fixtures_data/genbank_types_ext"
+    gbtx = str(FIXTURES / "genbank_types_ext")
     feats = read_genbank_features(spark, f"{gbtx}/*.gbk")
     tmap = load_type_map(spark, f"{gbtx}/typemap.tsv")
     got = {

@@ -135,19 +135,6 @@ def test_covariance_matches_numpy(spark):
         )
 
 
-def test_pca_components_ordered_and_centered(spark):
-    from pangenomesasgraphdatabases_spark.queries.emb_stats_q import (
-        _N_PC,
-        emb_pca_project,
-    )
-
-    pdf = emb_pca_project(spark, SF).toPandas()
-    variances = [pdf[f"pc{k + 1}"].var() for k in range(_N_PC)]
-    # Principal components come out in decreasing-variance order.
-    assert all(a >= b * 0.999 for a, b in zip(variances, variances[1:]))
-    assert variances[0] > 0
-
-
 def test_semantic_dedup_canonical_rule(spark):
     from pangenomesasgraphdatabases_spark.queries.emb_stats_q import (
         _SEM_TAU,

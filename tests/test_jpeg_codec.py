@@ -193,10 +193,11 @@ def test_grayscale_single_component_stream():
 
 
 def test_non_huffman_dct_variants_raise_documented():
-    """Arithmetic-coded (SOF9) frames and out-of-family precisions
-    stay documented NotImplementedError seams (progressive SOF2 and
-    12-bit/Pq=1 decode for real now — test_jpeg_progressive.py and
-    the 12-bit section below); garbage raises ValueError."""
+    """Lossless (SOF3) and arithmetic-coded (SOF9) frames and
+    out-of-family precisions stay documented NotImplementedError seams
+    (progressive SOF2 and 12-bit/Pq=1 decode for real now —
+    test_jpeg_progressive.py and the 12-bit section below); garbage
+    raises ValueError."""
     import struct
 
     def seg(marker, payload):
@@ -209,6 +210,20 @@ def test_non_huffman_dct_variants_raise_documented():
     )
     with pytest.raises(NotImplementedError, match="arithmetic"):
         decode_jpeg(arith)
+
+    # A complete single-component lossless stream (one 1-bit code for
+    # difference category 0, so every sample predicts to 128) must
+    # raise, not return samples.
+    lossless = (
+        b"\xff\xd8"
+        + seg(0xC4, bytes([0x00, 1] + [0] * 15 + [0]))
+        + seg(0xC3, bytes([8]) + struct.pack(">HH", 4, 4) + bytes([1, 1, 0x11, 0]))
+        + seg(0xDA, bytes([1, 1, 0x00, 1, 0, 0]))
+        + b"\x00\x00"
+        + b"\xff\xd9"
+    )
+    with pytest.raises(NotImplementedError, match=r"lossless JPEG \(SOF3\)"):
+        decode_jpeg(lossless)
 
     # precision 10 is outside T.81's huffman-DCT family (8 / 12)
     p10 = (
@@ -343,81 +358,6 @@ def test_jpeg12_input_validation():
             np.zeros((8, 8), dtype=np.uint16),
             qtab=np.zeros((8, 8), dtype=np.int64),
         )
-
-
-# --- Lossless (SOF3, T.81 Annex H) -------------------------------------------
-
-
-def test_jpeg_lossless_bit_exact_all_predictors_and_precisions():
-    """Lossless JPEG round trip is SAMPLE-EXACT — the entire point of
-    the process — across all seven predictor selectors and
-    precisions 8/12/16 on random (worst-case entropy) images;
-    decode_jpeg dispatches SOF3 automatically and scales >8-bit
-    samples onto the uint8 surface."""
-    from pangenomesasgraphdatabases_spark.operators.jpeg_codec import (
-        decode_jpeg_lossless_samples,
-        encode_jpeg_lossless,
-    )
-
-    rng = np.random.RandomState(11)
-    for prec in (8, 12, 16):
-        for pred in range(1, 8):
-            h, w = rng.randint(3, 20), rng.randint(3, 20)
-            a = rng.randint(0, 1 << prec, (h, w)).astype(np.uint16)
-            blob = encode_jpeg_lossless(a, predictor=pred, precision=prec)
-            s, p = decode_jpeg_lossless_samples(blob)
-            assert p == prec and (s == a).all(), (prec, pred)
-            out = decode_jpeg(blob)  # SOF3 auto-dispatch
-            assert out.shape == (h, w, 3) and out.dtype == np.uint8
-            maxv = (1 << prec) - 1
-            want = (
-                a
-                if prec == 8
-                else np.round(a.astype(np.float64) * 255.0 / maxv)
-            ).astype(np.uint8)
-            assert (out[..., 0] == want).all()
-
-
-def test_jpeg_lossless_ssss16_escape_and_validation():
-    """The +32768 difference (SSSS=16, no appended bits) occurs for
-    real at precision 16 — a 0 -> 32768+default-pred jump — and the
-    encoder validates its inputs; multi-component lossless raises the
-    documented boundary."""
-    import struct
-
-    import pytest
-
-    from pangenomesasgraphdatabases_spark.operators.jpeg_codec import (
-        decode_jpeg_lossless_samples,
-        encode_jpeg_lossless,
-    )
-
-    # first sample predicts 1 << 15 = 32768; a sample of 0 gives
-    # diff = -32768 mod 65536 = 32768 -> the SSSS=16 escape
-    a = np.array([[0, 0], [65535, 1]], dtype=np.uint16)
-    s, p = decode_jpeg_lossless_samples(encode_jpeg_lossless(a))
-    assert p == 16 and (s == a).all()
-
-    with pytest.raises(ValueError, match="uint16"):
-        encode_jpeg_lossless(np.zeros((4, 4), dtype=np.uint8))
-    with pytest.raises(ValueError, match="predictor"):
-        encode_jpeg_lossless(np.zeros((4, 4), dtype=np.uint16), predictor=9)
-    with pytest.raises(ValueError, match="precision"):
-        encode_jpeg_lossless(
-            np.full((4, 4), 300, dtype=np.uint16), precision=8
-        )
-
-    def seg(marker, payload):
-        return bytes([0xFF, marker]) + struct.pack(">H", len(payload) + 2) + payload
-
-    multi = (
-        b"\xff\xd8"
-        + seg(0xC3, bytes([8]) + struct.pack(">HH", 4, 4)
-              + bytes([2, 1, 0x11, 0, 2, 0x11, 0]))
-        + b"\xff\xd9"
-    )
-    with pytest.raises(NotImplementedError, match="multi-component"):
-        decode_jpeg(multi)
 
 
 def test_invalid_dqt_precision_raises():

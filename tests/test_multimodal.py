@@ -1,4 +1,5 @@
-"""Multimodal binary-column plumbing (stubbed decode, real Spark flow)."""
+"""Multimodal binary-column plumbing (byte-level and real decode, real
+Spark flow)."""
 
 from __future__ import annotations
 
@@ -9,6 +10,7 @@ from pangenomesasgraphdatabases_spark.data import table
 from pangenomesasgraphdatabases_spark.operators.multimodal import (
     documents_as_media,
     extract_features,
+    real_decode_integer_features,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -38,45 +40,9 @@ def test_n_bytes_matches_text_length(spark):
 
 def test_unstubbed_decode_raises(spark):
     media = documents_as_media(table(spark, SF, "documents"))
-    feats = extract_features(media, decode_stub=False)
+    feats = real_decode_integer_features(media)
     with pytest.raises(Exception, match="NotImplementedError|real media decode"):
         feats.limit(1).collect()
-
-
-def test_resize_media_stub_shapes(spark):
-    from pangenomesasgraphdatabases_spark.data import table
-    from pangenomesasgraphdatabases_spark.operators.multimodal import (
-        documents_as_media,
-        resize_media,
-    )
-
-    media = documents_as_media(table(spark, SF, "documents")).limit(20)
-    out = resize_media(media, 16, 8).collect()
-    assert len(out) == 20
-    assert all(len(r.payload) == 16 * 8 for r in out)
-    assert all((r.meta_width, r.meta_height) == (16, 8) for r in out)
-
-
-def test_sample_frames_every_nth_block(spark):
-    from pangenomesasgraphdatabases_spark.operators.multimodal import (
-        sample_frames,
-    )
-
-    # one "video": 100 frames of 4 bytes, frame k = [k,k,k,k]
-    payload = b"".join(bytes([k % 256] * 4) for k in range(100))
-    media = spark.createDataFrame(
-        [(1, "video/raw", payload, 2, 2)],
-        "media_id long, media_type string, payload binary,"
-        " meta_width int, meta_height int",
-    )
-    rows = sorted(
-        (r.frame_idx, bytes(r.frame_bytes))
-        for r in sample_frames(media, frame_size=4, every_n=10).collect()
-    )
-    assert [i for i, _ in rows] == list(range(0, 100, 10))
-    assert all(fb == bytes([i % 256] * 4) for i, fb in rows)
-
-
 def test_codec_roundtrips():
     """BMP/PPM/WAV codecs round-trip bit-exactly (pure struct/numpy)."""
     import numpy as np
@@ -97,63 +63,6 @@ def test_codec_roundtrips():
     audio = rng.integers(-32768, 32767, (1000, 2), dtype=np.int16)
     got, rate = decode_wav(encode_wav(audio, 16000))
     assert rate == 16000 and np.array_equal(got, audio)
-
-
-def test_real_decode_features(spark):
-    """decode_stub=False computes TRUE decoded features for BMP and
-    WAV payloads — mean luminance and RMS — matching an independent
-    numpy computation."""
-    import numpy as np
-
-    from pangenomesasgraphdatabases_spark.operators.media_codecs import (
-        encode_bmp,
-        encode_wav,
-    )
-
-    rng = np.random.default_rng(3)
-    img = rng.integers(0, 256, (8, 6, 3), dtype=np.uint8)
-    audio = rng.integers(-20000, 20000, (500,), dtype=np.int16)
-    media = spark.createDataFrame(
-        [
-            (1, "image/bmp", bytearray(encode_bmp(img)), 6, 8),
-            (2, "audio/wav", bytearray(encode_wav(audio, 8000)), 0, 0),
-        ],
-        "media_id long, media_type string, payload binary,"
-        " meta_width int, meta_height int",
-    )
-    rows = {r.media_id: r for r in extract_features(media, decode_stub=False).collect()}
-    a = img.astype(np.float64)
-    want_lum = (0.299 * a[..., 0] + 0.587 * a[..., 1] + 0.114 * a[..., 2]).mean()
-    want_rms = np.sqrt((audio.astype(np.float64) ** 2).mean())
-    assert abs(rows[1].feat_mean - want_lum) < 1e-9
-    assert abs(rows[2].feat_mean - want_rms) < 1e-9
-
-
-def test_real_resize_bmp(spark):
-    """decode_stub=False resize: true nearest-neighbor resample,
-    re-encoded as BMP, pixel-exact vs numpy indexing."""
-    import numpy as np
-
-    from pangenomesasgraphdatabases_spark.operators.media_codecs import (
-        decode_bmp,
-        encode_bmp,
-        resize_nearest,
-    )
-    from pangenomesasgraphdatabases_spark.operators.multimodal import (
-        resize_media,
-    )
-
-    rng = np.random.default_rng(5)
-    img = rng.integers(0, 256, (4, 4, 3), dtype=np.uint8)
-    media = spark.createDataFrame(
-        [(1, "image/bmp", bytearray(encode_bmp(img)), 4, 4)],
-        "media_id long, media_type string, payload binary,"
-        " meta_width int, meta_height int",
-    )
-    out = resize_media(media, 2, 2, decode_stub=False).collect()[0]
-    got = decode_bmp(bytes(out.payload))
-    assert np.array_equal(got, resize_nearest(img, 2, 2))
-    assert np.array_equal(got, img[::2, ::2])
 
 
 def test_synthesize_and_real_decode_integer_features(spark):
@@ -260,27 +169,30 @@ def test_jpeg_flat_block_fixture_roundtrip_is_bit_exact():
         assert np.array_equal(out12, want), f"seed {mid} 12-bit"
 
 
-def test_compressed_format_seam_is_guarded():
+def test_compressed_format_seam_is_guarded(spark):
     """VERDICT r6 #6: the container-codec boundary (MP4/compressed
     audio need ffmpeg, which this container does not ship) must be
     regression-guarded text, not prose.  A real magic-byte payload
-    must raise the documented NotImplementedError whose message names
-    the format and the library seam where a decoder would plug in.
-    (PNG and baseline JPEG left this list in r7 — their decodes are
-    real now; see test_png_* below and tests/test_jpeg_codec.py.
-    The non-baseline JPEG / exotic-PNG sub-seams are guarded in
-    their codec test files.)"""
-    from pangenomesasgraphdatabases_spark.operators.multimodal import _real_feat
-
+    must raise the documented NotImplementedError through the Spark
+    decode path, with a message naming the format and the library
+    seam where a decoder would plug in.  (PNG and baseline JPEG left
+    this list in r7 — their decodes are real now; see test_png_*
+    below and tests/test_jpeg_codec.py.  The non-baseline JPEG /
+    exotic-PNG sub-seams are guarded in their codec test files.)"""
     payloads = {
         "video/mp4": b"\x00\x00\x00\x18ftypisom" + b"\x00" * 64,
         "audio/aac": b"\xff\xf1" + b"\x00" * 64,
     }
-    for media_type, payload in payloads.items():
-        with pytest.raises(NotImplementedError) as exc:
-            _real_feat(media_type, payload)
+    for media_id, (media_type, payload) in enumerate(payloads.items()):
+        media = spark.createDataFrame(
+            [(media_id, media_type, payload)],
+            "media_id long, media_type string, payload binary",
+        )
+        with pytest.raises(Exception) as exc:
+            real_decode_integer_features(media).collect()
         msg = str(exc.value)
-        assert media_type in msg  # names the rejected format
+        assert "NotImplementedError" in msg
+        assert repr(media_type) in msg  # names the rejected format
         # Actionable: says which library would close the boundary.
         assert "ffmpeg" in msg
 
@@ -305,17 +217,19 @@ def test_compressed_bmp_and_nonpcm_wav_seams():
     with pytest.raises(NotImplementedError, match="compression=1"):
         decode_bmp(hdr + b"\x00" * 64)
 
-    # MP3-in-WAV (format=0x55): valid RIFF, genuinely DSP-compressed —
-    # the remaining audio boundary (PCM/float since r7, G.711 + both
-    # ADPCM families decode for real since r14).
-    fmt = struct.pack("<HHIIHH", 0x55, 1, 8000, 4000, 256, 0)
-    wav = (
-        b"RIFF" + struct.pack("<I", 36) + b"WAVE"
-        + b"fmt " + struct.pack("<I", 16) + fmt
-        + b"data" + struct.pack("<I", 4) + b"\x00" * 4
-    )
-    with pytest.raises(NotImplementedError, match="MP3|codec library"):
-        decode_wav(wav)
+    # Compressed WAV: valid RIFF, but MP3 (0x55), G.711 A-law/mu-law
+    # (6/7), MS ADPCM (0x02) and IMA ADPCM (0x11) are the audio
+    # boundary (only PCM/float decode) — each must raise, not return
+    # samples.
+    for tag, bits in ((0x55, 0), (6, 8), (7, 8), (0x02, 4), (0x11, 4)):
+        fmt = struct.pack("<HHIIHH", tag, 1, 8000, 4000, 256, bits)
+        wav = (
+            b"RIFF" + struct.pack("<I", 36) + b"WAVE"
+            + b"fmt " + struct.pack("<I", 16) + fmt
+            + b"data" + struct.pack("<I", 4) + b"\x00" * 4
+        )
+        with pytest.raises(NotImplementedError, match="codec library"):
+            decode_wav(wav)
 
 
 def test_wav_wide_and_float_formats_decode():
@@ -585,47 +499,6 @@ def test_png_palette_and_adam7_roundtrip():
     assert (decode_png(blob) == two_color).all()
 
 
-def test_png_through_spark_decode_and_resize(spark):
-    """The PNG path through the real mapInPandas machinery: luminance
-    features and nearest-neighbor resize both ride the same Arrow
-    batches as BMP/PPM — and the resize re-encodes losslessly."""
-    import numpy as np
-
-    from pangenomesasgraphdatabases_spark.operators.media_codecs import (
-        decode_png,
-        encode_png,
-        luminance_mean,
-        resize_nearest,
-    )
-    from pangenomesasgraphdatabases_spark.operators.multimodal import (
-        extract_features,
-        resize_media,
-    )
-
-    rng = np.random.default_rng(23)
-    rows = []
-    for i in range(6):
-        img = rng.integers(0, 256, size=(8 + i, 5 + i, 3), dtype=np.uint8)
-        rows.append((i, "image/png", bytearray(encode_png(img)), img))
-    media = spark.createDataFrame(
-        [(i, t, bytes(b)) for i, t, b, _ in rows],
-        "media_id long, media_type string, payload binary",
-    )
-    feats = {
-        r.media_id: r.feat_mean
-        for r in extract_features(media, decode_stub=False).collect()
-    }
-    for i, _, _, img in rows:
-        assert feats[i] == pytest.approx(luminance_mean(img), abs=1e-9)
-
-    resized = {
-        r.media_id: bytes(r.payload)
-        for r in resize_media(media, 4, 3, decode_stub=False).collect()
-    }
-    for i, _, _, img in rows:
-        assert (decode_png(resized[i]) == resize_nearest(img, 4, 3)).all()
-
-
 def test_png_roundtrip_property():
     """Property: encode_png/decode_png is identity for arbitrary
     shapes (incl. 1-pixel edges), every filter type, interlaced or
@@ -663,57 +536,6 @@ def test_png_roundtrip_property():
         assert (decode_png(blob) == img).all()
 
     prop()
-
-
-def test_jpeg_through_spark_decode_and_resize(spark):
-    """Baseline JPEG through the real mapInPandas machinery: decoded
-    luminance features within the lossy tolerance, and resize
-    re-encodes through the JPEG encoder (output decodes to the
-    resized dimensions)."""
-    import numpy as np
-
-    from pangenomesasgraphdatabases_spark.operators.jpeg_codec import (
-        decode_jpeg,
-        encode_jpeg,
-    )
-    from pangenomesasgraphdatabases_spark.operators.media_codecs import (
-        luminance_mean,
-    )
-    from pangenomesasgraphdatabases_spark.operators.multimodal import (
-        extract_features,
-        resize_media,
-    )
-
-    rng = np.random.default_rng(29)
-    rows = []
-    for i in range(4):
-        img = np.clip(
-            np.cumsum(rng.normal(0, 2, (16 + i, 12 + i, 3)), axis=1) + 128,
-            0, 255,
-        ).astype(np.uint8)
-        rows.append((i, "image/jpeg", bytearray(encode_jpeg(img, 92)), img))
-    media = spark.createDataFrame(
-        [(i, t, bytes(b)) for i, t, b, _ in rows],
-        "media_id long, media_type string, payload binary",
-    )
-    feats = {
-        r.media_id: r.feat_mean
-        for r in extract_features(media, decode_stub=False).collect()
-    }
-    for i, _, blob, img in rows:
-        # Tolerance: feature of the DECODED image is exact; vs the
-        # pre-encode original it differs only by the lossy step.
-        assert feats[i] == pytest.approx(
-            luminance_mean(decode_jpeg(bytes(blob))), abs=1e-9
-        )
-        assert feats[i] == pytest.approx(luminance_mean(img), abs=3.0)
-
-    resized = {
-        r.media_id: bytes(r.payload)
-        for r in resize_media(media, 6, 4, decode_stub=False).collect()
-    }
-    for i, _, _, _ in rows:
-        assert decode_jpeg(resized[i]).shape == (4, 6, 3)
 
 
 def test_container_probe_through_spark(spark):
@@ -1034,162 +856,6 @@ def test_png_sub8bit_grayscale_decode():
             )
 
 
-def test_wav_g711_and_ima_adpcm_decode():
-    """r14: the classic compressed WAV forms decode for real — G.711
-    mu-law/A-law via the published expansion tables (spot-pinned to
-    the canonical values) and IMA/DVI ADPCM block decode (mono and
-    stereo, SNR-bounded round trip through the mirrored forward
-    quantizer); MS ADPCM (format 2) stays the documented boundary."""
-    import numpy as np
-
-    from pangenomesasgraphdatabases_spark.operators.media_codecs import (
-        _ALAW_TABLE,
-        _ULAW_TABLE,
-        decode_wav,
-        encode_wav_g711,
-        encode_wav_ima_adpcm,
-    )
-
-    # canonical G.711 pairs: mu-law 0x00 -> -32124, 0xFF/0x7F -> 0,
-    # 0x80 -> +32124; A-law 0x55 -> -8, 0xD5 -> +8
-    assert _ULAW_TABLE[0x00] == -32124
-    assert _ULAW_TABLE[0xFF] == 0 and _ULAW_TABLE[0x7F] == 0
-    assert _ULAW_TABLE[0x80] == 32124
-    assert _ALAW_TABLE[0x55] == -8 and _ALAW_TABLE[0xD5] == 8
-    # expansion tables are odd-symmetric staircases: 256 distinct
-    # codewords collapsing to 255/256 distinct linear values
-    assert len(set(_ULAW_TABLE.tolist())) >= 255
-    assert len(set(_ALAW_TABLE.tolist())) == 256
-
-    rng = np.random.RandomState(3)
-    s = rng.randint(-32768, 32768, 2000).astype(np.int16)
-    for law, tol in (("mu", 0.04), ("a", 0.13)):
-        out, rate = decode_wav(encode_wav_g711(s, 8000, law=law))
-        assert rate == 8000 and out.shape == (2000, 1)
-        err = np.abs(out[:, 0].astype(np.int32) - s)
-        rel = err / np.maximum(np.abs(s.astype(np.int32)), 64)
-        assert rel.max() <= tol, (law, rel.max())
-
-    t = np.arange(4000)
-    sm = (8000 * np.sin(t / 30) + 3000 * np.sin(t / 7)).astype(np.int16)
-    out, rate = decode_wav(encode_wav_ima_adpcm(sm, 8000))
-    assert rate == 8000
-    # the fact chunk truncates the final block's padding: EXACT length
-    assert out.shape == (len(sm), 1)
-    o = out[:, 0].astype(np.float64)
-    snr = 10 * np.log10(
-        (sm.astype(np.float64) ** 2).mean() / ((o - sm) ** 2).mean()
-    )
-    assert snr > 25, snr
-    st = np.stack([sm, sm[::-1]], axis=1).astype(np.int16)
-    out2, _ = decode_wav(encode_wav_ima_adpcm(st, 8000))
-    assert out2.shape == st.shape
-    o2 = out2.astype(np.float64)
-    snr2 = 10 * np.log10(
-        (st.astype(np.float64) ** 2).mean() / ((o2 - st) ** 2).mean()
-    )
-    assert snr2 > 25, snr2
-
-
-def test_ima_adpcm_known_block_decode():
-    """A hand-built IMA ADPCM block decodes to the exact published
-    recurrence: header carries sample 0 (predictor 100, index 0 ->
-    step 7); nibble 0 adds step>>3, nibble 8 subtracts it, nibble 4
-    adds step and bumps the index by 2."""
-    import struct
-
-    import numpy as np
-
-    from pangenomesasgraphdatabases_spark.operators.media_codecs import (
-        _IMA_STEP,
-        decode_wav,
-    )
-
-    # mono block_align 12: header (4) + 8 nibble bytes -> 17 samples
-    nibbles = [0, 8, 4, 0] + [0] * 12  # low-first pairs
-    body = bytes(
-        nibbles[i] | (nibbles[i + 1] << 4) for i in range(0, 16, 2)
-    )
-    block = struct.pack("<hBB", 100, 0, 0) + body
-    fmt = struct.pack("<HHIIHHHH", 0x11, 1, 8000, 4000, 12, 4, 2, 17)
-    wav = (
-        b"RIFF" + struct.pack("<I", 4 + 8 + len(fmt) + 8 + len(block))
-        + b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"data" + struct.pack("<I", len(block)) + block
-    )
-    out, rate = decode_wav(wav)
-    assert rate == 8000 and out.shape == (17, 1)
-    assert out[0, 0] == 100
-    # nibble 0: +7>>3 = 0, index -1 -> clamp 0
-    assert out[1, 0] == 100
-    # nibble 8: -(7>>3) = 0 (magnitude bits empty), index stays 0
-    assert out[2, 0] == 100
-    # nibble 4: +step(7), index +2 -> step becomes _IMA_STEP[2]
-    assert out[3, 0] == 107
-    # nibble 0 at index 2: +(9>>3) = 1
-    assert int(_IMA_STEP[2]) == 9
-    assert out[4, 0] == 108
-
-
-def test_wav_ms_adpcm_decode():
-    """r14: MS ADPCM (format 0x02) decodes via the published
-    coefficient pairs + adaptation table.  A hand-built block pins the
-    exact recurrence (header carries [s2, s1]; code 1 adds delta;
-    code 0xF subtracts delta; delta adapts by table/256 with floor
-    16), and a smooth round trip through the predictor-0 fixture
-    encoder is SNR-bounded, mono and stereo."""
-    import struct
-
-    import numpy as np
-
-    from pangenomesasgraphdatabases_spark.operators.media_codecs import (
-        decode_wav,
-        encode_wav_ms_adpcm,
-    )
-
-    # mono block_align 9: 7-byte header + 2 code bytes -> 6 samples
-    # header: pred 0 (coef 256/0), delta 64, s1=200, s2=100
-    block = bytes([0]) + struct.pack("<hhh", 64, 200, 100)
-    # codes: 1, 0xF, 0, 0 (high nibble first)
-    block += bytes([(1 << 4) | 0x0F, 0x00])
-    fmt = struct.pack("<HHIIHHH", 2, 1, 8000, 8000, 9, 4, 4)
-    fmt += struct.pack("<HH", 6, 0)  # cbSize payload: spb, 0 coefs
-    wav = (
-        b"RIFF" + struct.pack("<I", 4 + 8 + len(fmt) + 8 + len(block))
-        + b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"data" + struct.pack("<I", len(block)) + block
-    )
-    out, rate = decode_wav(wav)
-    assert rate == 8000 and out.shape == (6, 1)
-    assert out[0, 0] == 100 and out[1, 0] == 200  # header [s2, s1]
-    # code 1: pred = (200*256 + 100*0)/256 + 1*64 = 264; delta ->
-    # max(16, 230*64/256) = 57
-    assert out[2, 0] == 264
-    # code 0xF (signed -1): pred = 264 - 57 = 207; delta -> 57*230/256=51
-    assert out[3, 0] == 207
-    # code 0: pred = 207 (pure first-order), delta 51*230/256=45
-    assert out[4, 0] == 207
-    assert out[5, 0] == 207
-
-    t = np.arange(4000)
-    sm = (8000 * np.sin(t / 30) + 3000 * np.sin(t / 7)).astype(np.int16)
-    out, _ = decode_wav(encode_wav_ms_adpcm(sm, 8000))
-    assert out.shape == (len(sm), 1)  # fact-chunk exact length
-    o = out[:, 0].astype(np.float64)
-    snr = 10 * np.log10(
-        (sm.astype(np.float64) ** 2).mean() / ((o - sm) ** 2).mean()
-    )
-    assert snr > 20, snr
-    st = np.stack([sm, sm[::-1]], axis=1).astype(np.int16)
-    out2, _ = decode_wav(encode_wav_ms_adpcm(st, 8000))
-    assert out2.shape == st.shape
-    o2 = out2.astype(np.float64)
-    snr2 = 10 * np.log10(
-        (st.astype(np.float64) ** 2).mean() / ((o2 - st) ** 2).mean()
-    )
-    assert snr2 > 20, snr2
-
-
 def test_bmp_palette_and_32bit_decode():
     """r14 BMP depth widening: paletted 1/4/8-bit (BGRX color table,
     MSB-first sub-byte indices, biClrUsed shrink) and 32-bit BGRX all
@@ -1272,16 +938,3 @@ def test_bmp_malformed_palette_rejected():
     data += bytes([200, 0, 0, 0])
     with pytest.raises(ValueError, match="palette index 200"):
         decode_bmp(data)
-
-
-def test_ms_adpcm_predictor_truncates_toward_zero():
-    """Review r14: the MS ADPCM predictor's /256 is C truncation, not
-    Python floor — a negative numerator with the signed coefficient
-    sets (460/-208) must base at -1, not -2."""
-    from pangenomesasgraphdatabases_spark.operators.media_codecs import (
-        _ms_step,
-    )
-
-    # num = s1*460 + s2*(-208) = -460 -> trunc(-460/256) = -1
-    smp, _, _, _ = _ms_step(0, -1, 0, 16, 460, -208)
-    assert smp == -1  # floor would give -2

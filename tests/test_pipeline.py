@@ -1,5 +1,4 @@
-"""Tests for the r3 pipeline/layout operators (queries/pipeline_q.py,
-operators/zorder.py)."""
+"""Tests for the r3 pipeline/layout queries (queries/pipeline_q.py)."""
 
 from __future__ import annotations
 
@@ -8,50 +7,6 @@ import os
 from pyspark.sql import functions as F
 
 SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-
-
-def _morton_py(x: int, y: int, bits: int = 16) -> int:
-    z = 0
-    for i in range(bits):
-        z |= ((x >> i) & 1) << (2 * i)
-        z |= ((y >> i) & 1) << (2 * i + 1)
-    return z
-
-
-def test_zvalue_matches_reference(spark):
-    from pangenomesasgraphdatabases_spark.operators.zorder import zvalue
-
-    rows = [(0, 0), (1, 0), (0, 1), (5, 9), (65535, 65535), (12345, 54321)]
-    df = spark.createDataFrame(rows, ["x", "y"]).withColumn(
-        "z", zvalue(F.col("x"), F.col("y"))
-    )
-    for r in df.collect():
-        assert r.z == _morton_py(r.x, r.y), (r.x, r.y)
-
-
-def test_zorder_repartition_rectangles(spark):
-    """Range partitioning by z-value must give each partition a
-    DISJOINT z range (that is what makes footer min/max stats prune)."""
-    from pangenomesasgraphdatabases_spark.operators.zorder import (
-        zorder_repartition,
-        zvalue,
-    )
-
-    df = spark.range(2000).select(
-        (F.col("id") * 37 % 512).alias("a"), (F.col("id") * 101 % 512).alias("b")
-    )
-    out = zorder_repartition(df, "a", "b", 8)
-    assert out.rdd.getNumPartitions() == 8
-    spans = (
-        out.withColumn("z", zvalue(F.col("a"), F.col("b")))
-        .withColumn("pid", F.spark_partition_id())
-        .groupBy("pid")
-        .agg(F.min("z").alias("lo"), F.max("z").alias("hi"))
-        .collect()
-    )
-    spans = sorted(((r.lo, r.hi) for r in spans))
-    for (lo1, hi1), (lo2, hi2) in zip(spans, spans[1:]):
-        assert hi1 <= lo2, "partition z ranges overlap"
 
 
 def test_curation_verdicts_invariants(spark):

@@ -3,10 +3,13 @@ co-located joins (the 100 TB story, asserted on actual plans)."""
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 from pyspark.sql import functions as F
 
 SF = "/root/testdata/sf0.01"
+FIXTURES = Path(__file__).resolve().parent.parent / "fixtures_data"
 
 
 def _plan(df) -> str:
@@ -279,7 +282,7 @@ def test_genbank_scan_single_stage(spark):
     )
 
     plan = _plan(
-        read_genbank_features(spark, "/root/repo/fixtures_data/genbank/*.gbk")
+        read_genbank_features(spark, f"{FIXTURES}/genbank/*.gbk")
     )
     assert "Join" not in plan and "Exchange hashpartitioning" not in plan
 

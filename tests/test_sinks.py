@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+from pathlib import Path
+
 from pyspark.sql import functions as F
 
 from pangenomesasgraphdatabases_spark.sources.fasta import write_fasta
@@ -45,7 +47,7 @@ def test_gff3_sink_roundtrip(spark, tmp_path):
         write_gff3,
     )
 
-    GBK = "/root/repo/fixtures_data/genbank"
+    GBK = str(Path(__file__).resolve().parent.parent / "fixtures_data" / "genbank")
     from pangenomesasgraphdatabases_spark.sources.genbank import genbank_to_gff
 
     feats = genbank_to_gff(spark, f"{GBK}/*.gbk")

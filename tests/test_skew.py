@@ -1,50 +1,8 @@
-"""Salted aggregation / join equivalence with the unsalted plans."""
+"""Skew helpers (operators/skew.py) against their plain plans."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
-
-from pangenomesasgraphdatabases_spark.data import table
-from pangenomesasgraphdatabases_spark.operators.skew import (
-    salted_agg,
-    salted_broadcast_join,
-)
-
-SF = "/root/testdata/sf0.001"
-
-
-def test_salted_agg_matches_plain(spark):
-    li = table(spark, SF, "lineitem")
-    plain = {
-        (r.l_suppkey): (r.cnt, round(r.s, 6))
-        for r in li.groupBy("l_suppkey")
-        .agg(F.count(F.lit(1)).alias("cnt"), F.sum("l_quantity").alias("s"))
-        .collect()
-    }
-    salted = {
-        (r.l_suppkey): (r.cnt, round(r.s, 6))
-        for r in salted_agg(
-            li.select("l_suppkey", "l_quantity"),
-            "l_suppkey",
-            {"cnt": F.count(F.lit(1)), "s": F.sum("l_quantity")},
-            lambda d: d.groupBy("l_suppkey").agg(
-                F.sum("cnt").alias("cnt"), F.sum("s").alias("s")
-            ),
-        ).collect()
-    }
-    assert plain == salted
-
-
-def test_salted_broadcast_join_matches_plain(spark):
-    li = table(spark, SF, "lineitem").select("l_suppkey", "l_quantity")
-    sup = table(spark, SF, "supplier").select(
-        F.col("s_suppkey").alias("l_suppkey"), "s_name"
-    )
-    plain = li.join(sup, "l_suppkey").groupBy("s_name").count()
-    salted = salted_broadcast_join(li, sup, "l_suppkey").groupBy("s_name").count()
-    assert {tuple(r) for r in plain.collect()} == {
-        tuple(r) for r in salted.collect()
-    }
 
 
 def test_hot_key_salted_join_matches_plain(spark):

@@ -7,6 +7,7 @@ from __future__ import annotations
 import glob
 import importlib.util
 import os
+import re
 import sys
 
 import pytest
@@ -24,3 +25,16 @@ def test_tool_imports(path, monkeypatch):
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
     assert callable(getattr(mod, "main", None)), f"{path} has no main()"
+
+
+def test_no_hardcoded_checkout_path():
+    # A literal checkout path put at sys.path[0] makes a copy of the repo
+    # elsewhere import the original tree; derive it from __file__.
+    literal = re.compile(r"""["']""" + re.escape(REPO) + r"""["'/]""")
+    scripts = TOOLS + sorted(glob.glob(os.path.join(REPO, "tests", "*.py")))
+    offenders = []
+    for path in scripts:
+        with open(path, encoding="utf-8") as f:
+            if literal.search(f.read()):
+                offenders.append(os.path.relpath(path, REPO))
+    assert not offenders, offenders

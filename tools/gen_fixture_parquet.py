@@ -1,8 +1,8 @@
 """Materialize the deterministic pangenome fixture as parquet so both
 Spark queries and DuckDB oracles can read identical inputs.
 
-Output: /root/repo/fixtures_data/{feature_nodes,cluster_nodes,
-composition}.parquet (tiny; committed to the repo).
+Output: fixtures_data/{feature_nodes,cluster_nodes,composition}.parquet
+at the repo root (tiny; committed to the repo).
 """
 
 from __future__ import annotations
@@ -10,11 +10,12 @@ from __future__ import annotations
 import pathlib
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = pathlib.Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO))
 
 from pangenomesasgraphdatabases_spark.graph.fixtures import build_fixture
 
-OUT = pathlib.Path("/root/repo/fixtures_data")
+OUT = REPO / "fixtures_data"
 
 
 def main() -> None:

@@ -6,7 +6,8 @@ from __future__ import annotations
 import pathlib
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = pathlib.Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO))
 
 from pangenomesasgraphdatabases_spark.queries.registry import all_queries
 
@@ -25,7 +26,7 @@ def main() -> None:
         check = "oracle" if q.oracle else "rows-only"
         tags = ", ".join(q.tags)
         out.append(f"| {i} | `{name}` | {tags} | {check} | {doc} |")
-    path = pathlib.Path("/root/repo/docs")
+    path = REPO / "docs"
     path.mkdir(exist_ok=True)
     (path / "QUERIES.md").write_text("\n".join(out) + "\n")
     n = len(all_queries())

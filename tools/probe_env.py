@@ -9,10 +9,11 @@ Usage: python tools/probe_env.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
+import os
 import subprocess
 import sys
 
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 QUERIES = [
@@ -26,9 +27,9 @@ QUERIES = [
 
 WORKER = r"""
 import sys, json, hashlib
-sys.path.insert(0, "/root/repo")
-mode, sf = sys.argv[1], sys.argv[2]
-names = sys.argv[3:]
+repo, mode, sf = sys.argv[1:4]
+names = sys.argv[4:]
+sys.path.insert(0, repo)
 from pyspark.sql import SparkSession
 if mode == "hostile":
     b = (SparkSession.builder.master("local[7]")
@@ -73,7 +74,7 @@ def main() -> None:
 
     def run(mode: str) -> dict:
         r = subprocess.run(
-            [sys.executable, "-c", WORKER, mode, sf, *queries],
+            [sys.executable, "-c", WORKER, REPO, mode, sf, *queries],
             capture_output=True, text=True, timeout=600,
         )
         if r.returncode != 0:
