@@ -1,8 +1,31 @@
-"""Loaders for the driver's synthetic star-schema parquet tables."""
+"""Loaders for the driver's synthetic star-schema parquet tables.
+
+Every parquet input file the package reads goes through
+``read_parquet``, which keeps an in-process memo of each file's
+inferred schema.  ``spark.read.parquet`` without a schema runs schema
+inference as a Spark job on every call, so building a plan over the
+same reference tables again would otherwise cost one job per table.
+The first read of a file infers and stores its schema; later reads pass
+it to ``spark.read.schema(...)`` and submit no job.  The memo key is:
+
+- the path: the file being read;
+- its ``st_size`` and ``st_mtime_ns``: a file rewritten at the same
+  path has another size or modification time and is inferred again;
+- ``spark.sql.legacy.parquet.nanosAsLong``: ``_load_events`` turns it
+  on for the whole session, and it changes the type inferred for a
+  TIMESTAMP(NANOS) column (BIGINT instead of an error), so a schema
+  inferred under one setting is not reused under the other.
+
+Only schemas are memoized, never DataFrames: two reads of one file
+must get their own attribute ids, or a self-join of a table breaks.
+"""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -23,7 +46,31 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         raise KeyError(f"unknown table {name!r}")
     if name == "events":
         return _load_events(spark, sf_dir)
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return read_parquet(spark, f"{sf_dir}/{name}.parquet")
+
+
+_SCHEMAS: dict[tuple, StructType] = {}
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` for an input file that is not
+    rewritten while it is read, inferring its schema once per file
+    version (see the module docstring for the memo key).  ``path``
+    names one file: a directory's own size and time do not change when
+    a file inside it is rewritten."""
+    st = os.stat(path)
+    key = (
+        path,
+        st.st_size,
+        st.st_mtime_ns,
+        spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false"),
+    )
+    schema = _SCHEMAS.get(key)
+    if schema is None:
+        df = spark.read.parquet(path)
+        _SCHEMAS[key] = df.schema
+        return df
+    return spark.read.schema(schema).parquet(path)
 
 
 def normalize_events(raw: DataFrame) -> DataFrame:
@@ -74,4 +121,4 @@ def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Load events.parquet through normalize_events (schema-adaptive;
     the nanosAsLong conf is harmless when the file stores micros)."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    return normalize_events(spark.read.parquet(f"{sf_dir}/events.parquet"))
+    return normalize_events(read_parquet(spark, f"{sf_dir}/events.parquet"))

@@ -1,5 +1,5 @@
 """Pangenome-domain queries with DuckDB oracles over the committed
-fixture parquet (/root/repo/fixtures_data/*) — oracle coverage for the
+fixture parquet (fixtures_data/* at the repo root) — oracle coverage for the
 graph build, RGP, and GI-scan pipelines on domain-shaped data (the
 star-schema isomorphs cover the same operators on the driver's tables).
 
@@ -9,15 +9,18 @@ These ignore sf_dir: the fixture is the deterministic domain dataset
 
 from __future__ import annotations
 
+from pathlib import Path
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pangenomesasgraphdatabases_spark.data import read_parquet
 from pangenomesasgraphdatabases_spark.graph.build import PangenomeGraph, build_graph
 from pangenomesasgraphdatabases_spark.graph.gi_scan import gi_scan
 from pangenomesasgraphdatabases_spark.graph.rgp import find_rgps
 from pangenomesasgraphdatabases_spark.queries.registry import register
 
-FIX = "/root/repo/fixtures_data"
+FIX = str(Path(__file__).resolve().parents[2] / "fixtures_data")
 
 # Shared oracle CTE block: graph construction in DuckDB SQL.
 _GRAPH_CTES = f"""
@@ -105,9 +108,9 @@ def _fixture_graph(spark: SparkSession) -> PangenomeGraph:
     # — cache pressure is nil.
     return build_graph(
         spark,
-        spark.read.parquet(f"{FIX}/feature_nodes.parquet"),
-        spark.read.parquet(f"{FIX}/cluster_nodes.parquet"),
-        spark.read.parquet(f"{FIX}/composition.parquet"),
+        read_parquet(spark, f"{FIX}/feature_nodes.parquet"),
+        read_parquet(spark, f"{FIX}/cluster_nodes.parquet"),
+        read_parquet(spark, f"{FIX}/composition.parquet"),
         persist=True,
     )
 

@@ -5,6 +5,8 @@ same files at an absolute path)."""
 
 from __future__ import annotations
 
+from pathlib import Path
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -17,8 +19,9 @@ from pangenomesasgraphdatabases_spark.sources.genbank import (
 )
 from pangenomesasgraphdatabases_spark.sources.pirate import read_coords
 
-RAW = "/root/repo/fixtures_data/pirate_raw"
-GBK = "/root/repo/fixtures_data/genbank"
+FIXTURES = Path(__file__).resolve().parents[2] / "fixtures_data"
+RAW = str(FIXTURES / "pirate_raw")
+GBK = str(FIXTURES / "genbank")
 
 
 @register(
@@ -621,7 +624,7 @@ def etl_pirate_to_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
 # FT->SO type mapping (bp_genbank2gff3.pl map_types, :1180, no-obo
 # configuration): its own fixture tree so the gene-model queries'
 # driver hashes never move when this fixture grows.
-GBT = "/root/repo/fixtures_data/genbank_types"
+GBT = str(FIXTURES / "genbank_types")
 
 
 def _so_case_sql(col: str) -> str:
@@ -683,7 +686,7 @@ def etl_genbank_so_types(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Table-driven FT->SO configuration (VERDICT r11 #6): its own fixture
 # tree + map table, so neither the no-obo query's nor the gene-model
 # queries' driver hashes move when this fixture grows.
-GBTX = "/root/repo/fixtures_data/genbank_types_ext"
+GBTX = str(FIXTURES / "genbank_types_ext")
 
 
 @register(

@@ -19,10 +19,10 @@ from pyspark.sql import functions as F
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """readStream over the events parquet with the nanos->micros
     conversion applied (same surface as data.table)."""
-    from pangenomesasgraphdatabases_spark.data import normalize_events
+    from pangenomesasgraphdatabases_spark.data import normalize_events, read_parquet
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    static = spark.read.parquet(f"{sf_dir}/events.parquet")
+    static = read_parquet(spark, f"{sf_dir}/events.parquet")
     # Streaming file source needs a directory: point at sf_dir and
     # glob-filter to the events file.
     stream = (

@@ -614,6 +614,28 @@ EAGER_BUILD_ALLOWED = {
     "linkage_rnn_cut",
 }
 
+# Queries whose construction may submit Spark jobs besides those above:
+# the streaming ones run an AvailableNow micro-batch when they are built,
+# and this one infers CSV/TSV schemas over the raw PIRATE tree.
+JOBS_AT_BUILD_ALLOWED = {"etl_pirate_to_graph"}
+
+
+def _next_job_id(spark) -> int:
+    return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+
+
+def _warm_schema_memo(spark, sf_dir: str) -> None:
+    """Infer every parquet input's schema once, so a construction that
+    reads only those files submits no job.  events goes first: its
+    loader turns on the nanosAsLong conf, which is part of the memo key."""
+    from pangenomesasgraphdatabases_spark import data
+    from pangenomesasgraphdatabases_spark.queries.graph_q import FIX
+
+    for name in sorted(data.TABLES, key=lambda t: t != "events"):
+        data.table(spark, sf_dir, name)
+    for name in ("feature_nodes", "cluster_nodes", "composition"):
+        data.read_parquet(spark, f"{FIX}/{name}.parquet")
+
 
 @pytest.fixture(scope="module")
 def registry_sweep(spark):
@@ -622,15 +644,18 @@ def registry_sweep(spark):
     full-registry contract tests each re-built all 283 plans — the two
     most expensive tests in the suite doing the same walk twice).  The
     walk builds each DataFrame once with eager-action recording hooks
-    installed AND compiles its physical plan once; the two tests below
-    assert their own contract over the shared result.  Built at
-    sf0.001 (plan enumeration is jobless; the eager contract is
+    installed, counting the Spark jobs the build submits, AND compiles
+    its physical plan once; the tests below assert their own contract
+    over the shared result.  Built at sf0.001 (the eager contract is
     SF-independent by definition)."""
     from pyspark.sql.classic.dataframe import DataFrame as CDF
 
     from pangenomesasgraphdatabases_spark.queries.registry import (
         all_queries,
     )
+
+    sf_dir = "/root/testdata/sf0.001"
+    _warm_schema_memo(spark, sf_dir)
 
     actions = (
         "collect",
@@ -655,13 +680,22 @@ def registry_sweep(spark):
     for m, of in originals.items():
         setattr(CDF, m, make(m, of))
     eager: dict[str, list[str]] = {}
+    jobs: dict[str, int] = {}
     nodes: dict[str, list[str]] = {}
     try:
         for name, q in all_queries().items():
             recorded.clear()
-            df = q.fn(spark, "/root/testdata/sf0.001")
+            job0 = _next_job_id(spark)
+            df = q.fn(spark, sf_dir)
+            submitted = _next_job_id(spark) - job0
             if recorded and name not in EAGER_BUILD_ALLOWED:
                 eager[name] = sorted(set(recorded))
+            if submitted and not (
+                name in EAGER_BUILD_ALLOWED
+                or name in JOBS_AT_BUILD_ALLOWED
+                or "streaming" in q.tags
+            ):
+                jobs[name] = submitted
             plan = _plan(df)
             bad = [
                 n
@@ -674,7 +708,7 @@ def registry_sweep(spark):
     finally:
         for m, of in originals.items():
             setattr(CDF, m, of)
-    return {"eager": eager, "nodes": nodes}
+    return {"eager": eager, "jobs": jobs, "nodes": nodes}
 
 
 def test_plan_construction_runs_no_eager_actions(registry_sweep):
@@ -685,6 +719,19 @@ def test_plan_construction_runs_no_eager_actions(registry_sweep):
     counts are now footer stats or in-plan scalar subqueries).
     Exceptions are the documented EAGER_BUILD_ALLOWED set above."""
     assert not registry_sweep["eager"], registry_sweep["eager"]
+
+
+def test_plan_construction_submits_no_jobs(registry_sweep):
+    """The same contract counted in Spark jobs, which also sees jobs no
+    DataFrame method starts, such as parquet schema inference inside
+    ``spark.read.parquet``.  With the schema memo warm, building a
+    registered query submits none.  Exceptions: EAGER_BUILD_ALLOWED,
+    JOBS_AT_BUILD_ALLOWED and the queries tagged ``streaming``."""
+    jobs = registry_sweep["jobs"]
+    # A str message: pytest cuts the repr of a dict message short.
+    assert not jobs, f"{len(jobs)} queries submit jobs when built: " + ", ".join(
+        f"{name} ({n})" for name, n in sorted(jobs.items())
+    )
 
 
 def test_capped_lsh_plan_shape(spark):

@@ -28,10 +28,15 @@ def test_tool_imports(path, monkeypatch):
 
 
 def test_no_hardcoded_checkout_path():
-    # A literal checkout path put at sys.path[0] makes a copy of the repo
-    # elsewhere import the original tree; derive it from __file__.
+    # A literal checkout path makes a copy of the repo elsewhere import
+    # (or read the fixtures of) the original tree; derive it from __file__.
     literal = re.compile(r"""["']""" + re.escape(REPO) + r"""["'/]""")
-    scripts = TOOLS + sorted(glob.glob(os.path.join(REPO, "tests", "*.py")))
+    package = os.path.join(REPO, "pangenomesasgraphdatabases_spark", "**", "*.py")
+    scripts = (
+        TOOLS
+        + sorted(glob.glob(os.path.join(REPO, "tests", "*.py")))
+        + sorted(glob.glob(package, recursive=True))
+    )
     offenders = []
     for path in scripts:
         with open(path, encoding="utf-8") as f:
