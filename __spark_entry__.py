@@ -26,7 +26,8 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md section 2."""
+    """One entry per implemented operator from SURVEY.md section 2, in
+    registration order: ``gi_scan_flagship`` first."""
     return {name: q.fn for name, q in all_queries().items()}
 
 

@@ -12,8 +12,7 @@ reports the plain median of its wall times.
 Output contract (VERDICT r6 #1): stdout carries EXACTLY ONE compact
 JSON line; the driver's tail capture loses a longer one.  Everything
 else goes to ``BENCH_DETAIL.json`` next to this file (mirrored to
-stderr); the driver-shaped run (sf0.1) also archives a per-round copy
-``BENCH_DETAIL_r0N.json`` so rep history survives round boundaries.
+stderr).
 
 The host is shared, so wall time is weather.  Each rep therefore also
 records, beside its wall time, the ``/proc/stat`` steal jiffies it
@@ -305,21 +304,9 @@ def main() -> None:
     repo = os.path.dirname(os.path.abspath(__file__))
     with open(os.path.join(repo, "BENCH_DETAIL.json"), "w") as fh:
         json.dump(detail, fh, indent=1)
-    # Per-round archive (VERDICT r7 #7): BENCH_DETAIL.json is
-    # overwritten every run, so keep a copy keyed by the round the
-    # window was composed for.  Only the driver-shaped run (sf0.1)
-    # archives — ad-hoc sf0.001 iteration runs don't clobber it.
-    if abs(sf - 0.1) < 1e-9:
-        try:
-            from pangenomesasgraphdatabases_spark.queries import WINDOW_ROUND
-
-            archive = os.path.join(repo, f"BENCH_DETAIL_r{WINDOW_ROUND:02d}.json")
-            with open(archive, "w") as fh:
-                json.dump(detail, fh, indent=1)
-        except Exception:
-            pass  # archiving must never fail the bench contract
     print(json.dumps(detail), file=sys.stderr)
     print(compact_line(entries, sf))
+
 
 if __name__ == "__main__":
     main()

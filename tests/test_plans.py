@@ -143,104 +143,51 @@ def test_curation_pipeline_never_cartesian(spark):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_driver_window_is_fully_oracle_backed():
-    """The driver hash-checks the first 50 registered queries; a
-    registry edit must never push an oracle-less query into that
-    window (it would silently downgrade a hard check to rows-only)."""
+def test_every_query_is_oracle_backed():
+    """Every registered query has a DuckDB oracle, so the driver's hash
+    check never falls back to rows-only, in its first-50 window or
+    anywhere else."""
     import __spark_entry__ as entry_mod
 
-    q = list(entry_mod.queries().keys())
-    oracles = entry_mod.oracle_sql()
-    missing = [n for n in q[:50] if n not in oracles]
-    assert not missing, f"first-50 window has oracle-less queries: {missing}"
-    # r5 invariant: EVERY registered query is oracle-backed (zero
-    # rows-only entries since the eigh PCA left the registry).
-    assert sorted(oracles) == sorted(q)
+    assert sorted(entry_mod.oracle_sql()) == sorted(entry_mod.queries())
 
 
-def test_priority_list_is_total_and_duplicate_free():
-    """PRIORITY is the staleness-rotation ledger: it must enumerate
-    every registered query exactly once (a name missing from PRIORITY
-    falls to module order and silently escapes the rotation policy;
-    a duplicate would shift the 50-query window boundary)."""
-    from collections import Counter
+def test_all_queries_loads_every_query_module():
+    """``all_queries()`` must import every module that registers a
+    query: one missing from ``queries._load_all`` would drop its
+    queries without an error.  A fresh interpreter, since other tests
+    import query modules directly.  The order is registration order,
+    with the flagship first."""
+    import json
+    import subprocess
+    import sys
 
-    from pangenomesasgraphdatabases_spark.queries import PRIORITY
-    from pangenomesasgraphdatabases_spark.queries.registry import all_queries
-
-    names = set(all_queries())
-    dupes = [n for n, c in Counter(PRIORITY).items() if c > 1]
-    assert not dupes, f"duplicate PRIORITY names: {dupes}"
-    assert set(PRIORITY) == names, (
-        f"PRIORITY out of sync: missing={sorted(names - set(PRIORITY))} "
-        f"unknown={sorted(set(PRIORITY) - names)}"
+    repo = Path(__file__).resolve().parent.parent
+    probe = (
+        "import json, sys\n"
+        "from pangenomesasgraphdatabases_spark.queries.registry import "
+        "_REGISTRY, all_queries\n"
+        "names = list(all_queries())\n"
+        "print(json.dumps([names, list(_REGISTRY), sorted(sys.modules)]))\n"
     )
-
-
-def test_priority_head_matches_rotation_policy():
-    """r7: the shipped 50-query driver window (PRIORITY head) must
-    equal what the fixed rotation policy computes from the
-    CORRECTNESS ledger — flagship, then never-checked in registry
-    order, then oldest-checked-first.  Post-freeze registrations must
-    be declared in QUEUED_AFTER_FREEZE (they queue for the NEXT
-    window), otherwise this fails and the window drifts from plan.
-    Changed-code slots come from CHANGED_THIS_ROUND next to PRIORITY.
-    The replay is freeze-aware (VERDICT r7 #1): ledgers from rounds
-    >= WINDOW_ROUND are ignored, so the driver's end-of-round
-    CORRECTNESS drop cannot redden HEAD — bumping WINDOW_ROUND is
-    part of composing each new window."""
-    import importlib.util
-    import os
-
-    from pangenomesasgraphdatabases_spark.queries import (
-        CHANGED_THIS_ROUND,
-        PRIORITY,
-        QUEUED_AFTER_FREEZE,
-        WINDOW_ROUND,
-    )
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    spec = importlib.util.spec_from_file_location(
-        "plan_window", os.path.join(repo, "tools", "plan_window.py")
-    )
-    pw = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(pw)
-
-    names = [n for n in pw.registry_order() if n not in set(QUEUED_AFTER_FREEZE)]
-    proposal = pw.propose_window(
-        names, pw.last_checked(WINDOW_ROUND), list(CHANGED_THIS_ROUND)
-    )
-    head = [n for n in PRIORITY if n not in set(QUEUED_AFTER_FREEZE)][:50]
-    assert head == proposal, (
-        "PRIORITY head drifted from the rotation policy: "
-        f"head-only={[n for n in head if n not in proposal]} "
-        f"proposal-only={[n for n in proposal if n not in head]}"
-    )
-
-
-def test_last_checked_is_freeze_aware():
-    """last_checked(max_round) must ignore CORRECTNESS ledgers from
-    rounds >= max_round — the property that keeps the rotation guard
-    green when the driver drops the current round's ledger (VERDICT
-    r7 #1).  Pinned against the real repo ledgers: the r7 window tail
-    (events_cusum_changepoint) first went green in r07, so it is
-    'never checked' from round 7's viewpoint and 'r7' from round 8's."""
-    import importlib.util
-    import os
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    spec = importlib.util.spec_from_file_location(
-        "plan_window", os.path.join(repo, "tools", "plan_window.py")
-    )
-    pw = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(pw)
-
-    assert pw.last_checked(7).get("events_cusum_changepoint", 0) == 0
-    assert pw.last_checked(8).get("events_cusum_changepoint", 0) == 7
-    # default = the package WINDOW_ROUND
-    from pangenomesasgraphdatabases_spark.queries import WINDOW_ROUND
-
-    assert pw.last_checked() == pw.last_checked(WINDOW_ROUND)
+    out = subprocess.run(
+        [sys.executable, "-c", probe],
+        cwd=repo,
+        capture_output=True,
+        text=True,
+        check=True,
+    ).stdout
+    names, registered, modules = json.loads(out)
+    queries_dir = repo / "pangenomesasgraphdatabases_spark" / "queries"
+    registering = [
+        f"pangenomesasgraphdatabases_spark.queries.{p.stem}"
+        for p in sorted(queries_dir.glob("*.py"))
+        if "@register(" in p.read_text(encoding="utf-8")
+    ]
+    assert registering
+    assert [m for m in registering if m not in modules] == []
+    assert names == registered
+    assert names[0] == "gi_scan_flagship"
 
 
 def test_pair_dedup_join_free(spark):
@@ -620,6 +567,14 @@ EAGER_BUILD_ALLOWED = {
 JOBS_AT_BUILD_ALLOWED = {"etl_pirate_to_graph"}
 
 
+def _each_query(found: dict) -> str:
+    # A str message naming every query: pytest cuts the repr of a dict
+    # message short.
+    return f"{len(found)} queries: " + "; ".join(
+        f"{name} {value}" for name, value in sorted(found.items())
+    )
+
+
 def _next_job_id(spark) -> int:
     return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
 
@@ -718,7 +673,8 @@ def test_plan_construction_runs_no_eager_actions(registry_sweep):
     doc_jaccard_containment width probe and the tfidf/unigram corpus
     counts are now footer stats or in-plan scalar subqueries).
     Exceptions are the documented EAGER_BUILD_ALLOWED set above."""
-    assert not registry_sweep["eager"], registry_sweep["eager"]
+    eager = registry_sweep["eager"]
+    assert not eager, "eager actions when built, " + _each_query(eager)
 
 
 def test_plan_construction_submits_no_jobs(registry_sweep):
@@ -728,10 +684,7 @@ def test_plan_construction_submits_no_jobs(registry_sweep):
     registered query submits none.  Exceptions: EAGER_BUILD_ALLOWED,
     JOBS_AT_BUILD_ALLOWED and the queries tagged ``streaming``."""
     jobs = registry_sweep["jobs"]
-    # A str message: pytest cuts the repr of a dict message short.
-    assert not jobs, f"{len(jobs)} queries submit jobs when built: " + ", ".join(
-        f"{name} ({n})" for name, n in sorted(jobs.items())
-    )
+    assert not jobs, "jobs submitted when built, " + _each_query(jobs)
 
 
 def test_capped_lsh_plan_shape(spark):
@@ -841,4 +794,5 @@ def test_registry_wide_plan_contract_no_cartesian_no_row_udf(registry_sweep):
     node) and no BatchEvalPython (row-at-a-time Python UDFs;
     Arrow-batched ArrowEvalPython / MapInPandas /
     FlatMapGroupsInPandas are the allowed Python boundaries)."""
-    assert not registry_sweep["nodes"], registry_sweep["nodes"]
+    nodes = registry_sweep["nodes"]
+    assert not nodes, "forbidden plan nodes, " + _each_query(nodes)

@@ -214,7 +214,7 @@ def main():
             # multi-query run.
             spark.catalog.clearCache()
         except Exception as e:
-            print(f"FAIL {name}: spark error: {e}")
+            print(f"FAIL {name}: spark error: {e}", flush=True)
             ledger[name] = {
                 "status": "fail",
                 "err": f"spark error: {e}"[:500],
@@ -224,7 +224,7 @@ def main():
             continue
         if name not in oracles:
             print(f"SKIP {name}: no oracle (rows-only) — {len(spdf)} rows "
-                  f"[{time.time()-t0:.1f}s]")
+                  f"[{time.time()-t0:.1f}s]", flush=True)
             ledger[name] = {
                 "status": "rows_only",
                 "rows": len(spdf),
@@ -238,7 +238,7 @@ def main():
             dtypes = dict(zip(dcols, (str(t) for t in rel.types)))
             dpdf = rel.df()
         except Exception as e:
-            print(f"FAIL {name}: duckdb error: {e}")
+            print(f"FAIL {name}: duckdb error: {e}", flush=True)
             ledger[name] = {
                 "status": "fail",
                 "err": f"duckdb error: {e}"[:500],
@@ -261,7 +261,7 @@ def main():
                     )
         problems += compare_frames(spdf, dpdf)
         if problems:
-            print(f"FAIL {name}: " + "; ".join(problems))
+            print(f"FAIL {name}: " + "; ".join(problems), flush=True)
             ledger[name] = {
                 "status": "fail",
                 "rows": len(spdf),
@@ -270,7 +270,10 @@ def main():
             }
             n_fail += 1
         else:
-            print(f"PASS {name} ({len(spdf)} rows) [{time.time()-t0:.1f}s]")
+            print(
+                f"PASS {name} ({len(spdf)} rows) [{time.time()-t0:.1f}s]",
+                flush=True,
+            )
             ledger[name] = {
                 "status": "pass",
                 "rows": len(spdf),
