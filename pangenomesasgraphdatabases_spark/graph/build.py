@@ -166,15 +166,16 @@ def build_graph(
         if composition is not None
         else None
     )
-    # The persisted hub is SLIM on purpose: heavy payload columns
-    # (full_sequence, strand, variation) stay out of every shuffle and
-    # out of the cache — the r3 wide-hub variant that cached them
-    # measured 2× slower than this shape.  The two joins share the
+    # The persisted hub is SLIM on purpose: it holds only the columns
+    # its consumers read — lonely_flag, ortholog, lonely, prio, ref,
+    # adj, strain_nodes, feature_in_strain and cluster_in_strain.
+    # Payload columns (full_sequence, strand, variation, length, name)
+    # stay out of every shuffle and out of the cache, where each scan
+    # would count them as input; the r3 wide-hub variant that cached
+    # them measured 2× slower than this shape.  The two joins share the
     # feature_id key, so the second reuses the first's partitioning
     # (one exchange per input, no re-shuffle between them).
-    fc = features0.select(
-        "feature_id", "strain", "feature_start", "feature_type", "length", "name"
-    )
+    fc = features0.select("feature_id", "strain", "feature_start", "feature_type")
     if comp_t is not None:
         fc = fc.join(comp_t, "feature_id", "left")
     else:

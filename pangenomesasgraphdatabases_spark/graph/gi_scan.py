@@ -10,6 +10,20 @@ rolling(20) deviation-count > 5 (W4), rolling(5) max(number_genomes)
 The reference collects the whole strain into pandas first; this stays
 distributed — the window partitions by strain so a 770-strain (or
 770k-strain) dataset scans in parallel.
+
+Join order: features join the graph's ``ortholog`` table directly,
+then the broadcast cluster dimension (cluster_id, number_genomes).
+Joining a derived ``ortholog ⋈ clusters`` frame instead costs two
+extra shuffles: the planner estimates a join's size as the product of
+its inputs, so the derived frame never qualifies for a static
+broadcast; both sides were shuffled by feature_id, and AQE turned that
+SortMergeJoin into a broadcast only after both map stages had written.
+Here the size rule decides ``features ⟕ ortholog`` from the scanned
+files' statistics (a broadcast when small, a SortMergeJoin at scale);
+while it broadcasts, the window's exchange on strain is the plan's only
+shuffle.  PIRATE puts a feature in at most one gene family, so each
+join keeps one row per feature; a feature with no ortholog or cluster
+row keeps a null number_genomes.
 """
 
 from __future__ import annotations
@@ -34,16 +48,21 @@ def gi_scan(
     feats = graph.features.select(
         "feature_id", "strain", "feature_start", "feature_type", "GC", "CAI"
     )
-    nm = graph.ortholog.join(
-        graph.clusters.select("cluster_id", "number_genomes"), "cluster_id"
-    ).select("feature_id", "number_genomes")
+    sizes = graph.clusters.select("cluster_id", "number_genomes")
     stats = graph.strains.select(
         F.col("name").alias("strain"), "avg_GC", "stDev_GC", "avg_CAI", "stDev_CAI"
     )
 
-    df = feats.join(nm, "feature_id", "left").join(F.broadcast(stats), "strain")
-    z_gc = (F.col("GC") - F.col("avg_GC")) / F.col("stDev_GC")
-    z_cai = (F.col("CAI") - F.col("avg_CAI")) / F.col("stDev_CAI")
+    df = (
+        feats.join(graph.ortholog, "feature_id", "left")
+        .join(F.broadcast(sizes), "cluster_id", "left")
+        .join(F.broadcast(stats), "strain")
+    )
+    # A strain whose metric never varies has stDev 0: its z-scores are
+    # null, as in the oracle's SQL division, where ANSI `/` would fail
+    # the whole scan.
+    z_gc = F.try_divide(F.col("GC") - F.col("avg_GC"), F.col("stDev_GC"))
+    z_cai = F.try_divide(F.col("CAI") - F.col("avg_CAI"), F.col("stDev_CAI"))
     df = (
         df.withColumn("z_GC", z_gc)
         .withColumn("z_CAI", z_cai)

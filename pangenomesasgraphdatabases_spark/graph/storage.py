@@ -56,8 +56,9 @@ def materialize_graph(graph: PangenomeGraph, write) -> None:
     r15): Spark SQL reuses exchanges only WITHIN one compiled plan —
     separately submitted DataFrame actions get fresh shuffle IDs, so
     with persist=False the concurrent jobs each recompute the shared
-    fc lineage (correct, and no slower than the old sequential loop,
-    but duplicated).  Do not drop persist=True in the build job
+    fc lineage (duplicated work; over in-memory inputs, duplicated
+    rows, so such a graph's jobs run in turn).  Do not drop
+    persist=True in the build job
     expecting cross-job stage sharing to cover it.  Job descriptions
     are thread-local, so each table labels its own jobs in the UI."""
     from concurrent.futures import ThreadPoolExecutor
@@ -73,9 +74,27 @@ def materialize_graph(graph: PangenomeGraph, write) -> None:
 
     _one("ortholog")
     rest = [n for n in _TABLES if n != "ortholog"]
-    with ThreadPoolExecutor(max_workers=_MATERIALIZE_WORKERS) as pool:
+    # Over in-memory inputs (LocalRelation, e.g. createDataFrame of
+    # pandas frames) concurrent jobs that recompute the unpersisted hub
+    # wrote duplicated rows: 22 of 160 saves of the 332-row fixture
+    # graph, built with persist=False, had extra features,
+    # feature_neighbour or clusters rows (4 workers, 4 cores).  None of
+    # 40 did with the jobs run one at a time, with persist=True, or with
+    # the same rows read from parquet.  In-memory inputs are
+    # driver-sized, so run those jobs in turn.
+    workers = 1 if _reads_local_rows(graph.ortholog) else _MATERIALIZE_WORKERS
+    with ThreadPoolExecutor(max_workers=workers) as pool:
         # list() drains the iterator so the first failure re-raises.
         list(pool.map(_one, rest))
+
+
+def _reads_local_rows(df) -> bool:
+    """True when ``df``'s plan reads an in-memory LocalRelation."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves().iterator()
+    while leaves.hasNext():
+        if leaves.next().nodeName() == "LocalRelation":
+            return True
+    return False
 
 
 def _hadoop_path(spark: SparkSession, path: str):

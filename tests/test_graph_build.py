@@ -116,3 +116,32 @@ def test_strain_stats(pangenome):
     # Insertion strains average higher GC (accessory features at 70).
     assert rows["S01"].avg_GC > rows["S03"].avg_GC
     assert all(r.stDev_GC is not None for r in rows.values())
+
+
+def test_persisted_hub_caches_only_the_columns_its_consumers_read(spark):
+    """build_graph(persist=True) caches one slim hub that every output
+    table derives from.  Each scan of the cache counts its whole block
+    as input, so it must not carry payload columns no consumer reads
+    (``name`` and ``length`` are read from the typed input instead).
+    Synthetic inputs: a plan over the fixture's rows would also match
+    the ``pangenome`` fixture's cached output tables."""
+    from pangenomesasgraphdatabases_spark.graph.build import build_graph
+
+    g = build_graph(spark, *fx.synthetic_feature_tables(spark, 3, 40), persist=True)
+    leaves = g.ortholog._jdf.queryExecution().optimizedPlan().collectLeaves().iterator()
+    hubs = []
+    while leaves.hasNext():
+        leaf = leaves.next()
+        if leaf.nodeName() == "InMemoryRelation":
+            hubs.append(leaf)
+    assert len(hubs) == 1
+    out = hubs[0].output()
+    try:
+        assert sorted(out.apply(i).name() for i in range(out.size())) == sorted(
+            ["feature_id", "strain", "feature_start", "feature_type",
+             "GC", "CAI", "cluster_id", "_is_lonely"]
+        )
+    finally:
+        spark._jsparkSession.sharedState().cacheManager().uncacheQuery(
+            spark._jsparkSession, hubs[0].cacheBuilder().logicalPlan(), False, True
+        )

@@ -61,6 +61,44 @@ def test_bucketed_join_has_no_shuffle(spark, pangenome, tmp_path_factory):
         spark.sql("DROP DATABASE IF EXISTS pg_test CASCADE")
 
 
+def test_gi_scan_shuffles_features_once(spark, tmp_path_factory):
+    """gi_scan joins features straight to the saved ortholog table and
+    the broadcast cluster dimension, so the strain window's exchange is
+    the only one while the tables are small (a join of a derived
+    ortholog-cluster frame is sized as a product, never broadcast
+    statically, and costs two feature_id shuffles).  With broadcasts
+    off (the at-scale shape) nothing is shuffled by cluster_id.  The
+    332-row fixture broadcasts either way, hence the larger synthetic
+    graph."""
+    import re
+
+    from pangenomesasgraphdatabases_spark.graph.build import build_graph
+    from pangenomesasgraphdatabases_spark.graph.fixtures import synthetic_feature_tables
+    from pangenomesasgraphdatabases_spark.graph.gi_scan import gi_scan
+    from pangenomesasgraphdatabases_spark.graph.storage import load_graph, save_graph
+
+    path = str(tmp_path_factory.mktemp("gi_scan_plan"))
+    save_graph(build_graph(spark, *synthetic_feature_tables(spark, 20, 500)), path)
+    g = load_graph(spark, path)
+
+    def keys(df) -> list:
+        return re.findall(r"Exchange hashpartitioning\((\w+)#", _plan(df))
+
+    def scans():
+        return gi_scan(g), gi_scan(g).filter(F.col("strain") == "T0003")
+
+    for df in scans():
+        assert keys(df) == ["strain"]
+    threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        for df in scans():
+            assert "cluster_id" not in keys(df)
+            assert len(keys(df)) <= 3
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+
+
 def test_rgp_interval_expansion_is_block_bucketed(spark, pangenome):
     from pangenomesasgraphdatabases_spark.graph.rgp import find_rgps
 

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 def test_save_load_roundtrip(spark, pangenome, tmp_path_factory):
     import os
 
+    from pangenomesasgraphdatabases_spark.graph.gi_scan import gi_scan
     from pangenomesasgraphdatabases_spark.graph.rgp import find_rgps
     from pangenomesasgraphdatabases_spark.graph.storage import _TABLES, load_graph, save_graph
 
@@ -29,9 +30,9 @@ def test_save_load_roundtrip(spark, pangenome, tmp_path_factory):
         loaded = [(f.name, f.dataType.simpleString()) for f in getattr(g2, name).schema]
         assert loaded == built, name
 
-    # Multiset comparison on feature_id, not bare counts: one r16 full-suite
-    # run read 342 rows back for a 332-row frame (unreproducible in 20
-    # isolated roundtrips + cache churn); if that race ever recurs, the
+    # Multiset comparison on feature_id, not bare counts: concurrent table
+    # jobs over these in-memory inputs once wrote 342 rows for a 332-row
+    # frame (see materialize_graph); if that race ever recurs, the
     # failure must name the duplicated/missing ids, not just the delta.
     before_ids = sorted(r.feature_id for r in pangenome.features.select("feature_id").collect())
     after_ids = sorted(r.feature_id for r in g2.features.select("feature_id").collect())
@@ -46,6 +47,10 @@ def test_save_load_roundtrip(spark, pangenome, tmp_path_factory):
     assert sorted(g2.features.columns) == sorted(pangenome.features.columns)
     assert g2.cluster_neighbour.count() == pangenome.cluster_neighbour.count()
 
+    # The GI scan reads ortholog and clusters straight from the saved
+    # tables: every column of every row matches the built graph's scan.
+    assert sorted(gi_scan(g2).collect()) == sorted(gi_scan(pangenome).collect())
+
     before = {
         (r.StrainName, r.Anchor1ID, r.Anchor2ID, r.InsertionStart)
         for r in find_rgps(pangenome).collect()
@@ -55,6 +60,37 @@ def test_save_load_roundtrip(spark, pangenome, tmp_path_factory):
         for r in find_rgps(g2).collect()
     }
     assert before == after and before
+
+
+def test_materialize_graph_runs_in_memory_jobs_in_turn(spark, pangenome):
+    """Concurrent table jobs recomputing the unpersisted hub over
+    in-memory (LocalRelation) inputs wrote duplicated rows, so
+    materialize_graph runs them one at a time for such a graph; over
+    scanned inputs they still overlap."""
+    import threading
+    import time
+
+    from pangenomesasgraphdatabases_spark.graph.build import build_graph
+    from pangenomesasgraphdatabases_spark.graph.fixtures import synthetic_feature_tables
+    from pangenomesasgraphdatabases_spark.graph.storage import materialize_graph
+
+    def peak_concurrency(graph) -> int:
+        lock = threading.Lock()
+        active, peak = [0], [0]
+
+        def write(df, name):
+            with lock:
+                active[0] += 1
+                peak[0] = max(peak[0], active[0])
+            time.sleep(0.2)
+            with lock:
+                active[0] -= 1
+
+        materialize_graph(graph, write)
+        return peak[0]
+
+    assert peak_concurrency(pangenome) == 1
+    assert peak_concurrency(build_graph(spark, *synthetic_feature_tables(spark, 3, 40))) > 1
 
 
 def test_load_graph_requires_schema_file(spark, tmp_path):

@@ -193,6 +193,16 @@ def main():
     # Spill to /tmp, not the repo cwd: a runaway plan once left 42 GB
     # of .tmp/ blocks inside the repo and wedged git.
     con.execute("PRAGMA temp_directory='/tmp/duckdb_oracle_spill'")
+    # DuckDB and the Spark JVM share the host.  DuckDB's defaults (80%
+    # of RAM, every core) on top of the session heap (60% of RAM)
+    # overcommit a small host: a full sf0.1 run on 4 cores and 15 GiB
+    # had the JVM SIGKILLed partway.  Give DuckDB half of what the heap
+    # leaves (the other half is JVM off-heap, Python workers and this
+    # process) and the session's cores.
+    host_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    heap_mb = spark._jvm.java.lang.Runtime.getRuntime().maxMemory() >> 20
+    con.execute(f"SET memory_limit='{max(512, (host_mb - heap_mb) // 2)}MB'")
+    con.execute(f"SET threads={spark.sparkContext.defaultParallelism}")
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
