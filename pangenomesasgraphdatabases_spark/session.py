@@ -31,47 +31,18 @@ def get_spark(
     app_name: str = "pangenome-spark",
     cpus: str | int | None = None,
     shuffle_partitions: int | None = None,
-    initial_partitions: int | None = None,
 ) -> SparkSession:
     cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS") or "*"
-    # AQE initial width precedence (ADVICE r8: the env var silently
-    # overrode an explicitly passed width and could leak across
-    # same-process get_spark calls): explicit initial_partitions arg >
-    # explicit shuffle_partitions arg > SPARK_GRAFT_INITIAL_PARTITIONS
-    # env (harness-level knob for callers that can't thread an arg) >
-    # the 32 small-scale default.
-    if initial_partitions is not None:
-        initial = initial_partitions
-    elif shuffle_partitions is not None:
-        initial = shuffle_partitions
-    else:
-        initial = int(
-            os.environ.get("SPARK_GRAFT_INITIAL_PARTITIONS", "32")
-        )
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
+        # AQE coalesces from this width but never splits, so callers
+        # size it to their input (the 30x graph runs pass 256).  The
+        # default stays 32: plans that localCheckpoint between rounds
+        # pin the initial width across every round (SCALE.md sweep).
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or 32))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # AQE can COALESCE small shuffle partitions but never splits
-        # oversized ones (absent join skew), so the INITIAL partition
-        # count is the scale ceiling: at 30x graph scale (138M
-        # features) 32 initial partitions left ~4M rows/partition and
-        # the graph-build slope went superlinear (346.7s; 181.6s at
-        # 256 — SCALE.md r8).  But wider initial shuffles are NOT a
-        # free default: iterative plans that localCheckpoint between
-        # rounds pin the inflated partition count across every
-        # iteration (doc_ngram_jaccard_dedup measured 3x slower at
-        # sf0.1 with 128 vs 32 — the measured sweep is in SCALE.md).
-        # So the knob is sized per input scale by the caller (the
-        # scale harness sets 256 for the 30x graph runs), exactly as
-        # a 100 TB deployment sizes spark.sql.shuffle.partitions to
-        # its data, and the session default stays small-scale-tuned.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-            str(initial),
-        )
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY") or _default_heap())

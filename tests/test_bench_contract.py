@@ -14,25 +14,31 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF = "/root/testdata/sf0.001"
 
 
-def _load_bench():
-    spec = importlib.util.spec_from_file_location(
-        "bench", os.path.join(REPO, "bench.py")
-    )
+def _load(name: str, relpath: str):
+    spec = importlib.util.spec_from_file_location(name, os.path.join(REPO, relpath))
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
     return mod
 
 
+def _load_bench():
+    return _load("bench", "bench.py")
+
+
 def test_headline_names_all_registered():
-    """Every HEADLINE entry must resolve in the registry — a rename
-    or removal must fail here, not silently shrink the bench."""
+    """Every HEADLINE and scale-bench entry must resolve in the
+    registry — a rename or removal must fail here, not silently shrink
+    the bench (bench.py skips unknown names; bench_scale.py raises
+    only when it reaches one)."""
     from pangenomesasgraphdatabases_spark.queries.registry import all_queries
 
     bench = _load_bench()
+    scale = _load("bench_scale", "tools/bench_scale.py")
     registry = all_queries()
-    missing = [n for n in bench.HEADLINE if n not in registry]
-    assert not missing, f"headline queries not in registry: {missing}"
-    assert len(set(bench.HEADLINE)) == len(bench.HEADLINE), "duplicate headline"
+    for names in (bench.HEADLINE, scale.QUERIES):
+        missing = [n for n in names if n not in registry]
+        assert not missing, f"bench queries not in registry: {missing}"
+        assert len(set(names)) == len(names), "duplicate bench query"
 
 
 def test_read_steal_is_nonnegative_int():
@@ -56,15 +62,7 @@ def test_compact_line_stays_parseable():
     assert "\n" not in line
     assert len(line) <= 1500, f"compact bench line {len(line)} B > 1.5 KB budget"
     parsed = json.loads(line)
-    assert set(parsed) == {
-        "metric",
-        "value",
-        "unit",
-        "queries",
-        "sf",
-        "fixed_total_sec",
-        "build_min_sec",
-    }
+    assert set(parsed) == {"metric", "value", "unit", "queries", "sf"}
     assert list(parsed["queries"]) == names
 
 
@@ -98,3 +96,32 @@ def test_rep_counters_repeat(spark):
     assert first == second, (first, second)
     assert reps[0]["jobs"] > 0 and reps[0]["tasks"] > 0
     assert set(reps[0]) == {"wall_s", "steal_jiffies", *bench.COUNTERS}
+
+
+def test_graph_build_reps_repeat(spark):
+    """Two reps of the shared graph-build helper (bench.py's build
+    entry and bench_scale.py's graph legs) submit the same jobs and
+    tasks and shuffle the same bytes.  Broadcast joins are off for the
+    test: with them on, AQE turns the clusters table's reference join
+    into a broadcast join before or after the other side's shuffle
+    stage starts, depending on which stage finishes first, and about
+    one rep in ten runs that extra 1-task shuffle job."""
+    from pangenomesasgraphdatabases_spark.graph.fixtures import synthetic_feature_tables
+
+    bench = _load_bench()
+    f, c, comp = synthetic_feature_tables(spark, 3, 40)
+    probe = bench.new_probe(spark)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        reps = [
+            bench.timed_rep(spark, probe, lambda: bench.build_materialized(spark, f, c, comp))
+            for _ in range(2)
+        ]
+    finally:
+        spark.conf.set(key, old)
+    stable = ("jobs", "tasks", "shuffle_write_mb")
+    first, second = ({k: r[k] for k in stable} for r in reps)
+    assert first == second, (first, second)
+    assert reps[0]["jobs"] > 0

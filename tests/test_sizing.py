@@ -55,6 +55,16 @@ def test_session_floor_reads_conf(spark):
     )
 
 
+def test_session_has_one_shuffle_width(spark):
+    """``spark.sql.shuffle.partitions`` is the session's only width
+    knob: no AQE initial partition number is set, so AQE starts every
+    shuffle at the shuffle-partitions width."""
+    key = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
+    assert spark.conf.get(key, None) is None
+    width = spark._jsparkSession.sessionState().conf().numShufflePartitions()
+    assert width == int(spark.conf.get("spark.sql.shuffle.partitions"))
+
+
 def test_sized_self_join_has_no_extra_exchange(spark):
     """A sort-merge self-join over a frame explicitly
     hash-repartitioned on the join key at a width ABOVE the session

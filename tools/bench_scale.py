@@ -7,29 +7,38 @@ Runs each heavy sf-table query against /root/testdata/sf0.1 and
 RGP pipeline at 770x6000 vs 770x60000 features, then prints one JSON
 line of results (SCALE.md records them by hand).
 
+Table queries are measured as bench.py measures them: a warm-up at
+sf0.001, then ``bench.timed_rep`` reps through the noop sink, each
+carrying its wall time, steal and status-store counters, summarized
+by ``bench.summarize``.  The graph build goes through
+``bench.build_materialized`` (overlapped table jobs); its RGP rep reads
+the graph the build rep cached, so the graph legs keep their own loop.
+
 A scaling factor near the data ratio (10x) means linear data-parallel
 behavior; sublinear means fixed overheads still dominate at sf0.1;
 superlinear needs an explanation (pair blowup, skew, driver
 bottleneck) or a fix.
 
-Usage: python tools/bench_scale.py [reps] [--graph-only]
-       (--graph-only runs just the graph-build + RGP pipeline pair —
-       combine with SPARK_GRAFT_GRAPH_PER_STRAIN=180000 for the 30x
-       graph point without re-timing the 28 table queries)
+Usage: python tools/bench_scale.py [reps] [--graph-only | --tables-only]
+       (--graph-only runs just the graph-build + RGP pipeline pair on
+       a 256-wide shuffle — combine with
+       SPARK_GRAFT_GRAPH_PER_STRAIN=180000 for the 30x graph point
+       without re-timing the table queries)
 """
 
 from __future__ import annotations
 
 import json
 import os
-import statistics
 import sys
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from bench import _read_steal
+from bench import _noop, _read_steal, build_materialized, new_probe, summarize, timed_rep
+from pangenomesasgraphdatabases_spark.graph.fixtures import synthetic_feature_tables
+from pangenomesasgraphdatabases_spark.graph.rgp import find_rgps
 from pangenomesasgraphdatabases_spark.queries.registry import all_queries
 from pangenomesasgraphdatabases_spark.session import get_spark
 
@@ -107,20 +116,6 @@ GRAPH_BIG = (
 )
 
 
-def _force(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
-
-
-def _time_reps(fn, reps: int, clear) -> list[float]:
-    out = []
-    for _ in range(reps):
-        t0 = time.time()
-        fn()
-        out.append(round(time.time() - t0, 3))
-        clear()
-    return out
-
-
 def main() -> None:
     args = [
         a
@@ -133,16 +128,14 @@ def main() -> None:
     # multi-minute 770xN graph legs).
     tables_only = "--tables-only" in sys.argv[1:]
     reps = int(args[0]) if args else 2
-    # Size the initial shuffle width to the graph scale (AQE coalesces
-    # back down; it never splits) — the same sizing a real deployment
-    # does per input volume.  At 138M features (30x) 32 initial
-    # partitions go memory-bound: 346.7s build vs 181.6s at 256
-    # (SCALE.md r8).  Passed as an explicit argument (ADVICE r8: the
-    # setdefault-into-os.environ pattern leaked into later get_spark
-    # calls in the same process); env still overrides for sweeps.
-    initial = int(os.environ.get("SPARK_GRAFT_INITIAL_PARTITIONS", "256")) if graph_only else None
-    spark = get_spark("pangenome-scale-bench", initial_partitions=initial)
+    # AQE coalesces a shuffle but never splits one, so the graph legs
+    # size the width to the graph: at 138M features (30x) 32 partitions
+    # went memory-bound, 346.7s build vs 181.6s at 256 (SCALE.md r8).
+    spark = get_spark(
+        "pangenome-scale-bench", shuffle_partitions=256 if graph_only else None
+    )
     registry = all_queries()
+    probe = new_probe(spark)
     clear = spark.catalog.clearCache
 
     # Optional subset: SPARK_GRAFT_SCALE_QUERIES=a,b,c restricts the
@@ -157,25 +150,21 @@ def main() -> None:
     results: dict[str, dict] = {}
     for name in [] if graph_only else queries:
         q = registry[name]
-        _force(q.fn(spark, WARM))  # codegen warmup
+        _noop(q.fn(spark, WARM))  # codegen warmup
         clear()
-        small = _time_reps(lambda: _force(q.fn(spark, SMALL)), reps, clear)
-        big = _time_reps(lambda: _force(q.fn(spark, BIG)), reps, clear)
-        s, b = statistics.median(small), statistics.median(big)
+        small, big = (
+            summarize([timed_rep(spark, probe, lambda: _noop(q.fn(spark, d))) for _ in range(reps)])
+            for d in (SMALL, BIG)
+        )
+        s, b = small["median_s"], big["median_s"]
         results[name] = {
             "sf0_1_sec": s,
             "sf1_sec": b,
             "factor": round(b / s, 2),
-            "reps_small": small,
-            "reps_big": big,
+            "small": small,
+            "big": big,
         }
         print(f"{name}: {s:.2f}s -> {b:.2f}s ({b / s:.1f}x)", file=sys.stderr)
-
-    from pangenomesasgraphdatabases_spark.graph.build import build_graph
-    from pangenomesasgraphdatabases_spark.graph.fixtures import (
-        synthetic_feature_tables,
-    )
-    from pangenomesasgraphdatabases_spark.graph.rgp import find_rgps
 
     # Co-tenant bursts cost ~3x a clean rep (SCALE.md), so each graph
     # rep carries its own steal delta and MIN-of-reps is the reported
@@ -194,22 +183,11 @@ def main() -> None:
             for src in (f, c, comp):
                 src.persist().count()
             s0, t0 = _read_steal(), time.time()
-            g = build_graph(spark, f, c, comp, persist=True)
-            for tbl in (
-                "features",
-                "clusters",
-                "ortholog",
-                "feature_neighbour",
-                "cluster_neighbour",
-                "feature_in_strain",
-                "cluster_in_strain",
-                "strains",
-            ):
-                _force(getattr(g, tbl))
+            g = build_materialized(spark, f, c, comp)
             out["build"].append(round(time.time() - t0, 3))
             out["build_steal"].append(_read_steal() - s0)
             s0, t0 = _read_steal(), time.time()
-            _force(find_rgps(g, n_strains=n_strains))
+            _noop(find_rgps(g, n_strains=n_strains))
             out["rgp"].append(round(time.time() - t0, 3))
             out["rgp_steal"].append(_read_steal() - s0)
             clear()

@@ -208,7 +208,7 @@ def main():
 
     qs = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
-    n_pass = n_fail = n_noracle = 0
+    n_pass = n_fail = 0
     for name, fn in qs.items():
         if only and name not in only:
             continue
@@ -231,16 +231,6 @@ def main():
                 "sec": round(time.time() - t0, 1),
             }
             n_fail += 1
-            continue
-        if name not in oracles:
-            print(f"SKIP {name}: no oracle (rows-only) — {len(spdf)} rows "
-                  f"[{time.time()-t0:.1f}s]", flush=True)
-            ledger[name] = {
-                "status": "rows_only",
-                "rows": len(spdf),
-                "sec": round(time.time() - t0, 1),
-            }
-            n_noracle += 1
             continue
         try:
             rel = con.sql(oracles[name])
@@ -290,7 +280,7 @@ def main():
                 "sec": round(time.time() - t0, 1),
             }
             n_pass += 1
-    print(f"\n{n_pass} pass, {n_fail} fail, {n_noracle} rows-only")
+    print(f"\n{n_pass} pass, {n_fail} fail")
     if out_path:
         import json
 
@@ -300,7 +290,6 @@ def main():
                     "sf_dir": sf_dir,
                     "n_pass": n_pass,
                     "n_fail": n_fail,
-                    "n_rows_only": n_noracle,
                     "queries": ledger,
                 },
                 fh,

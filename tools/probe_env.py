@@ -1,8 +1,11 @@
 """Probe: are the driver-checked queries bit-stable under a HOSTILE
 SparkSession config?  The external driver runs our ``queries()`` with
 its own session — we don't control its timezone, parallelism, or Arrow
-setting.  This runs each named query under two deliberately different
-sessions and compares canonical value multisets.
+setting.  This runs each named query under two sessions and compares
+canonical value multisets: "std" is our own ``get_spark`` session (its
+cores taken from the host), and "hostile" is deliberately NOT built by
+``get_spark``, so it plays the external driver with a different
+timezone, parallelism and Arrow setting.
 
 Usage: python tools/probe_env.py [sf_dir] [query ...]
 """
@@ -30,8 +33,8 @@ import sys, json, hashlib
 repo, mode, sf = sys.argv[1:4]
 names = sys.argv[4:]
 sys.path.insert(0, repo)
-from pyspark.sql import SparkSession
 if mode == "hostile":
+    from pyspark.sql import SparkSession
     b = (SparkSession.builder.master("local[7]")
          .appName("probe-hostile")
          .config("spark.sql.shuffle.partitions", "7")
@@ -39,14 +42,10 @@ if mode == "hostile":
          .config("spark.sql.execution.arrow.pyspark.enabled", "false")
          .config("spark.default.parallelism", "7")
          .config("spark.ui.enabled", "false"))
+    spark = b.getOrCreate()
 else:
-    b = (SparkSession.builder.master("local[32]")
-         .appName("probe-std")
-         .config("spark.sql.shuffle.partitions", "32")
-         .config("spark.sql.session.timeZone", "UTC")
-         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-         .config("spark.ui.enabled", "false"))
-spark = b.getOrCreate()
+    from pangenomesasgraphdatabases_spark.session import get_spark
+    spark = get_spark("probe-std")
 spark.sparkContext.setLogLevel("ERROR")
 import __spark_entry__ as em
 qs = em.queries()
