@@ -11,7 +11,7 @@ the commit marker — a save that fails partway leaves none, and
 inference, no parallel partition listing).
 
 Co-located join layouts live in ``save_bucketed_tables`` (saveAsTable
-path); ``compact_parquet`` rewrites small-file directories.
+path).
 """
 
 from __future__ import annotations
@@ -194,41 +194,3 @@ def save_bucketed_tables(
         .sortBy("cluster_id")
         .saveAsTable(f"{database}.clusters_by_cid")
     )
-
-
-def compact_parquet(
-    spark: SparkSession, path: str, target_file_bytes: int = 128 * 1024 * 1024
-) -> int:
-    """Small-files compaction: rewrite a parquet directory into
-    ceil(total_bytes / target) files; returns the new file count.
-
-    Streaming sinks and incremental appends accumulate files far below
-    the scan-efficient size; at 100 TB that poisons listing time and
-    task planning.  Periodic compaction is the plain-parquet equivalent
-    of Delta/Iceberg OPTIMIZE.  The rewrite lands in a temp directory
-    first; the swap is rename-aside (path -> path__old, tmp -> path,
-    delete path__old) so the original data survives every crash point:
-    a failure before the swap-in rename leaves `path__old` (or `path`)
-    intact and recoverable, never a window with no table at all
-    (delete-then-rename had exactly that window — ADVICE r2)."""
-    import math
-
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    total = fs.getContentSummary(hpath).getLength()
-    n = max(1, math.ceil(total / target_file_bytes))
-    df = spark.read.parquet(path)
-    tmp_p = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + "__compact_tmp")
-    old_p = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + "__old")
-    df.repartition(n).write.mode("overwrite").parquet(tmp_p.toString())
-    if fs.exists(old_p):  # leftover from an earlier crash after swap-in
-        fs.delete(old_p, True)
-    if not fs.rename(hpath, old_p):
-        raise IOError(f"compact_parquet: cannot move {path} aside")
-    if not fs.rename(tmp_p, hpath):
-        # roll the original straight back; nothing was lost.
-        fs.rename(old_p, hpath)
-        raise IOError(f"compact_parquet: cannot swap in compacted {path}")
-    fs.delete(old_p, True)
-    return n

@@ -57,8 +57,7 @@ via ``with_bitscore(..., gapped=True)`` — the ungapped lambda/K do
 not apply to gapped scores), so a two-locus homology on far-apart
 diagonals yields two hits, matching the per-subject description rows
 (best score per subject) readBlast consumes at
-extendingDB_performingBlast.py:82-105.  ``run_blastn`` remains the
-exact-parity path when a binary exists.
+extendingDB_performingBlast.py:82-105.
 """
 
 from __future__ import annotations
@@ -598,9 +597,8 @@ def with_bitscore(
 
 
 def builtin_hits_as_blast_table(hits_with_bits: DataFrame) -> DataFrame:
-    """Adapter to the ``blast_hits_from_xml`` output surface so
-    ``enrich_clusters_with_blast`` runs unchanged on builtin hits:
-    (cluster_id, title, score, evalue) — ONE row per (cluster,
+    """The hits table ``graph.enrich.enrich_clusters_with_blast``
+    reads: (cluster_id, title, score, evalue) — ONE row per (cluster,
     subject), keeping the best HSP's score (and its e-value: bit
     score and e-value are monotone images of each other, so max
     score and min evalue name the same HSP).  The reference's

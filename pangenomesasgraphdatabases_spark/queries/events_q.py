@@ -2270,9 +2270,8 @@ def events_windowed_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame
 
     Scale shape: sketch cells are keyed (window, r, cell) — bounded
     state per window, additive merge across shards, exactly what a
-    foreachBatch store would persist (the CMS twin of
-    `hll_register_store_sink`); the candidate estimate joins on the
-    same keys.  A production monitor drops the exact tier and reports
+    foreachBatch store would persist; the candidate estimate joins on
+    the same keys.  A production monitor drops the exact tier and reports
     only est >= threshold."""
     e = table(spark, sf_dir, "events").select(
         F.unix_timestamp(F.date_trunc("hour", "ts"))

@@ -464,7 +464,7 @@ _GFF3_ESCAPES = (
 # Qualifiers NOT repeated as generic attributes: locus_tag/product
 # already have dedicated emission slots, and translation is the
 # one qualifier bp_genbank2gff3.pl consumers routinely drop for
-# size (the protein is derivable; pass exclude=() to keep it).
+# size (the protein is derivable).
 _ATTR_EXCLUDE = ("locus_tag", "product", "translation")
 
 
@@ -474,12 +474,7 @@ def _gff3_escape(col):
     return col
 
 
-def genbank_to_gff(
-    spark: SparkSession,
-    path: str,
-    extra_attrs: bool = True,
-    exclude: tuple[str, ...] = _ATTR_EXCLUDE,
-) -> DataFrame:
+def genbank_to_gff(spark: SparkSession, path: str) -> DataFrame:
     """GFF-parity projection (the bp_genbank2gff3.pl output contract):
     exactly gff.GFF_COLS, so downstream consumers of
     parse_gff_features can run unchanged on GenBank input.  Commas are
@@ -497,14 +492,13 @@ def genbank_to_gff(
     the documented remaining delta from BioPerl's per-exon CDS
     rows.
 
-    ``extra_attrs=True`` (default) carries EVERY remaining qualifier
-    through as a GFF3 attribute the way bp_genbank2gff3.pl does —
-    sorted by key, values percent-encoded per the GFF3 reserved set
-    (';' '=' '&' ',' '%'), repeated qualifiers (multiple /db_xref)
-    comma-joined as GFF3 multi-values, flag qualifiers (/pseudo) as
-    ``key=true``.  ``exclude`` names qualifiers to drop
-    (default: locus_tag/product, which have dedicated slots, and the
-    bulky derivable translation)."""
+    Every remaining qualifier goes through as a GFF3 attribute the way
+    bp_genbank2gff3.pl does — sorted by key, values percent-encoded
+    per the GFF3 reserved set (';' '=' '&' ',' '%'), repeated
+    qualifiers (multiple /db_xref) comma-joined as GFF3 multi-values,
+    flag qualifiers (/pseudo) as ``key=true`` — except those in
+    ``_ATTR_EXCLUDE`` (locus_tag/product, which have dedicated slots,
+    and the bulky derivable translation)."""
     feats = read_genbank_features(spark, path)
     is_multi = (F.size("segments") > 1) & (F.col("feature_type") != "CDS")
     # ID/attributes below derive from the ENVELOPE columns (so the
@@ -594,35 +588,30 @@ def genbank_to_gff(
             F.col("gb_parent"),
         ),
     ).otherwise(F.lit(""))
-    if extra_attrs:
-        entries = F.array_sort(F.map_entries("qualifiers"))
-        kept = F.filter(
-            entries, lambda e: ~e.getField("key").isin(*exclude)
-        ) if exclude else entries
-        extra = F.array_join(
-            F.transform(
-                kept,
-                lambda e: F.concat(
-                    _gff3_escape(e.getField("key")),
-                    F.lit("="),
-                    # multi-values (\x1f-joined at parse) escape each
-                    # part INDEPENDENTLY, then comma-join per GFF3
-                    F.array_join(
-                        F.transform(
-                            F.split(e.getField("value"), "\x1f"),
-                            _gff3_escape,
-                        ),
-                        ",",
+    entries = F.array_sort(F.map_entries("qualifiers"))
+    kept = F.filter(entries, lambda e: ~e.getField("key").isin(*_ATTR_EXCLUDE))
+    extra = F.array_join(
+        F.transform(
+            kept,
+            lambda e: F.concat(
+                _gff3_escape(e.getField("key")),
+                F.lit("="),
+                # multi-values (\x1f-joined at parse) escape each
+                # part INDEPENDENTLY, then comma-join per GFF3
+                F.array_join(
+                    F.transform(
+                        F.split(e.getField("value"), "\x1f"),
+                        _gff3_escape,
                     ),
+                    ",",
                 ),
             ),
-            ";",
-        )
-        extra_tail = F.when(
-            F.length(extra) > 0, F.concat(F.lit(";"), extra)
-        ).otherwise(F.lit(""))
-    else:
-        extra_tail = F.lit("")
+        ),
+        ";",
+    )
+    extra_tail = F.when(
+        F.length(extra) > 0, F.concat(F.lit(";"), extra)
+    ).otherwise(F.lit(""))
     return feats.filter(F.col("feature_type") != "source").select(
         "file",
         "seqid",

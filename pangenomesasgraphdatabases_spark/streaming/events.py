@@ -167,25 +167,6 @@ def run_available_now(
     return spark.table(name)
 
 
-def foreach_batch_parquet_sink(result: DataFrame, path: str, checkpoint: str):
-    """Idempotent micro-batch parquet sink (foreachBatch): every batch
-    overwrites its own `batch_id=N` subdirectory, so a batch retried
-    after a failure REPLACES its partial output instead of appending a
-    duplicate — end-to-end exactly-once onto plain parquet when
-    combined with the checkpoint's offset log.  Readers get `batch_id`
-    back as a partition column via standard partition discovery."""
-
-    def write_batch(df: DataFrame, batch_id: int) -> None:
-        df.write.mode("overwrite").parquet(f"{path}/batch_id={batch_id}")
-
-    return (
-        result.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def interval_join_stream(
     events: DataFrame,
     watermark: str = "30 minutes",
@@ -307,41 +288,3 @@ def windowed_topk_stream(
         .start()
     )
     return q, ranked_reader
-
-
-def hll_register_store_sink(
-    stream: DataFrame, key: str, group_cols: list, path: str, checkpoint: str, p: int = 6
-):
-    """foreachBatch sink maintaining a PERSISTENT HyperLogLog register
-    store on plain parquet (the production shape of a streaming
-    distinct-count: per-batch partial sketches are appended under
-    their batch_id — idempotent on retry, each batch overwrites only
-    its own directory — and readers max-merge partials on read;
-    `read_merged_registers` is that reader, and doubles as the
-    compaction job when its output replaces the partials).  State per
-    group is bounded at 2^p rows regardless of stream volume."""
-    from pangenomesasgraphdatabases_spark.queries.events_q import hll_registers
-
-    def write_batch(df: DataFrame, batch_id: int) -> None:
-        regs = hll_registers(df, key, group_cols, p)
-        regs.write.mode("overwrite").parquet(f"{path}/batch_id={batch_id}")
-
-    return (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def read_merged_registers(spark, path: str, group_cols: list) -> DataFrame:
-    """Max-merge all per-batch partial register files into the current
-    sketch — the read path of the register store (run it once and
-    rewrite to compact)."""
-    from pyspark.sql import functions as F
-
-    return (
-        spark.read.parquet(path)
-        .groupBy(*group_cols, "reg")
-        .agg(F.max("max_rho").alias("max_rho"))
-    )

@@ -9,7 +9,6 @@ from pyspark.sql import functions as F
 
 from pangenomesasgraphdatabases_spark.graph import fixtures as fx
 from pangenomesasgraphdatabases_spark.graph.enrich import (
-    blast_hits_from_xml,
     composition_metrics,
     enrich_clusters_with_blast,
     enrich_features_with_composition,
@@ -50,22 +49,15 @@ def test_composition_and_writeback(spark, pangenome):
 
 
 def test_blast_parse_and_enrich(spark, pangenome):
-    xml = """<BlastOutput><Iteration><Hit>
-      <Hit_def>Pseudomonas phage X</Hit_def>
-      <Hsp_bit-score>123.4</Hsp_bit-score>
-      <Hsp_evalue>1e-30</Hsp_evalue>
-    </Hit><Hit>
-      <Hit_def>Phage Y</Hit_def>
-      <Hsp_bit-score>50.1</Hsp_bit-score>
-      <Hsp_evalue>0.002</Hsp_evalue>
-    </Hit></Iteration></BlastOutput>"""
-    hits_in = spark.createDataFrame([("CORE_10", xml)], ["cluster_id", "xml"])
-    hits = blast_hits_from_xml(hits_in)
-    got = hits.collect()
-    assert {(r.title, r.score) for r in got} == {
-        ("Pseudomonas phage X", 123.4),
-        ("Phage Y", 50.1),
-    }
+    # The (cluster_id, title, score, evalue) surface of
+    # seed_align.builtin_hits_as_blast_table.
+    hits = spark.createDataFrame(
+        [
+            ("CORE_10", "Pseudomonas phage X", 123.4, 1e-30),
+            ("CORE_10", "Phage Y", 50.1, 0.002),
+        ],
+        ["cluster_id", "title", "score", "evalue"],
+    )
     enriched = enrich_clusters_with_blast(pangenome.clusters, hits)
     r = enriched.filter(F.col("cluster_id") == "CORE_10").collect()[0]
     assert r.hasBlastVirusHit is True
@@ -151,64 +143,3 @@ def test_core_clusters_per_group(spark, pangenome):
     assert by_id["ACC_1"].group_size == 2
     assert by_id["CORE_10"].number_genomes == 8
     assert by_id["ACC_3"].description == "consensus ACC_3"
-
-
-def test_blast_pipe_boundary(spark, tmp_path):
-    """S11 execution path: a fake blastn shell stub proves the
-    partition-wise subprocess plumbing end-to-end (stdin FASTA in,
-    outfmt-5 XML out, one process per query), and the boundary raises
-    cleanly when no binary is given."""
-    import pytest
-
-    from pangenomesasgraphdatabases_spark.graph.enrich import (
-        blast_hits_from_xml,
-        run_blastn,
-    )
-
-    stub = tmp_path / "blastn"
-    # Echoes the query header back as the hit title so per-row routing
-    # is observable; asserts the expected CLI surface is passed.
-    stub.write_text(
-        "#!/bin/sh\n"
-        'case "$*" in *"-outfmt 5"*) ;; *) echo "bad args" >&2; exit 2;; esac\n'
-        "qid=$(head -n1 | sed 's/^>//')\n"
-        "cat <<XML\n"
-        "<BlastOutput><Iteration><Hit>\n"
-        "<Hit_def>hit for $qid</Hit_def>\n"
-        "<Hsp_bit-score>99.5</Hsp_bit-score>\n"
-        "<Hsp_evalue>1e-10</Hsp_evalue>\n"
-        "</Hit></Iteration></BlastOutput>\n"
-        "XML\n"
-    )
-    stub.chmod(0o755)
-
-    seqs = spark.createDataFrame(
-        [("CL_1", "ACGTACGT"), ("CL_2", "GGGGCCCC")],
-        ["cluster_id", "sequence"],
-    )
-    xml_df = run_blastn(seqs, str(stub), db="virusdb")
-    hits = blast_hits_from_xml(xml_df).collect()
-    assert {(r.cluster_id, r.title, r.score) for r in hits} == {
-        ("CL_1", "hit for CL_1", 99.5),
-        ("CL_2", "hit for CL_2", 99.5),
-    }
-
-    with pytest.raises(NotImplementedError, match="blast_bin"):
-        run_blastn(seqs, None, db="virusdb")
-    with pytest.raises(FileNotFoundError):
-        run_blastn(seqs, str(tmp_path / "missing"), db="virusdb")
-
-
-def test_blast_pipe_propagates_failure(spark, tmp_path):
-    """A nonzero blastn exit must fail the job loudly, not yield empty
-    XML."""
-    import pytest
-
-    from pangenomesasgraphdatabases_spark.graph.enrich import run_blastn
-
-    bad = tmp_path / "blastn"
-    bad.write_text("#!/bin/sh\necho 'DB not found' >&2\nexit 1\n")
-    bad.chmod(0o755)
-    seqs = spark.createDataFrame([("CL_1", "ACGT")], ["cluster_id", "sequence"])
-    with pytest.raises(Exception, match="DB not found"):
-        run_blastn(seqs, str(bad), db="nope").collect()

@@ -888,8 +888,7 @@ def test_gff_qualifier_passthrough_escaping_and_multivalues(spark, tmp_path):
     as a sorted GFF3 attribute — repeated /db_xref comma-joins as a
     GFF3 multi-value, flag /pseudo becomes pseudo=true, reserved
     characters percent-encode per the GFF3 set (with %25 first so
-    escapes never double), translation is dropped by default, and
-    extra_attrs=False restores the minimal surface."""
+    escapes never double), and translation is dropped."""
     from pangenomesasgraphdatabases_spark.sources.genbank import (
         genbank_to_gff,
     )
@@ -922,12 +921,6 @@ def test_gff_qualifier_passthrough_escaping_and_multivalues(spark, tmp_path):
         ";pseudo=true"
     )
     assert "translation" not in attrs
-    minimal = genbank_to_gff(
-        spark, str(tmp_path / "q.gbk"), extra_attrs=False
-    ).collect()[0]
-    assert minimal.attributes == (
-        "ID=CDS:Q_0001;locus_tag=Q_0001;product=widget"
-    )
 
 
 def test_flag_vs_empty_qualifier_distinguished(spark, tmp_path):

@@ -3,7 +3,6 @@
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 
 def test_save_load_roundtrip(spark, pangenome, tmp_path_factory):
@@ -101,39 +100,3 @@ def test_load_graph_requires_schema_file(spark, tmp_path):
     spark.range(3).write.parquet(str(tmp_path / "features"))
     with pytest.raises(FileNotFoundError, match="_schema.json"):
         load_graph(spark, str(tmp_path))
-
-
-def test_compact_parquet_reduces_files(spark, tmp_path):
-    from pangenomesasgraphdatabases_spark.graph.storage import compact_parquet
-
-    path = str(tmp_path / "frag")
-    df = spark.range(10_000).withColumn("v", F.col("id") * 2)
-    df.repartition(40).write.parquet(path)  # 40 tiny files
-    before = sorted(r.id for r in spark.read.parquet(path).collect())
-
-    n = compact_parquet(spark, path, target_file_bytes=10**9)
-    assert n == 1
-    import glob
-
-    assert len(glob.glob(f"{path}/part-*.parquet")) == 1
-    after = sorted(r.id for r in spark.read.parquet(path).collect())
-    assert after == before  # lossless rewrite
-
-
-def test_compact_parquet_recovers_stale_old_dir(spark, tmp_path):
-    """Rename-aside swap (ADVICE r2): a leftover `path__old` from a
-    crash after swap-in must not block the next compaction, and the
-    table stays readable with identical contents afterwards."""
-    from pangenomesasgraphdatabases_spark.graph.storage import compact_parquet
-
-    path = str(tmp_path / "t")
-    spark.range(1000).repartition(8).write.parquet(path)
-    before = sorted(r.id for r in spark.read.parquet(path).collect())
-    # simulate debris from an earlier crash
-    spark.range(5).write.parquet(path + "__old")
-    compact_parquet(spark, path, target_file_bytes=10**9)
-    after = sorted(r.id for r in spark.read.parquet(path).collect())
-    assert after == before
-    import os
-    assert not os.path.exists(path + "__old"), "debris cleaned up"
-    assert not os.path.exists(path + "__compact_tmp")

@@ -78,33 +78,6 @@ def test_dedup_stream_drops_planted_redeliveries(spark, tmp_path):
     assert len(fps) == 10 and len(set(fps)) == 10
 
 
-def test_foreach_batch_sink_idempotent(spark, tmp_path):
-    """AvailableNow drains the source into batch_id dirs; a rerun with
-    the same checkpoint emits nothing new (offsets committed)."""
-    from pangenomesasgraphdatabases_spark.streaming.events import (
-        foreach_batch_parquet_sink,
-    )
-
-    src_path = str(tmp_path / "src")
-    spark.range(100).withColumnRenamed("id", "v").write.parquet(src_path)
-    src_schema = spark.read.parquet(src_path).schema
-
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-
-    def run():
-        stream = spark.readStream.schema(src_schema).format("parquet").load(src_path)
-        q = foreach_batch_parquet_sink(stream, out, ckpt)
-        assert q.awaitTermination(120)
-
-    run()
-    got = spark.read.parquet(out)
-    assert got.count() == 100 and "batch_id" in got.columns
-
-    run()  # same checkpoint: nothing to re-deliver
-    assert spark.read.parquet(out).count() == 100
-
-
 def test_sliding_stream_matches_batch(spark, stream_df):
     from pangenomesasgraphdatabases_spark.queries.events_q import events_sliding_avg
     from pangenomesasgraphdatabases_spark.streaming.events import (
@@ -701,56 +674,6 @@ def test_stream_cms_matches_batch(spark):
     got = sorted(map(tuple, stream_cms_counts(spark, SF).collect()))
     want = sorted(map(tuple, events_cms_counts(spark, SF).collect()))
     assert got == want
-
-
-def test_hll_register_store_incremental_equals_batch(spark, tmp_path):
-    """The foreachBatch register store, fed the events in multiple
-    micro-batches, must max-merge to EXACTLY the registers of a
-    one-shot batch build — and a rerun with the same checkpoint adds
-    nothing (exactly-once via the offset log + idempotent per-batch
-    dirs)."""
-    from pyspark.sql import functions as F
-
-    from pangenomesasgraphdatabases_spark.data import table
-    from pangenomesasgraphdatabases_spark.queries.events_q import hll_registers
-    from pangenomesasgraphdatabases_spark.streaming.events import (
-        hll_register_store_sink,
-        read_merged_registers,
-    )
-
-    src = str(tmp_path / "src")
-    e = table(spark, SF, "events").select(
-        "event_type", F.col("event_id").cast("string").alias("k")
-    )
-    e.repartition(4).write.parquet(src)  # several files -> several batches
-    schema = spark.read.parquet(src).schema
-
-    store = str(tmp_path / "store")
-    ckpt = str(tmp_path / "ckpt")
-
-    def run():
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .format("parquet")
-            .load(src)
-        )
-        q = hll_register_store_sink(stream, "k", ["event_type"], store, ckpt)
-        assert q.awaitTermination(120)
-
-    run()
-    import glob
-
-    n_dirs = len(glob.glob(store + "/batch_id=*"))
-    assert n_dirs >= 2, "multiple micro-batches expected"
-    merged = sorted(
-        map(tuple, read_merged_registers(spark, store, ["event_type"]).collect())
-    )
-    want = sorted(map(tuple, hll_registers(e, "k", ["event_type"], 6).collect()))
-    assert merged == want
-
-    run()  # same checkpoint: no new partials
-    assert len(glob.glob(store + "/batch_id=*")) == n_dirs
 
 
 def test_pit_features_no_leakage(spark):
