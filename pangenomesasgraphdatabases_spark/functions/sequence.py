@@ -112,7 +112,7 @@ SHARP_ECOLI_INDEX: dict[str, float] = {
 _STOP_CODONS = ("TGA", "TAA", "TAG")
 
 
-def cai_py(seq: str | None, codon_weights: dict[str, float] | None = None) -> float | None:
+def cai_py(seq: str | None) -> float | None:
     """Codon adaptation index, faithful to the reference's call path
     (extendingDB_FeatureAndStrainMetrics.py:48-68 -> Biopython
     CodonUsage.cai_for_gene with the default Sharp E. coli index):
@@ -133,13 +133,12 @@ def cai_py(seq: str | None, codon_weights: dict[str, float] | None = None) -> fl
         return None
     if seq.islower():
         seq = seq.upper()
-    weights = SHARP_ECOLI_INDEX if codon_weights is None else codon_weights
     cai_value, cai_length = 0.0, 0
     for i in range(0, len(seq), 3):
         codon = seq[i : i + 3]
-        if codon in weights:
+        if codon in SHARP_ECOLI_INDEX:
             if codon not in ("ATG", "TGG"):
-                cai_value += math.log(weights[codon])
+                cai_value += math.log(SHARP_ECOLI_INDEX[codon])
                 cai_length += 1
         elif codon not in _STOP_CODONS:
             return None  # illegal codon -> reference's NaN path

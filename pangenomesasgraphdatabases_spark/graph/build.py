@@ -17,7 +17,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window, WindowSpec
 from pyspark.sql import functions as F
 
 
@@ -33,6 +33,13 @@ class PangenomeGraph:
     cluster_neighbour: DataFrame
     feature_in_strain: DataFrame
     cluster_in_strain: DataFrame
+
+
+def genome_order() -> WindowSpec:
+    """Features in genome order: per strain, by start, ties by id.  A
+    function, not a module constant: a WindowSpec needs an active
+    SparkContext."""
+    return Window.partitionBy("strain").orderBy("feature_start", "feature_id")
 
 
 def load_feature_nodes(feature_nodes: DataFrame) -> DataFrame:
@@ -293,7 +300,7 @@ def build_graph(
         )
         .drop("_ref_full_seq")
     )
-    w = Window.partitionBy("strain").orderBy("feature_start", "feature_id")
+    w = genome_order()
     adj = (
         fc.select(
             "strain",

@@ -28,21 +28,20 @@ row keeps a null number_genomes.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pangenomesasgraphdatabases_spark.graph.build import PangenomeGraph
+from pangenomesasgraphdatabases_spark.graph.build import PangenomeGraph, genome_order
+
+# GIsInStrain.ipynb's thresholds (P8, W3-W5 above).
+Z_THRESH = 1.5
+SMOOTH_WINDOW = 10
+DEV_WINDOW = 20
+DEV_COUNT = 5
+CORE_WINDOW = 5
 
 
-def gi_scan(
-    graph: PangenomeGraph,
-    z_thresh: float = 1.5,
-    smooth_window: int = 10,
-    dev_window: int = 20,
-    dev_count: int = 5,
-    core_window: int = 5,
-    core_max: int = 600,
-) -> DataFrame:
+def gi_scan(graph: PangenomeGraph, core_max: int = 600) -> DataFrame:
     """Per-feature GI flags.  Returns one row per feature with genome
     ordinal, z-scores, rolling means, and the two run flags."""
     feats = graph.features.select(
@@ -66,14 +65,14 @@ def gi_scan(
     df = (
         df.withColumn("z_GC", z_gc)
         .withColumn("z_CAI", z_cai)
-        .withColumn("dev_GC", (F.abs(F.col("z_GC")) >= z_thresh).cast("int"))
-        .withColumn("dev_CAI", (F.abs(F.col("z_CAI")) >= z_thresh).cast("int"))
+        .withColumn("dev_GC", (F.abs(F.col("z_GC")) >= Z_THRESH).cast("int"))
+        .withColumn("dev_CAI", (F.abs(F.col("z_CAI")) >= Z_THRESH).cast("int"))
     )
 
-    w = Window.partitionBy("strain").orderBy("feature_start", "feature_id")
-    smooth = w.rowsBetween(-(smooth_window - 1), 0)
-    dev = w.rowsBetween(-(dev_window - 1), 0)
-    core = w.rowsBetween(-(core_window - 1), 0)
+    w = genome_order()
+    smooth = w.rowsBetween(-(SMOOTH_WINDOW - 1), 0)
+    dev = w.rowsBetween(-(DEV_WINDOW - 1), 0)
+    core = w.rowsBetween(-(CORE_WINDOW - 1), 0)
 
     return df.select(
         "feature_id",
@@ -84,14 +83,14 @@ def gi_scan(
         "z_CAI",
         # pandas rolling(n) parity: null until the frame holds n rows.
         F.when(
-            F.count(F.lit(1)).over(smooth) == smooth_window,
+            F.count(F.lit(1)).over(smooth) == SMOOTH_WINDOW,
             F.avg("z_GC").over(smooth),
         ).alias("roll_mean_z_GC"),
         F.when(
-            F.count(F.lit(1)).over(smooth) == smooth_window,
+            F.count(F.lit(1)).over(smooth) == SMOOTH_WINDOW,
             F.avg("z_CAI").over(smooth),
         ).alias("roll_mean_z_CAI"),
-        (F.sum("dev_GC").over(dev) > dev_count).cast("int").alias("gc_dev_run"),
-        (F.sum("dev_CAI").over(dev) > dev_count).cast("int").alias("cai_dev_run"),
+        (F.sum("dev_GC").over(dev) > DEV_COUNT).cast("int").alias("gc_dev_run"),
+        (F.sum("dev_CAI").over(dev) > DEV_COUNT).cast("int").alias("cai_dev_run"),
         (F.max("number_genomes").over(core) <= core_max).cast("int").alias("accessory_run"),
     )

@@ -23,14 +23,17 @@ orientations; `nb_out` stays directed (pattern comprehension
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pangenomesasgraphdatabases_spark.graph.build import PangenomeGraph
+from pangenomesasgraphdatabases_spark.graph.build import PangenomeGraph, genome_order
+
+# RGPs.ipynb:452's core fraction and edge dominance (anchor_pairs).
+CORE_FRAC = 0.95
+DOMINANCE = 0.7
 
 
 def _ordinals(features: DataFrame) -> DataFrame:
-    w = Window.partitionBy("strain").orderBy("feature_start", "feature_id")
     return features.select(
         "feature_id",
         "strain",
@@ -40,15 +43,12 @@ def _ordinals(features: DataFrame) -> DataFrame:
         "feature_type",
         "GC",
         "CAI",
-        F.row_number().over(w).alias("pos"),
+        F.row_number().over(genome_order()).alias("pos"),
     )
 
 
-def anchor_pairs(
-    graph: PangenomeGraph, n_strains: int | None = None,
-    core_frac: float = 0.95, dominance: float = 0.7,
-) -> DataFrame:
-    """Anchor cluster pairs: both core (number_genomes > core_frac*N),
+def anchor_pairs(graph: PangenomeGraph, n_strains: int | None = None) -> DataFrame:
+    """Anchor cluster pairs: both core (number_genomes > 0.95*N),
     edge dominance 0.7*nb_out < r.number_of_members, c1 <> c2
     (RGPs.ipynb:451-462)."""
     if n_strains is None:
@@ -67,7 +67,7 @@ def anchor_pairs(
         )
     )
     core = graph.clusters.filter(
-        F.col("number_genomes") > core_frac * n_strains
+        F.col("number_genomes") > CORE_FRAC * n_strains
     ).select("cluster_id")
     # nb_out: directed outgoing sum per c1 (A3).
     nb_out = cn.groupBy(F.col("src_cluster_id").alias("c1")).agg(
@@ -78,7 +78,7 @@ def anchor_pairs(
         .join(F.broadcast(core.withColumnRenamed("cluster_id", "c2")), "c2")
         .join(nb_out, "c1")
         .filter(
-            (dominance * F.col("nb_out") < F.col("number_of_members"))
+            (DOMINANCE * F.col("nb_out") < F.col("number_of_members"))
             & (F.col("c1") != F.col("c2"))
         )
         .select("c1", "c2")
@@ -91,15 +91,13 @@ def find_rgps(
     n_strains: int | None = None,
     min_hops: int = 5,
     max_hops: int = 200,
-    core_frac: float = 0.95,
-    dominance: float = 0.7,
 ) -> DataFrame:
     """Full RGP query: returns the reference's 15-column result
     (RGPs.ipynb:473-488) ordered lists sorted by genome position."""
     # Not cached: cached frames lose AQE partition coalescing (A/B in
     # OPTIMIZATION_r16.md).
     pos = _ordinals(graph.features)
-    anchors = anchor_pairs(graph, n_strains, core_frac, dominance)
+    anchors = anchor_pairs(graph, n_strains)
 
     # Features realizing each anchor cluster, with their strain+ordinal.
     memb = graph.ortholog.join(

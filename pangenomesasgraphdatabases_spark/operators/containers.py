@@ -447,8 +447,6 @@ def encode_minimal_mp4(
     n_samples: int = 30,
     timescale: int = 600,
     duration: int = 600,
-    codec: bytes = b"avc1",
-    brand: bytes = b"isom",
 ) -> bytes:
     """A minimal spec-valid MP4: ftyp + mdat (fake sample bytes) +
     moov/mvhd + one video trak with the full tkhd/mdia/minf/stbl
@@ -458,7 +456,7 @@ def encode_minimal_mp4(
     def box(btype: bytes, payload: bytes) -> bytes:
         return struct.pack(">I", 8 + len(payload)) + btype + payload
 
-    ftyp = box(b"ftyp", brand + struct.pack(">I", 0) + brand + b"mp41")
+    ftyp = box(b"ftyp", b"isom" + struct.pack(">I", 0) + b"isom" + b"mp41")
     sample = bytes(range(16))
     mdat = box(b"mdat", sample * n_samples)
     mvhd = box(
@@ -499,7 +497,7 @@ def encode_minimal_mp4(
     # stsd with one visual sample entry (14496-12 §12.1.3 layout).
     entry = (
         struct.pack(">I", 8 + 78)
-        + codec
+        + b"avc1"
         + bytes(6)
         + struct.pack(">H", 1)  # data_reference_index
         + bytes(16)
@@ -555,7 +553,6 @@ def encode_minimal_fragmented_mp4(
     fragment_samples: tuple[int, ...] = (10, 10, 10),
     timescale: int = 600,
     sample_duration: int = 20,
-    codec: bytes = b"avc1",
 ) -> bytes:
     """A minimal spec-valid FRAGMENTED MP4 (14496-12 §8.8): ftyp +
     moov whose sample tables are EMPTY (all samples live in movie
@@ -614,7 +611,7 @@ def encode_minimal_fragmented_mp4(
     hdlr = fullbox(b"hdlr", 0, 0, bytes(4) + b"vide" + bytes(12) + b"frag\x00")
     entry = (
         struct.pack(">I", 8 + 78)
-        + codec
+        + b"avc1"
         + bytes(6)
         + struct.pack(">H", 1)
         + bytes(16)
@@ -685,7 +682,6 @@ def encode_minimal_opus_ogg(
     n_audio_packets: int = 4,
     samples_per_packet: int = 960,
     pre_skip: int = 312,
-    channels: int = 2,
 ) -> bytes:
     """A minimal spec-valid Opus-in-Ogg stream (RFC 7845 layout):
     BOS page with OpusHead, a page with OpusTags, then audio pages
@@ -694,7 +690,7 @@ def encode_minimal_opus_ogg(
     serial = 0x0D15EA5E
     head = (
         b"OpusHead"
-        + bytes([1, channels])
+        + bytes([1, 2])  # version 1, stereo
         + struct.pack("<H", pre_skip)
         + struct.pack("<I", 48_000)
         + struct.pack("<h", 0)

@@ -20,11 +20,12 @@ from pyspark.sql import functions as F
 _KEYS = ("bucket_start", "event_type")
 
 
-def rollup_batch(events: DataFrame, bucket: str = "1 hour") -> DataFrame:
-    """Partial-form rollup of one batch of events (ts, event_type,
-    value): (bucket_start, event_type) -> n_events, sum_value_micro."""
+def rollup_batch(events: DataFrame) -> DataFrame:
+    """Partial-form hourly rollup of one batch of events (ts,
+    event_type, value): (bucket_start, event_type) -> n_events,
+    sum_value_micro."""
     return (
-        events.groupBy(F.window("ts", bucket).alias("w"), "event_type")
+        events.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.sum(F.round(F.col("value") * 1000000).cast("bigint")).alias(

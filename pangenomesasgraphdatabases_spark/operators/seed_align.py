@@ -5,7 +5,7 @@ shells out to ``blastn``; this container ships no BLAST, so the last
 
 The BLAST algorithm itself is public and maps naturally onto Spark:
 
-1. **Seeding** is an inverted-index EQUI-JOIN: every ``word_size``-mer
+1. **Seeding** is an inverted-index EQUI-JOIN: every ``WORD_SIZE``-mer
    of every query joins every identical k-mer of every subject — the
    same shuffle-on-content-key shape as the LSH/shingle dedup family,
    never a pairwise scan of query x subject.
@@ -24,8 +24,8 @@ The BLAST algorithm itself is public and maps naturally onto Spark:
    subject on 50 diagonals carries 1 sequence copy, not 50).
 4. **Extension** is embarrassingly parallel: each pair row runs in an
    Arrow-batched ``mapInPandas``; per diagonal the seed positions are
-   clustered into islands (consecutive seeds <= ``word_size +
-   xdrop // 2`` apart merge — a junk gap extension can cross anyway;
+   clustered into islands (consecutive seeds <= ``WORD_SIZE +
+   XDROP // 2`` apart merge — a junk gap extension can cross anyway;
    wider gaps X-drop would not cross split) and classic ungapped
    X-drop extension runs from EVERY island, so (a) a second disjoint
    homology island on the same diagonal past an X-drop junk gap gets
@@ -51,7 +51,7 @@ only thresholds and ranks, which this preserves).  The ungapped path
 is the default — the reference's virus-screen use case is
 high-identity hit detection, where ungapped HSPs carry the signal —
 and :func:`builtin_blast_hits_gapped` adds indel tolerance via
-banded Smith-Waterman around the top ``max_diags`` seeded diagonals
+banded Smith-Waterman around the top 4 seeded diagonals
 per pair (gapped Karlin-Altschul parameters ``KA_GAPPED_*`` attach
 via ``with_bitscore(..., gapped=True)`` — the ungapped lambda/K do
 not apply to gapped scores), so a two-locus homology on far-apart
@@ -93,6 +93,12 @@ KA_H = 1.10
 KA_GAPPED_LAMBDA = 0.85
 KA_GAPPED_K = 0.23
 KA_GAPPED_H = 0.66
+
+# Seed word length and the ungapped X-drop; the k-mer cap is the
+# ungapped path's default and the gapped path's value.
+WORD_SIZE = 11
+XDROP = 20
+MAX_KMER_DF = 64
 
 _HIT_SCHEMA = (
     "query_id string, subject_id string, q_start int, s_start int, "
@@ -190,7 +196,6 @@ def _low_complexity(kmer_col, word_size: int):
 def _pair_candidates(
     queries: DataFrame,
     subjects: DataFrame,
-    word_size: int,
     max_kmer_df: int,
     keep_positions: bool,
     max_diags: int | None = None,
@@ -220,15 +225,15 @@ def _pair_candidates(
       payloads shuffle (unavoidable in this regime: the join itself
       must move them) plus one extra round-robin pass to restore the
       pinned width the keyed join exchange discarded."""
-    qk = _kmers(queries, "query_id", word_size, "q_pos")
-    sk = _kmers(subjects, "subject_id", word_size, "s_pos")
+    qk = _kmers(queries, "query_id", WORD_SIZE, "q_pos")
+    sk = _kmers(subjects, "subject_id", WORD_SIZE, "s_pos")
     if mask_low_complexity:
         # DUST-style masking (blastn -dust yes): drop low-complexity
         # words from seeding on BOTH sides before any shuffle — a
         # (AT)n tract can pass the corpus-frequency cap on a small
         # database yet still seed junk diagonals.
-        qk = qk.filter(~_low_complexity(F.col("kmer"), word_size))
-        sk = sk.filter(~_low_complexity(F.col("kmer"), word_size))
+        qk = qk.filter(~_low_complexity(F.col("kmer"), WORD_SIZE))
+        sk = sk.filter(~_low_complexity(F.col("kmer"), WORD_SIZE))
     # BLAST-style overrepresented-word mask: one window over the
     # k-mer key (the measured window-over-key pattern) instead of a
     # groupBy + join-back.
@@ -442,10 +447,8 @@ def _seed_islands(qpos: list[int], merge_gap: int) -> list[int]:
 def builtin_blast_hits(
     queries: DataFrame,
     subjects: DataFrame,
-    word_size: int = 11,
-    xdrop: int = 20,
     min_score: int = 28,
-    max_kmer_df: int = 64,
+    max_kmer_df: int = MAX_KMER_DF,
     mask_low_complexity: bool = False,
     broadcast_seqs: bool = True,
 ) -> DataFrame:
@@ -453,7 +456,7 @@ def builtin_blast_hits(
     ``subjects`` (both ``(.., sequence)`` frames with ``query_id`` /
     ``subject_id``).  Returns every distinct HSP with ``score >=
     min_score``: per (query, subject, diagonal) the seed positions
-    cluster into islands (gap > ``word_size + xdrop // 2`` splits —
+    cluster into islands (gap > ``WORD_SIZE + XDROP // 2`` splits —
     a junk gap narrow enough for X-drop to cross merges, anything
     wider extends separately), X-drop extension runs from each
     island's first seed, and identical outcomes dedup — so disjoint
@@ -468,7 +471,7 @@ def builtin_blast_hits(
 
     ``mask_low_complexity=True`` additionally drops DUST-style
     low-complexity words (few distinct triplets — homopolymers and
-    short-period repeats; cutoff scales with ``word_size``, see
+    short-period repeats; cutoff scales with ``WORD_SIZE``, see
     :func:`_low_complexity`) from seeding on both sides, blastn's
     ``-dust yes`` analog: the corpus-frequency cap alone cannot catch
     a repeat tract that is rare in a SMALL database.  Default off —
@@ -481,13 +484,12 @@ def builtin_blast_hits(
     with_seqs = _pair_candidates(
         queries,
         subjects,
-        word_size,
         max_kmer_df,
         keep_positions=True,
         mask_low_complexity=mask_low_complexity,
         broadcast_seqs=broadcast_seqs,
     )
-    merge_gap = word_size + xdrop // 2
+    merge_gap = WORD_SIZE + XDROP // 2
 
     def extend(batches: Iterable) -> Iterator:
         import pandas as pd
@@ -508,7 +510,7 @@ def builtin_blast_hits(
                     ):
                         tasks.append((qs, ss, diag, i0))
                         owners.append(row_i)
-            results = _xdrop_extend_batch(tasks, xdrop)
+            results = _xdrop_extend_batch(tasks, XDROP)
             rows = []
             seen: dict[int, set] = {}
             for row_i, hsp in zip(owners, results):
@@ -543,7 +545,7 @@ def builtin_blast_hits(
 
 
 def effective_length_adjustment(
-    m: int, n: int, k: float = KA_K, h: float = KA_H, iters: int = 5
+    m: int, n: int, k: float = KA_K, h: float = KA_H
 ) -> int:
     """BLAST's length adjustment ``l`` — the fixed point of
     ``l = ln(K * (m - l) * (n - l)) / H`` (an alignment cannot start
@@ -553,7 +555,7 @@ def effective_length_adjustment(
     from 0 with clamping, as BLAST does; returns a non-negative
     integer (floor, BLAST's convention)."""
     l = 0.0
-    for _ in range(iters):
+    for _ in range(5):
         l = math.log(k * max(m - l, 1.0) * max(n - l, 1.0)) / h
         l = max(l, 0.0)
     return int(l)
@@ -833,27 +835,20 @@ def _banded_sw_batch(
 def builtin_blast_hits_gapped(
     queries: DataFrame,
     subjects: DataFrame,
-    word_size: int = 11,
-    band: int = 8,
-    gap: int = -3,
     min_score: int = 28,
-    max_kmer_df: int = 64,
-    max_diags: int = 4,
     mask_low_complexity: bool = False,
-    broadcast_seqs: bool = True,
 ) -> DataFrame:
     """Gapped variant of :func:`builtin_blast_hits`: the same
     inverted-index seeding, overrepresented-word cap, and
     one-row-per-pair candidate collapse, but candidates keep the TOP
-    ``max_diags`` seeded diagonals per (query, subject) (by seed
-    count, ties to the lowest diagonal) and refine each with banded
-    Smith-Waterman (± ``band`` diagonals, linear ``gap`` penalty) —
-    indel-tolerant HSPs the ungapped X-drop cannot produce, with
-    identical outcomes deduped, so a two-locus homology on diagonals
-    further than ``band`` apart yields two hits (a locus beyond the
-    ``max_diags`` seed-count cut is the documented recall limit on
-    many-locus subjects — raise ``max_diags`` for repeat-rich
-    corpora).  Output adds a ``gaps`` column; scores are raw
+    4 seeded diagonals per (query, subject) (by seed count, ties to
+    the lowest diagonal) and refine each with banded Smith-Waterman
+    (± 8 diagonals, linear gap penalty -3) — indel-tolerant HSPs the
+    ungapped X-drop cannot produce, with identical outcomes deduped,
+    so a two-locus homology on diagonals further than 8 apart yields
+    two hits (a locus beyond the 4-diagonal seed-count cut is the
+    documented recall limit on many-locus subjects).  Output adds a
+    ``gaps`` column; scores are raw
     +1/-2/gap — attach bit scores / e-values with
     :func:`with_bitscore(..., gapped=True)` (the ``KA_GAPPED_*``
     parameters; the UNGAPPED lambda/K do not apply to gapped scores)
@@ -863,17 +858,15 @@ def builtin_blast_hits_gapped(
     Scale shape: identical to the ungapped path until extension (the
     join IS the work); the banded DP is O(|q| * band) per kept
     diagonal inside the same Arrow-batched ``mapInPandas``, and each
-    pair's sequences cross the shuffle once regardless of
-    ``max_diags``."""
+    pair's sequences cross the shuffle once however many diagonals
+    it keeps."""
     with_seqs = _pair_candidates(
         queries,
         subjects,
-        word_size,
-        max_kmer_df,
+        MAX_KMER_DF,
         keep_positions=False,
-        max_diags=max_diags,
+        max_diags=4,
         mask_low_complexity=mask_low_complexity,
-        broadcast_seqs=broadcast_seqs,
     )
 
     def extend(batches: Iterable) -> Iterator:
@@ -890,7 +883,7 @@ def builtin_blast_hits_gapped(
                 for d in diags:
                     tasks.append((qs, ss, int(d["diag"])))
                     owners.append(row_i)
-            results = _banded_sw_batch(tasks, band, gap)
+            results = _banded_sw_batch(tasks, band=8, gap=-3)
             rows = []
             seen: dict[int, set] = {}
             for row_i, r in zip(owners, results):

@@ -35,7 +35,6 @@ from pangenomesasgraphdatabases_spark.queries.registry import register
 from pangenomesasgraphdatabases_spark.queries.vectors_q import (
     _KM_CHAIN_SQL,
     _KM_ITERS,
-    _KM_SCALE,
     _km_assign,
     _km_assign_sql,
     _km_centroids,
@@ -418,8 +417,8 @@ _COV_CTES_SQL = f"""
     )"""
 
 
-def _cols(fmt: str, d: int = _DIM) -> str:
-    return ", ".join(fmt.format(k=k) for k in range(1, d + 1))
+def _cols(fmt: str) -> str:
+    return ", ".join(fmt.format(k=k) for k in range(1, _DIM + 1))
 
 
 def _pi_chain_parts() -> list[str]:

@@ -283,13 +283,13 @@ def events_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _zvalue_sql(x: str, y: str, bits: int = 16) -> str:
+def _zvalue_sql(x: str, y: str) -> str:
     """Engine-neutral SQL for the Morton/Z-order interleave of two
-    non-negative ints (x bit i -> z bit 2i, y bit i -> z bit 2i+1),
+    non-negative 16-bit ints (x bit i -> z bit 2i, y bit i -> z bit 2i+1),
     using only floor / % / * so Spark SQL and DuckDB evaluate the same
     expression."""
     terms = []
-    for i in range(bits):
+    for i in range(16):
         terms.append(
             f"CAST(floor(({x}) / {1 << i}) AS BIGINT) % 2 * {1 << (2 * i)}"
         )

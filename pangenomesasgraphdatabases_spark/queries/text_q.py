@@ -700,16 +700,14 @@ def simhash_hamming(a, b):
     return dist
 
 
-def dedup_increment(
-    corpus: DataFrame, new_docs: DataFrame, j_min: float = 0.8
-) -> DataFrame:
+def dedup_increment(corpus: DataFrame, new_docs: DataFrame) -> DataFrame:
     """Corpus-refresh dedup (extension): the subset of `new_docs`
     (documents-shaped: doc_id, text) that survives
 
     1. exact dedup — fingerprint anti-join against the corpus AND
        within the batch (min doc_id survives), then
     2. near-dup — MinHash band-bucket candidates against the corpus,
-       exact shingle-Jaccard >= j_min verified, matches dropped.
+       exact shingle-Jaccard >= 0.8 verified, matches dropped.
 
     This is the production shape for incremental crawls: the corpus
     side only contributes its fingerprint and signature frames, which
@@ -761,7 +759,7 @@ def dedup_increment(
     near_dup_ids = (
         inter.join(n_sz.withColumnRenamed("doc_id", "new_id"), "new_id")
         .join(c_sz.withColumnRenamed("doc_id", "corpus_id"), "corpus_id")
-        .filter(jac >= j_min)
+        .filter(jac >= 0.8)
         .select(F.col("new_id").alias("doc_id"))
         .distinct()
     )

@@ -691,7 +691,6 @@ def load_type_map(spark: SparkSession, path: str) -> DataFrame:
 
 def with_so_type(
     df: DataFrame,
-    src_col: str = "feature_type",
     type_map: dict | DataFrame | None = None,
     on_conflict: str = "error",
 ) -> DataFrame:
@@ -725,11 +724,12 @@ def with_so_type(
       key a feature row actually resolves through, naming the key;
     * ``"max"`` — keep the deterministic lexicographic-max winner
       (the pre-r14 behavior, for callers that curate the table)."""
+    ft = F.col("feature_type")
     if type_map is None or isinstance(type_map, dict):
         literal = FT_SO_SUBSET if type_map is None else type_map
-        expr = F.col(src_col)
+        expr = ft
         for k, v in sorted(literal.items()):
-            expr = F.when(F.col(src_col) == k, F.lit(v)).otherwise(expr)
+            expr = F.when(ft == k, F.lit(v)).otherwise(expr)
         return df.withColumn("so_type", expr)
     if on_conflict not in ("error", "max"):
         raise ValueError(f"on_conflict must be 'error' or 'max': {on_conflict}")
@@ -749,7 +749,7 @@ def with_so_type(
         .groupBy("__ft_key")
         .agg(F.max("__so").alias("__so"), F.count(F.lit(1)).alias("__n"))
     )
-    so = F.coalesce(F.col("__so"), F.col(src_col))
+    so = F.coalesce(F.col("__so"), ft)
     if on_conflict == "error":
         so = F.when(
             F.col("__n") > 1,
@@ -763,7 +763,7 @@ def with_so_type(
             ).cast("string"),
         ).otherwise(so)
     return (
-        df.join(F.broadcast(m), F.col(src_col) == F.col("__ft_key"), "left")
+        df.join(F.broadcast(m), ft == F.col("__ft_key"), "left")
         .withColumn("so_type", so)
         .drop("__ft_key", "__so", "__n")
     )

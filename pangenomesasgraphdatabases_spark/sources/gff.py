@@ -17,8 +17,6 @@ reference (one process per GFF), but distributed across files.
 
 from __future__ import annotations
 
-from collections.abc import Iterable
-
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F

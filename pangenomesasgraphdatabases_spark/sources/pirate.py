@@ -48,7 +48,7 @@ def read_coords(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def read_gene_families(spark: SparkSession, path: str, id_cols: int = 6) -> DataFrame:
+def read_gene_families(spark: SparkSession, path: str) -> DataFrame:
     """S2: PIRATE.gene_families.tsv (wide, one column per genome after
     the metadata block) -> metadata + feature_ids ARRAY.
 
@@ -57,10 +57,10 @@ def read_gene_families(spark: SparkSession, path: str, id_cols: int = 6) -> Data
     ';'-joined string; we keep the fold as a real ArrayType (no string
     round-trip) and unescape multi-copy '(a:b)' cells (:88).
     The fixture-format file carries the metadata columns first and one
-    column per strain after them (id_cols counts the metadata block).
+    column per strain after the six metadata columns.
     """
     raw = spark.read.csv(path, sep="\t", header=True, inferSchema=False)
-    meta, genome_cols = raw.columns[:id_cols], raw.columns[id_cols:]
+    meta, genome_cols = raw.columns[:6], raw.columns[6:]
     per_genome = F.array(*[F.col(c) for c in genome_cols])
     cleaned = F.transform(
         per_genome, lambda x: F.regexp_replace(F.regexp_replace(x, r"[()]", ""), ":", ";")

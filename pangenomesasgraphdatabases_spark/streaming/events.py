@@ -34,10 +34,10 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return normalize_events(stream)
 
 
-def tumbling_counts_stream(events: DataFrame, watermark: str = "10 minutes") -> DataFrame:
+def tumbling_counts_stream(events: DataFrame) -> DataFrame:
     """Streaming 5-minute tumbling counts with late-data watermark."""
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", "10 minutes")
         .groupBy(F.window("ts", "5 minutes").alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
@@ -57,13 +57,11 @@ def tumbling_counts_stream(events: DataFrame, watermark: str = "10 minutes") -> 
     )
 
 
-def sliding_counts_stream(
-    events: DataFrame, watermark: str = "20 minutes"
-) -> DataFrame:
+def sliding_counts_stream(events: DataFrame) -> DataFrame:
     """Streaming 10-minute windows sliding every 5 — the stream twin of
     queries/events_q.events_sliding_avg, same exact fixed-point micros."""
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", "20 minutes")
         .groupBy(
             F.window("ts", "10 minutes", "5 minutes").alias("w"), "event_type"
         )
@@ -82,12 +80,12 @@ def sliding_counts_stream(
     )
 
 
-def session_window_stream(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
+def session_window_stream(events: DataFrame) -> DataFrame:
     """Streaming gap-based sessionization via session_window — the
     built-in stateful operator twin of events_q.events_sessionize."""
     return (
         events.withWatermark("ts", "1 hour")
-        .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
+        .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
             "user_id",
@@ -167,13 +165,13 @@ def run_available_now(
     return spark.table(name)
 
 
-def interval_join_stream(
-    events: DataFrame,
-    watermark: str = "30 minutes",
-    horizon_s: int = 1800,
-) -> DataFrame:
+# Both sides of interval_join_stream keep state this long.
+_JOIN_WATERMARK = "30 minutes"
+
+
+def interval_join_stream(events: DataFrame) -> DataFrame:
     """STREAM-STREAM inner join: clicks joined to the purchases that
-    follow them within `horizon_s` seconds for the same user.  Both
+    follow them within 1,800 seconds for the same user.  Both
     sides carry watermarks and the join predicate bounds event time on
     both ends, so Spark can expire join state — without the time bound
     each side's state would grow without limit at 100 TB/day rates.
@@ -187,7 +185,7 @@ def interval_join_stream(
             F.col("user_id").alias("click_user"),
             F.col("ts").alias("click_ts"),
         )
-        .withWatermark("click_ts", watermark)
+        .withWatermark("click_ts", _JOIN_WATERMARK)
     )
     purchases = (
         events.filter(F.col("event_type") == "purchase")
@@ -196,14 +194,14 @@ def interval_join_stream(
             F.col("user_id").alias("purchase_user"),
             F.col("ts").alias("purchase_ts"),
         )
-        .withWatermark("purchase_ts", watermark)
+        .withWatermark("purchase_ts", _JOIN_WATERMARK)
     )
     joined = clicks.join(
         purchases,
         F.expr(
-            f"""click_user = purchase_user
+            """click_user = purchase_user
                 AND purchase_ts >= click_ts
-                AND purchase_ts <= click_ts + INTERVAL {horizon_s} SECONDS"""
+                AND purchase_ts <= click_ts + INTERVAL 1800 SECONDS"""
         ),
     )
     return joined.select(
@@ -214,11 +212,7 @@ def interval_join_stream(
     )
 
 
-def windowed_topk_stream(
-    events: DataFrame,
-    spark: SparkSession,
-    watermark: str = "2 hours",
-):
+def windowed_topk_stream(events: DataFrame, spark: SparkSession):
     """Streaming counterpart of queries/events_q.events_windowed_topk.
 
     Rank-after-windowed-aggregation is not expressible as a single
@@ -240,7 +234,7 @@ def windowed_topk_stream(
 
     name = "topk_" + _uuid.uuid4().hex[:8]
     counts = (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", "2 hours")
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(

@@ -7,7 +7,6 @@ alone cannot."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 SF = "/root/testdata/sf0.001"

@@ -6,9 +6,6 @@ from __future__ import annotations
 
 from collections import defaultdict
 
-import pytest
-from pyspark.sql import functions as F
-
 SF = "/root/testdata/sf0.001"
 
 

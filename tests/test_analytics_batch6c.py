@@ -6,7 +6,6 @@ from __future__ import annotations
 import math
 from collections import defaultdict
 
-import pytest
 from pyspark.sql import functions as F
 
 SF = "/root/testdata/sf0.001"

@@ -3,7 +3,6 @@
 from __future__ import annotations
 
 import random
-import string
 
 from hypothesis import given, settings
 from hypothesis import strategies as st

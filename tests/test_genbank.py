@@ -847,7 +847,6 @@ def test_so_type_map_conflicting_values_raise_by_default(spark):
     at execution (lazily — plan construction stays jobless) naming
     the key; exact-duplicate re-statements of ONE mapping still
     dedup harmlessly."""
-    import pyspark.errors
     import pytest
 
     from pangenomesasgraphdatabases_spark.sources.genbank import with_so_type

@@ -7,7 +7,6 @@ import math
 from collections import defaultdict
 
 import numpy as np
-import pytest
 from pyspark.sql import functions as F
 
 SF = "/root/testdata/sf0.001"

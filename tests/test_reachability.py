@@ -1,5 +1,6 @@
-"""Reachability census: every top-level function and class of the package
-(and every method of one) is reachable by name from a root.  Stdlib ast."""
+"""Package censuses, stdlib ast: every top-level function and class of
+the package (and every method of one) is reachable by name from a root;
+every defaulted parameter is set by some call; every import is used."""
 
 from __future__ import annotations
 
@@ -41,6 +42,16 @@ TEST_REFERENCES = (
 )
 # Scripts whose every name counts as used.
 SCRIPTS = ("bench.py", "__spark_entry__.py", "tools/*.py", "perfbench/**/*.py")
+PACKAGE = (f"{PKG}/**/*.py",)
+TESTS = ("tests/**/*.py",)
+
+
+def _files(*patterns) -> list:
+    return sorted(p for pat in patterns for p in glob.glob(os.path.join(REPO, pat), recursive=True))
+
+
+def _parse(path: str) -> ast.Module:
+    return ast.parse(Path(path).read_text(encoding="utf-8"))
 
 
 def _names(*nodes) -> set:
@@ -60,9 +71,9 @@ def _names(*nodes) -> set:
 
 def test_every_package_definition_is_reachable():
     defs, methods, used = {}, {}, set()
-    for path in sorted(glob.glob(os.path.join(REPO, PKG, "**", "*.py"), recursive=True)):
+    for path in _files(*PACKAGE):
         rel = os.path.relpath(path, os.path.join(REPO, PKG)).replace(os.sep, "/")
-        for node in ast.parse(Path(path).read_text(encoding="utf-8")).body:
+        for node in _parse(path).body:
             if not isinstance(node, (ast.FunctionDef, ast.ClassDef)):
                 used |= _names(node)  # module-level code runs at import
                 continue
@@ -78,9 +89,8 @@ def test_every_package_definition_is_reachable():
                         methods[f"{rel}:{node.name}.{m.name}"] = m
     stale = sorted({name for name, _ in ROOTS} - {n.name for n in defs.values()})
     assert not stale, f"ROOTS names no package definition: {stale}"
-    for pattern in SCRIPTS:
-        for path in glob.glob(os.path.join(REPO, pattern), recursive=True):
-            used |= _names(ast.parse(Path(path).read_text(encoding="utf-8")))
+    for path in _files(*SCRIPTS):
+        used |= _names(_parse(path))
     reached = set()
     while new := {k for k, n in defs.items() if n.name in used} - reached:
         reached |= new  # a reached definition uses every name in its body
@@ -89,3 +99,76 @@ def test_every_package_definition_is_reachable():
         k for k, m in methods.items() if k.rsplit(".", 1)[0] in reached and m.name not in used
     )
     assert not unreached, "unreachable definitions:\n" + "\n".join(unreached)
+
+
+def _defaulted(fn: ast.FunctionDef, method: bool) -> list:
+    """(name, index) of each defaulted parameter: the index counts the
+    positional arguments a call passes before it (a bound method's
+    call leaves self out), None for a keyword-only one."""
+    a = fn.args
+    pos = a.posonlyargs + a.args
+    first = len(pos) - len(a.defaults)
+    return [(p.arg, i - method) for i, p in enumerate(pos) if i >= first] + [
+        (p.arg, None) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None
+    ]
+
+
+def test_every_option_is_set_by_some_call():
+    """A defaulted parameter that no call sets is a constant with an
+    option's cost: every caller, test and benchmark runs its one value.
+    Paper steps in ROOTS await their callers and are exempt."""
+    options = []
+    for path in _files(*PACKAGE):
+        rel = os.path.relpath(path, os.path.join(REPO, PKG)).replace(os.sep, "/")
+        for node in _parse(path).body:
+            if isinstance(node, ast.FunctionDef):
+                fns = [(node, False)]
+            elif isinstance(node, ast.ClassDef):
+                fns = [(m, True) for m in node.body if isinstance(m, ast.FunctionDef)]
+            else:
+                continue
+            for fn, method in fns:
+                if fn.name not in dict(ROOTS):
+                    options += [(rel, fn.name, p, i) for p, i in _defaulted(fn, method)]
+    # Per callee name: the keywords its calls pass and how many
+    # positional arguments each passes; "*" when a call unpacks
+    # *args or **kwargs, which may set anything.
+    sets: dict = {}
+    for path in _files(*PACKAGE, *SCRIPTS, *TESTS):
+        for call in (n for n in ast.walk(_parse(path)) if isinstance(n, ast.Call)):
+            f = call.func
+            name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+            s = sets.setdefault(name, set())
+            if any(isinstance(a, ast.Starred) for a in call.args) or any(
+                k.arg is None for k in call.keywords
+            ):
+                s.add("*")
+            s |= {k.arg for k in call.keywords} | {len(call.args)}
+    unset = []
+    for rel, fn, p, i in options:
+        s = sets.get(fn, set())
+        by_position = i is not None and any(isinstance(n, int) and n > i for n in s)
+        if not (s & {"*", p} or by_position):
+            unset.append(f"{rel}:{fn}({p})")
+    assert not unset, "defaulted parameters no call sets:\n" + "\n".join(unset)
+
+
+def test_every_import_is_used():
+    """An import kept for its side effect says so with `# noqa: F401`
+    (queries/__init__.py's registering imports)."""
+    unused = []
+    for path in _files(*PACKAGE, *SCRIPTS, *TESTS):
+        text = Path(path).read_text(encoding="utf-8")
+        tree, lines = ast.parse(text), text.splitlines()
+        used = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+        for node in ast.walk(tree):
+            if not isinstance(node, (ast.Import, ast.ImportFrom)):
+                continue
+            if getattr(node, "module", None) == "__future__" or "noqa: F401" in lines[node.lineno - 1]:
+                continue
+            for alias in node.names:
+                bound = alias.asname or alias.name.split(".")[0]
+                if bound not in used:
+                    rel = os.path.relpath(path, REPO).replace(os.sep, "/")
+                    unused.append(f"{rel}:{node.lineno}: {bound}")
+    assert not unused, "unused imports:\n" + "\n".join(unused)

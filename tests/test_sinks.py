@@ -4,8 +4,6 @@ from __future__ import annotations
 
 from pathlib import Path
 
-from pyspark.sql import functions as F
-
 from pangenomesasgraphdatabases_spark.sources.fasta import write_fasta
 from pangenomesasgraphdatabases_spark.sources.pirate import write_csv
 
@@ -37,10 +35,7 @@ def test_gff3_sink_roundtrip(spark, tmp_path):
     """write_gff3 -> parse_gff_features/read_gff_scaffolds round-trip:
     the sink emits exactly the file shape the sources read (S12's GFF
     sibling — the reference converter's output side)."""
-    from pangenomesasgraphdatabases_spark.sources.genbank import (
-        read_genbank_features,
-        read_genbank_sequences,
-    )
+    from pangenomesasgraphdatabases_spark.sources.genbank import read_genbank_sequences
     from pangenomesasgraphdatabases_spark.sources.gff import (
         parse_gff_features,
         read_gff_scaffolds,

@@ -8,7 +8,6 @@ ceiling width).
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from pangenomesasgraphdatabases_spark.operators.sizing import (
