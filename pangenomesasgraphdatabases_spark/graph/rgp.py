@@ -31,6 +31,9 @@ from pangenomesasgraphdatabases_spark.graph.build import PangenomeGraph, genome_
 # RGPs.ipynb:452's core fraction and edge dominance (anchor_pairs).
 CORE_FRAC = 0.95
 DOMINANCE = 0.7
+# RGPs.ipynb cell 8's path length window, [:NEIGHBOUR*5..200].
+MIN_HOPS = 5
+MAX_HOPS = 200
 
 
 def _ordinals(features: DataFrame) -> DataFrame:
@@ -86,12 +89,7 @@ def anchor_pairs(graph: PangenomeGraph, n_strains: int | None = None) -> DataFra
     )
 
 
-def find_rgps(
-    graph: PangenomeGraph,
-    n_strains: int | None = None,
-    min_hops: int = 5,
-    max_hops: int = 200,
-) -> DataFrame:
+def find_rgps(graph: PangenomeGraph, n_strains: int | None = None) -> DataFrame:
     """Full RGP query: returns the reference's 15-column result
     (RGPs.ipynb:473-488) ordered lists sorted by genome position."""
     # Not cached: cached frames lose AQE partition coalescing (A/B in
@@ -118,7 +116,7 @@ def find_rgps(
     cand = (
         f1.join(F.broadcast(anchors), "c1")
         .join(f2, ["c2", "strain"])
-        .filter((F.col("pos2") - F.col("pos1")).between(min_hops, max_hops))
+        .filter((F.col("pos2") - F.col("pos1")).between(MIN_HOPS, MAX_HOPS))
     )
 
     # Expand each candidate interval over the strain's ordinal chain.
@@ -129,7 +127,7 @@ def find_rgps(
     # interval overlaps at most 2 blocks, so the equi-join on
     # (strain, block) prunes the expansion to ~2 blocks of features
     # per candidate regardless of genome length.
-    block = max_hops + 1
+    block = MAX_HOPS + 1
     cand_b = cand.withColumn(
         "pos_block",
         F.explode(

@@ -9,9 +9,6 @@ the commit marker — a save that fails partway leaves none, and
 ``load_graph`` refuses a directory without it — and it lets
 ``load_graph`` open the tables without a Spark job (no footer schema
 inference, no parallel partition listing).
-
-Co-located join layouts live in ``save_bucketed_tables`` (saveAsTable
-path).
 """
 
 from __future__ import annotations
@@ -150,47 +147,4 @@ def load_graph(spark: SparkSession, path: str) -> PangenomeGraph:
             )
             for name in _TABLES
         }
-    )
-
-
-def save_bucketed_tables(
-    graph: PangenomeGraph,
-    spark: SparkSession,
-    database: str = "pangenome",
-    n_buckets: int = 16,
-) -> None:
-    """Bucketed saveAsTable layout for co-located joins: features and
-    ortholog bucketed + sorted by feature_id, ortholog additionally
-    mirrored bucketed by cluster_id, cluster tables by cluster_id.
-
-    On a cluster this is THE layout for the hot joins
-    (feature <-> ortholog <-> cluster): both sides pre-hashed into the
-    same bucket count means the join plans with zero Exchange
-    (SortMergeJoin reads matching buckets directly) — the declarative
-    replacement for Neo4j's id indexes (01_creatingDatabase.cypher:57).
-    """
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS {database}")
-    (
-        graph.features.write.mode("overwrite")
-        .bucketBy(n_buckets, "feature_id")
-        .sortBy("feature_id")
-        .saveAsTable(f"{database}.features_by_fid")
-    )
-    (
-        graph.ortholog.write.mode("overwrite")
-        .bucketBy(n_buckets, "feature_id")
-        .sortBy("feature_id")
-        .saveAsTable(f"{database}.ortholog_by_fid")
-    )
-    (
-        graph.ortholog.write.mode("overwrite")
-        .bucketBy(n_buckets, "cluster_id")
-        .sortBy("cluster_id")
-        .saveAsTable(f"{database}.ortholog_by_cid")
-    )
-    (
-        graph.clusters.write.mode("overwrite")
-        .bucketBy(n_buckets, "cluster_id")
-        .sortBy("cluster_id")
-        .saveAsTable(f"{database}.clusters_by_cid")
     )

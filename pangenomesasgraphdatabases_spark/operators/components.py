@@ -26,7 +26,7 @@ Small-graph fast path: when the (deduplicated, symmetrized) edge set
 fits comfortably in one task, the iterative machinery is pure
 overhead — a near-dup candidate graph is usually a few hundred edges
 even over a huge corpus, but each distributed round still pays two
-job launches.  Below `small_graph_edges` the edges collapse to a
+job launches.  Below `SMALL_GRAPH_EDGES` the edges collapse to a
 single Arrow batch and union-find solves them in one `mapInPandas`
 task (executor-side, not driver).  The same semantics (component =
 minimum member id), one job instead of ~2×diameter.
@@ -49,6 +49,11 @@ from collections.abc import Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+# Star rounds before connected_components gives up.
+MAX_ITER = 50
+# Largest symmetrized edge set the single-task union-find solves.
+SMALL_GRAPH_EDGES = 250_000
 
 
 def _union_find_components(sym_one_partition: DataFrame) -> DataFrame:
@@ -87,21 +92,18 @@ def _union_find_components(sym_one_partition: DataFrame) -> DataFrame:
     return sym_one_partition.mapInPandas(solve, "node long, component long")
 
 
-def connected_components(
-    edges: DataFrame, max_iter: int = 50, small_graph_edges: int = 250_000
-) -> DataFrame:
+def connected_components(edges: DataFrame) -> DataFrame:
     """Labels every node of the undirected graph `edges` (columns
     `src`, `dst`) with its component's minimum node id.  Returns
-    (node, component).  Raises if not converged within `max_iter`
+    (node, component).  Raises if not converged within `MAX_ITER`
     rounds — a silent partial merge would corrupt dedup groups.
 
-    Edge sets at or below `small_graph_edges` (after symmetrize +
+    Edge sets at or below `SMALL_GRAPH_EDGES` (after symmetrize +
     distinct) are solved by single-task union-find (one job); larger
-    graphs run the distributed min-label iteration.  Pass
-    small_graph_edges=0 to force the iterative path.
+    graphs run the distributed min-label iteration.
 
     The fast-path gate bounds ONE task's work: a python dict over up
-    to 2x`small_graph_edges` nodes is ~100 B/entry, so the 250k
+    to 2x`SMALL_GRAPH_EDGES` nodes is ~100 B/entry, so the 250k
     default caps the task at ~50 MB / well under a second — sized for
     the motivating workload (near-dup candidate graphs of hundreds of
     edges) while leaving big margin before single-task memory or
@@ -113,7 +115,7 @@ def connected_components(
     ).distinct()
     sym = sym.localCheckpoint(eager=True)
 
-    if small_graph_edges and sym.count() <= small_graph_edges:
+    if sym.count() <= SMALL_GRAPH_EDGES:
         return _union_find_components(sym.coalesce(1))
 
     nodes = sym.select(F.col("src").alias("node")).distinct()
@@ -167,7 +169,7 @@ def connected_components(
         hooked = m.select(F.col("h").alias("x"), F.col("m").alias("y"))
         return _canon(re_pointed.unionByName(hooked))
 
-    for _ in range(max_iter):
+    for _ in range(MAX_ITER):
         nxt = _small_star(_large_star(cur)).localCheckpoint(eager=True)
         # Fixpoint: same canonical edge set.  new ⊆ old with equal
         # counts ⇒ equal; exceptAll + one count beats a two-sided diff.
@@ -190,4 +192,4 @@ def connected_components(
                 "node",
                 F.coalesce("component", F.col("node")).alias("component"),
             )
-    raise RuntimeError(f"connected_components: no fixpoint in {max_iter} rounds")
+    raise RuntimeError(f"connected_components: no fixpoint in {MAX_ITER} rounds")

@@ -484,8 +484,7 @@ def _encode_block_em(block, qtab, pred, dc_em, ac_em, level=128.0) -> int:
 
 def encode_jpeg12(
     arr: np.ndarray,
-    qtab: np.ndarray | None = None,
-    quality: int = 85,
+    qtab: np.ndarray,
 ) -> bytes:
     """(h, w) uint16 grayscale with 12-bit samples (0..4095) ->
     extended-sequential JFIF JPEG (SOF1, precision 12, T.81 Table
@@ -497,19 +496,12 @@ def encode_jpeg12(
     categories, so both tables are built OPTIMALLY for the image via
     the two-pass Annex K.2 procedure the progressive encoder already
     uses (count symbols, gen_optimal_table, write) — exactly what
-    real 12-bit encoders ship.  ``qtab`` (natural-order (8, 8),
-    entries 1..65535) overrides the default quality-scaled Annex K
-    luma table x16 (the x16 keeps quantization-step-per-sample-bit
-    parity with the 8-bit path and puts entries above 255, so the
-    Pq=1 wire format is value-exercised, not just parsed)."""
+    real 12-bit encoders ship.  ``qtab`` is the natural-order (8, 8)
+    table, entries 1..65535."""
     if arr.ndim != 2 or arr.dtype != np.uint16:
         raise ValueError("encode_jpeg12 expects (h, w) uint16")
     if arr.max(initial=0) > 4095:
         raise ValueError("12-bit samples must be in [0, 4095]")
-    if qtab is None:
-        qtab = np.clip(
-            quality_scale(QT_LUMA, quality).astype(np.int64) * 16, 1, 65535
-        )
     qtab = np.asarray(qtab, dtype=np.int64)
     if qtab.shape != (8, 8) or qtab.min() < 1 or qtab.max() > 65535:
         raise ValueError("qtab must be (8, 8) with entries in [1, 65535]")

@@ -32,10 +32,10 @@ uncollapsed plan (the driver oracles pin this).
 
 ``within_group_pairs`` spreads giant groups: a group of g members
 would otherwise emit its g^2/2 output pairs under ONE join key (one
-task).  Groups above ``big_min`` members are expanded through a
-block-pair decomposition instead — members hash into ``blocks``
+task).  Groups above ``AUTO_BIG_MIN`` members are expanded through a
+block-pair decomposition instead — members hash into ``BLOCKS``
 buckets, pairs are generated per (block, block') combination keyed on
-(_rep, block'), so the group's output spreads over ``blocks`` tasks —
+(_rep, block'), so the group's output spreads over ``BLOCKS`` tasks —
 while small groups (the overwhelming majority) keep the plain
 single-key join.  A dedup pipeline that only needs doc -> canonical
 should still read the member frame itself rather than materializing a
@@ -103,6 +103,8 @@ MEMBER_ROW_BYTES = 48
 # group emits ~8.4M pairs — about one comfortable task's worth — so
 # anything larger is spread over the block decomposition.
 AUTO_BIG_MIN = 4096
+# Buckets a big group's members hash into on the block path.
+BLOCKS = 16
 
 
 def collapse_exact_adaptive(
@@ -196,8 +198,6 @@ def within_group_pairs(
     members: DataFrame,
     c1: str,
     c2: str,
-    big_min: int | None = None,
-    blocks: int = 16,
     members_rows: int | None = None,
 ) -> DataFrame:
     """All ordered member pairs (c1 < c2) inside each exact group,
@@ -214,37 +214,30 @@ def within_group_pairs(
     10^4-member planted cluster at test scale (extra explode + union
     + a 16-key join vs 32-way broadcast-parallel generation).
 
-    ``big_min`` (opt-in) enables the block-pair decomposition for
-    groups above that size — the guard for the regime where the
-    member frame has outgrown broadcast and the self-join degrades to
-    a sort-merge join whose giant group lands on ONE task: members
-    hash into ``blocks`` buckets; the left side explodes over the
-    bucket range [own_bucket, blocks), the right side keys on
-    (_rep, bucket), and the equi-join emits every unordered pair
-    exactly once — cross-bucket pairs from the lower bucket's row,
-    same-bucket pairs via the id-order filter — spread over
-    ``blocks`` join-key values instead of one.
+    The block-pair decomposition is the guard for the regime where
+    the member frame has outgrown broadcast and the self-join degrades
+    to a sort-merge join whose giant group lands on ONE task: groups
+    above ``AUTO_BIG_MIN`` members hash into ``BLOCKS`` buckets; the
+    left side explodes over the bucket range [own_bucket, BLOCKS), the
+    right side keys on (_rep, bucket), and the equi-join emits every
+    unordered pair exactly once — cross-bucket pairs from the lower
+    bucket's row, same-bucket pairs via the id-order filter — spread
+    over ``BLOCKS`` join-key values instead of one.
 
     ``members_rows`` (an upper bound on the member frame's row count,
     typically the parquet-footer count from operators/sizing — no
-    Spark job) AUTO-gates the block path (VERDICT r10 #1): when the
-    estimated members size ``members_rows * MEMBER_ROW_BYTES``
-    exceeds the session's autoBroadcastJoinThreshold, the self-join
-    below has lost broadcast and would land a giant group's g^2/2
-    pairs on ONE sort-merge task — so ``big_min`` defaults to
-    ``AUTO_BIG_MIN`` there, engaging the block decomposition exactly
-    when the regime flips instead of relying on a caller opt-in.  An
-    explicit ``big_min`` always wins; no estimate keeps the plain
-    path (measured 4-5x cheaper while broadcast holds)."""
-    if big_min is None and members_rows is not None:
-        from pangenomesasgraphdatabases_spark.operators.sizing import (
-            broadcast_threshold_bytes,
-        )
+    Spark job) gates the block path (VERDICT r10 #1): it engages when
+    the estimated members size ``members_rows * MEMBER_ROW_BYTES``
+    exceeds the session's autoBroadcastJoinThreshold, exactly when
+    the regime flips.  No estimate keeps the plain path (measured
+    4-5x cheaper while broadcast holds)."""
+    from pangenomesasgraphdatabases_spark.operators.sizing import (
+        broadcast_threshold_bytes,
+    )
 
-        thr = broadcast_threshold_bytes(members.sparkSession)
-        if members_rows * MEMBER_ROW_BYTES > thr:
-            big_min = AUTO_BIG_MIN
-    if big_min is None:
+    if members_rows is None or (
+        members_rows * MEMBER_ROW_BYTES <= broadcast_threshold_bytes(members.sparkSession)
+    ):
         a = members.select("_rep", F.col("_id").alias(c1))
         b = members.select("_rep", F.col("_id").alias(c2))
         return a.join(b, "_rep").filter(F.col(c1) < F.col(c2))
@@ -252,7 +245,7 @@ def within_group_pairs(
     big = (
         members.groupBy("_rep")
         .agg(F.count(F.lit(1)).alias("_n"))
-        .filter(F.col("_n") > big_min)
+        .filter(F.col("_n") > AUTO_BIG_MIN)
         .select("_rep")
     )
     small_m = members.join(F.broadcast(big), "_rep", "left_anti")
@@ -261,10 +254,10 @@ def within_group_pairs(
     small_pairs = a.join(b, "_rep").filter(F.col(c1) < F.col(c2))
 
     big_m = members.join(F.broadcast(big), "_rep").withColumn(
-        "_b", F.pmod(F.xxhash64("_id"), F.lit(blocks)).cast("int")
+        "_b", F.pmod(F.xxhash64("_id"), F.lit(BLOCKS)).cast("int")
     )
     left = big_m.withColumn(
-        "_b2", F.explode(F.sequence(F.col("_b"), F.lit(blocks - 1)))
+        "_b2", F.explode(F.sequence(F.col("_b"), F.lit(BLOCKS - 1)))
     )
     right = big_m.select(
         "_rep", F.col("_b").alias("_b2"), F.col("_id").alias("_rid")

@@ -11,10 +11,10 @@ The BLAST algorithm itself is public and maps naturally onto Spark:
    never a pairwise scan of query x subject.
 2. **Overrepresented-word masking** (BLAST's low-complexity guard,
    and this engine's hot-key discipline): k-mers whose subject-side
-   occurrence count exceeds ``max_kmer_df`` are dropped from seeding
+   occurrence count exceeds ``MAX_KMER_DF`` are dropped from seeding
    via one window over the k-mer key — a poly-A run cannot become a
    quadratic join key.  Dropped-seed recall loss is the documented
-   BLAST trade, not a silent failure: the cap is a parameter.
+   BLAST trade, not a silent failure: the cap is a named constant.
 3. **Candidate collapse**: seed hits group per (query, subject,
    diagonal = s_pos - q_pos) carrying the sorted seed-position list,
    then collapse to ONE ROW PER (query, subject) PAIR holding the
@@ -74,10 +74,6 @@ MATCH = 1
 MISMATCH = -2
 KA_LAMBDA = 1.28
 KA_K = 0.46
-# Relative entropy H of the +1/-2 ungapped target distribution
-# (NCBI's published value for this matrix) — drives the BLAST
-# effective-length adjustment.
-KA_H = 1.10
 # GAPPED Karlin-Altschul parameters for the builtin gapped path
 # (VERDICT r13 #4).  NCBI publishes gapped (lambda, K, H) per
 # (reward, penalty, gap_open, gap_extend) regime in blast_stat.c's
@@ -86,16 +82,15 @@ KA_H = 1.10
 # 2 (a length-k gap costs 2k+1 <= 3k for all k >= 1) below and open
 # 3 / extend 3 (3k+3 >= 3k) above.  Cheaper gaps admit more
 # high-scoring random alignments, i.e. smaller lambda — so the
-# cheaper bracket's parameters (lambda 0.85, K 0.23, H 0.66 for
+# cheaper bracket's parameters (lambda 0.85, K 0.23 for
 # open 1 / extend 2) are the CONSERVATIVE choice: bit scores are
 # never overstated and e-values never understated relative to the
 # true (unpublished) linear-3 values.
 KA_GAPPED_LAMBDA = 0.85
 KA_GAPPED_K = 0.23
-KA_GAPPED_H = 0.66
 
-# Seed word length and the ungapped X-drop; the k-mer cap is the
-# ungapped path's default and the gapped path's value.
+# Seed word length, the ungapped X-drop and the subject-side k-mer
+# occurrence cap.
 WORD_SIZE = 11
 XDROP = 20
 MAX_KMER_DF = 64
@@ -172,35 +167,11 @@ def _kmers(seqs: DataFrame, id_col: str, word_size: int, pos_col: str) -> DataFr
     )
 
 
-def _low_complexity(kmer_col, word_size: int):
-    """DUST-style low-complexity predicate for one k-mer, JVM-side:
-    count DISTINCT triplets inside the word (blastn's dust works on
-    triplet composition over windows; at word granularity a k-mer
-    whose triplets collapse to few distinct values is a homopolymer /
-    short-period repeat — poly-A has 1, (AT)n has 2, (ACG)n has 3).
-    The cutoff SCALES with the word: a period-p repeat contributes p
-    distinct triplets however long the word, so ``max(3, (word_size -
-    2) // 3)`` keeps the masked period growing with word_size (at the
-    default 11 it is the classic <= 3; a fixed 3 would let period-4+
-    repeats through 28-mers — ADVICE r13).  Composed from aggregate
-    over a position sequence + array_distinct, no UDF."""
-    triplets = F.transform(
-        F.sequence(F.lit(1), F.lit(word_size - 2)),
-        lambda i: F.substring(kmer_col, i, 3),
-    )
-    return F.size(F.array_distinct(triplets)) <= max(
-        3, (word_size - 2) // 3
-    )
-
-
 def _pair_candidates(
     queries: DataFrame,
     subjects: DataFrame,
-    max_kmer_df: int,
     keep_positions: bool,
     max_diags: int | None = None,
-    mask_low_complexity: bool = False,
-    broadcast_seqs: bool = True,
 ) -> DataFrame:
     """Shared seeding front half: k-mer inverted-index join with the
     overrepresented-word cap, collapsed to ONE row per (query,
@@ -210,36 +181,21 @@ def _pair_candidates(
     diagonals per pair by seed count (ties: lowest diagonal) — the
     gapped path's banded-DP budget.
 
-    ``broadcast_seqs`` picks the sequence-attach regime (VERDICT r13
-    #2 / ADVICE r13 — the pin must not depend on AQE's silent
-    broadcast decision):
-
-    * True (default): both sequence frames join under an EXPLICIT
-      ``F.broadcast`` hint — payloads never shuffle and the
-      round-robin pin placed before the joins survives to the
-      extension stage whatever ``autoBroadcastJoinThreshold`` says.
-      Above Spark's ~8 GB broadcast hard cap this fails LOUDLY
-      instead of silently unpinning.
-    * False (corpora too big to broadcast): the joins run as
-      shuffle joins and the round-robin pin moves AFTER them — the
-      payloads shuffle (unavoidable in this regime: the join itself
-      must move them) plus one extra round-robin pass to restore the
-      pinned width the keyed join exchange discarded."""
+    Both sequence frames join under an EXPLICIT ``F.broadcast`` hint
+    (VERDICT r13 #2 / ADVICE r13 — the pin must not depend on AQE's
+    silent broadcast decision): payloads never shuffle and the
+    round-robin pin placed before the joins survives to the extension
+    stage whatever ``autoBroadcastJoinThreshold`` says.  Above Spark's
+    ~8 GB broadcast hard cap this fails LOUDLY instead of silently
+    unpinning."""
     qk = _kmers(queries, "query_id", WORD_SIZE, "q_pos")
     sk = _kmers(subjects, "subject_id", WORD_SIZE, "s_pos")
-    if mask_low_complexity:
-        # DUST-style masking (blastn -dust yes): drop low-complexity
-        # words from seeding on BOTH sides before any shuffle — a
-        # (AT)n tract can pass the corpus-frequency cap on a small
-        # database yet still seed junk diagonals.
-        qk = qk.filter(~_low_complexity(F.col("kmer"), WORD_SIZE))
-        sk = sk.filter(~_low_complexity(F.col("kmer"), WORD_SIZE))
     # BLAST-style overrepresented-word mask: one window over the
     # k-mer key (the measured window-over-key pattern) instead of a
     # groupBy + join-back.
     sk = sk.withColumn(
         "_df", F.count(F.lit(1)).over(Window.partitionBy("kmer"))
-    ).filter(F.col("_df") <= max_kmer_df)
+    ).filter(F.col("_df") <= MAX_KMER_DF)
     seeds = qk.join(sk, "kmer").select(
         "query_id",
         "subject_id",
@@ -282,25 +238,16 @@ def _pair_candidates(
     width = session_shuffle_floor(queries.sparkSession)
     qs_dim = queries.select("query_id", F.col("sequence").alias("_qs"))
     ss_dim = subjects.select("subject_id", F.col("sequence").alias("_ss"))
-    if broadcast_seqs:
-        # Pin BEFORE the joins on the slim candidate frame; the
-        # explicit broadcast hints guarantee the joins preserve the
-        # pinned partitioning (a silent sort-merge fallback above the
-        # auto-broadcast threshold would re-shuffle by key and undo
-        # the pin — ADVICE r13; tests/test_plans.py asserts the plan
-        # shape on both sides of the threshold).
-        return (
-            cand.repartition(width)
-            .join(F.broadcast(qs_dim), "query_id")
-            .join(F.broadcast(ss_dim), "subject_id")
-        )
-    # Big-corpus regime: shuffle joins move the payloads anyway; the
-    # round-robin pin re-applies AFTER them so the extension width is
-    # explicit whatever the join exchanges negotiated.
+    # Pin BEFORE the joins on the slim candidate frame; the explicit
+    # broadcast hints guarantee the joins preserve the pinned
+    # partitioning (a silent sort-merge fallback above the
+    # auto-broadcast threshold would re-shuffle by key and undo the
+    # pin — ADVICE r13; tests/test_plans.py asserts the plan shape with
+    # auto-broadcast disabled).
     return (
-        cand.join(qs_dim, "query_id")
-        .join(ss_dim, "subject_id")
-        .repartition(width)
+        cand.repartition(width)
+        .join(F.broadcast(qs_dim), "query_id")
+        .join(F.broadcast(ss_dim), "subject_id")
     )
 
 
@@ -448,9 +395,6 @@ def builtin_blast_hits(
     queries: DataFrame,
     subjects: DataFrame,
     min_score: int = 28,
-    max_kmer_df: int = MAX_KMER_DF,
-    mask_low_complexity: bool = False,
-    broadcast_seqs: bool = True,
 ) -> DataFrame:
     """Ungapped seed-and-extend hits between ``queries`` and
     ``subjects`` (both ``(.., sequence)`` frames with ``query_id`` /
@@ -469,26 +413,9 @@ def builtin_blast_hits(
     ``(query_id, subject_id, q_start, s_start, align_len, n_matches,
     score)`` — 1-based starts, integer raw score under +1/-2.
 
-    ``mask_low_complexity=True`` additionally drops DUST-style
-    low-complexity words (few distinct triplets — homopolymers and
-    short-period repeats; cutoff scales with ``WORD_SIZE``, see
-    :func:`_low_complexity`) from seeding on both sides, blastn's
-    ``-dust yes`` analog: the corpus-frequency cap alone cannot catch
-    a repeat tract that is rare in a SMALL database.  Default off —
-    the reference pipeline screens curated cluster representatives.
-    ``broadcast_seqs=False`` switches the sequence-attach joins to
-    the big-corpus shuffle regime (see :func:`_pair_candidates`).
-
     Use :func:`with_bitscore` to attach bit score / e-value columns
     for the ``enrich_clusters_with_blast`` surface."""
-    with_seqs = _pair_candidates(
-        queries,
-        subjects,
-        max_kmer_df,
-        keep_positions=True,
-        mask_low_complexity=mask_low_complexity,
-        broadcast_seqs=broadcast_seqs,
-    )
+    with_seqs = _pair_candidates(queries, subjects, keep_positions=True)
     merge_gap = WORD_SIZE + XDROP // 2
 
     def extend(batches: Iterable) -> Iterator:
@@ -544,38 +471,17 @@ def builtin_blast_hits(
     return hits.filter(F.col("score") >= F.lit(min_score))
 
 
-def effective_length_adjustment(
-    m: int, n: int, k: float = KA_K, h: float = KA_H
-) -> int:
-    """BLAST's length adjustment ``l`` — the fixed point of
-    ``l = ln(K * (m - l) * (n - l)) / H`` (an alignment cannot start
-    in the last ~l positions of either sequence, so the e-value
-    search space shrinks to (m - l)(n - l); NCBI BLAST solves the
-    same fixed point, BlastComputeLengthAdjustment).  Five iterations
-    from 0 with clamping, as BLAST does; returns a non-negative
-    integer (floor, BLAST's convention)."""
-    l = 0.0
-    for _ in range(5):
-        l = math.log(k * max(m - l, 1.0) * max(n - l, 1.0)) / h
-        l = max(l, 0.0)
-    return int(l)
-
-
 def with_bitscore(
     hits: DataFrame,
     m: int,
     n: int,
-    effective_lengths: bool = False,
     gapped: bool = False,
 ) -> DataFrame:
     """Attach Karlin-Altschul bit score and e-value columns (+1/-2
     parameters; ``m``/``n`` are the query/database lengths the
-    e-value search space uses).  Default keeps RAW lengths (the r12
-    documented simplification — the reference pipeline only
-    thresholds and ranks, which raw lengths preserve);
-    ``effective_lengths=True`` applies BLAST's length adjustment
-    (:func:`effective_length_adjustment`) so the search space is
-    ``(m - l)(n - l)`` as blastn reports.
+    e-value search space uses).  The search space keeps RAW lengths
+    (the r12 documented simplification — the reference pipeline only
+    thresholds and ranks, which raw lengths preserve).
 
     ``gapped=True`` switches to the GAPPED parameters
     (``KA_GAPPED_*`` — the conservative published bracket of the
@@ -584,14 +490,7 @@ def with_bitscore(
     reports per HSP and the reference's hits-table consumers expect
     (readBlast's description rows carry blastn's gapped scores,
     extendingDB_performingBlast.py:82-105)."""
-    lam, kk, hh = (
-        (KA_GAPPED_LAMBDA, KA_GAPPED_K, KA_GAPPED_H)
-        if gapped
-        else (KA_LAMBDA, KA_K, KA_H)
-    )
-    if effective_lengths:
-        adj = effective_length_adjustment(m, n, k=kk, h=hh)
-        m, n = max(m - adj, 1), max(n - adj, 1)
+    lam, kk = (KA_GAPPED_LAMBDA, KA_GAPPED_K) if gapped else (KA_LAMBDA, KA_K)
     bit = (lam * F.col("score") - math.log(kk)) / math.log(2.0)
     return hits.withColumn("bit_score", bit).withColumn(
         "evalue", F.lit(float(m)) * F.lit(float(n)) * F.pow(F.lit(2.0), -bit)
@@ -836,7 +735,6 @@ def builtin_blast_hits_gapped(
     queries: DataFrame,
     subjects: DataFrame,
     min_score: int = 28,
-    mask_low_complexity: bool = False,
 ) -> DataFrame:
     """Gapped variant of :func:`builtin_blast_hits`: the same
     inverted-index seeding, overrepresented-word cap, and
@@ -860,14 +758,7 @@ def builtin_blast_hits_gapped(
     diagonal inside the same Arrow-batched ``mapInPandas``, and each
     pair's sequences cross the shuffle once however many diagonals
     it keeps."""
-    with_seqs = _pair_candidates(
-        queries,
-        subjects,
-        MAX_KMER_DF,
-        keep_positions=False,
-        max_diags=4,
-        mask_low_complexity=mask_low_complexity,
-    )
+    with_seqs = _pair_candidates(queries, subjects, keep_positions=False, max_diags=4)
 
     def extend(batches: Iterable) -> Iterator:
         import pandas as pd

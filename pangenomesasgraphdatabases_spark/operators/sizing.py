@@ -33,19 +33,14 @@ DEFAULT_TARGET_ROWS = 1_000_000
 DEFAULT_CAP = 4096
 
 
-def sized_shuffle_width(
-    n_rows: int | None,
-    floor: int,
-    target_rows: int = DEFAULT_TARGET_ROWS,
-    cap: int = DEFAULT_CAP,
-) -> int:
-    """Shuffle width for a frame of ``n_rows``: ceil(n/target),
-    clamped to [floor, cap].  ``None``/non-positive counts (empty
+def sized_shuffle_width(n_rows: int | None, floor: int) -> int:
+    """Shuffle width for a frame of ``n_rows``: ceil(n /
+    DEFAULT_TARGET_ROWS), clamped to [floor, DEFAULT_CAP].  ``None``/non-positive counts (empty
     input, missing stats) fall back to ``floor`` — never guess wide
     without evidence."""
     if not n_rows or n_rows <= 0:
         return floor
-    return max(floor, min(cap, math.ceil(n_rows / target_rows)))
+    return max(floor, min(DEFAULT_CAP, math.ceil(n_rows / DEFAULT_TARGET_ROWS)))
 
 
 def session_shuffle_floor(spark) -> int:

@@ -21,13 +21,13 @@ from pyspark.sql import functions as F
 # largest single allocation the expansion may make, regardless of how
 # hot the list is.
 PAIR_EXPANSION_CAP = 1024
+# hot_key_salted_join: left rows that make a key hot, and the salt
+# width its right rows are replicated over.
+HOT_MIN = 16_384
+SALT_N = 16
 
 
-def capped_pair_rows(
-    posts: DataFrame,
-    list_col: str,
-    cap: int = PAIR_EXPANSION_CAP,
-) -> DataFrame:
+def capped_pair_rows(posts: DataFrame, list_col: str) -> DataFrame:
     """(lo, hi) rows — one per i<j position pair of each row's SORTED
     DISTINCT id array — with the quadratic hot-list memory hazard
     capped (VERDICT r15 #3, guide §2.5).
@@ -36,7 +36,7 @@ def capped_pair_rows(
     array as one flatten() value, so a hot posting list risked executor
     OOM (the pre-r15 self-join streamed the same pairs through a join
     iterator: slow task, never OOM).  Here the sorted array is cut into
-    ceil(L/cap) chunks and the chunk-pair index space is exploded FIRST:
+    ceil(L/PAIR_EXPANSION_CAP) chunks and the chunk-pair index space is exploded FIRST:
 
       gen1  posexplode(chunks)                 -> (ci, a) carrying chunks
       gen2  posexplode(slice(chunks, ci+1, ..))-> (k, b); k=0 means b==a
@@ -44,8 +44,8 @@ def capped_pair_rows(
 
     where the pair batch is the i<j intra-chunk surgery when k=0 and
     the full a x b cross product otherwise (sorted disjoint ranges:
-    every a value < every b value).  Each flatten is <= cap^2 structs
-    and the carried columns stay linear in L, so per-row memory is
+    every a value < every b value).  Each flatten is <=
+    PAIR_EXPANSION_CAP^2 structs and the carried columns stay linear in L, so per-row memory is
     bounded; a hot key still streams its pairs in one task — the
     pre-r15 hazard class — but can no longer OOM.  Lists that fit one
     chunk (every list on skew-free data) take gen1/gen2 as single-row
@@ -54,6 +54,7 @@ def capped_pair_rows(
     Output multiset is identical to the uncapped expansion by
     construction (each unordered pair lands in exactly one chunk cell;
     ids are distinct and the array sorted, so i<j == lo < hi)."""
+    cap = PAIR_EXPANSION_CAP
     size = F.size(list_col)
     # greatest(…, 1): an all-null group collects an EMPTY array, and
     # sequence(0, -1) would raise rather than return [].
@@ -102,8 +103,6 @@ def hot_key_salted_join(
     right: DataFrame,
     key: str,
     spread_col: str,
-    hot_min: int = 16_384,
-    salt_n: int = 16,
 ) -> DataFrame:
     """Inner equi-join ``left ⋈ right`` on ``key``, differential-salted
     against hot keys on the LEFT side (VERDICT r9 #6).
@@ -113,11 +112,11 @@ def hot_key_salted_join(
     to (doc1, shingle) — where one template-like key can hold the bulk
     of the pairs.  A plain hash/SMJ join lands every row of a hot key
     in one task; salting EVERYTHING multiplies the right side's
-    shuffle volume by ``salt_n`` even when no skew exists.  So: keys
-    with more than ``hot_min`` left rows (detected with one cheap agg
+    shuffle volume by ``SALT_N`` even when no skew exists.  So: keys
+    with more than ``HOT_MIN`` left rows (detected with one cheap agg
     of the left frame) are joined through a deterministic salt derived
     from ``spread_col`` (row-stable, no rand()), with ONLY the hot
-    keys' right rows replicated ``salt_n`` ways; all other keys join
+    keys' right rows replicated ``SALT_N`` ways; all other keys join
     untouched.  On a skew-free input the hot frame is empty and both
     branches degenerate to the plain join plus one empty-broadcast
     probe.  Output rows are exactly the plain join's.
@@ -129,15 +128,15 @@ def hot_key_salted_join(
     hot = (
         left.groupBy(key)
         .agg(F.count(F.lit(1)).alias("_n"))
-        .filter(F.col("_n") > hot_min)
+        .filter(F.col("_n") > HOT_MIN)
         .select(key)
     )
     cold = left.join(F.broadcast(hot), key, "left_anti").join(right, key)
     left_hot = left.join(F.broadcast(hot), key).withColumn(
-        "_salt", F.pmod(F.xxhash64(spread_col), F.lit(salt_n)).cast("int")
+        "_salt", F.pmod(F.xxhash64(spread_col), F.lit(SALT_N)).cast("int")
     )
     right_hot = right.join(F.broadcast(hot), key).withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(salt_n - 1)))
+        "_salt", F.explode(F.sequence(F.lit(0), F.lit(SALT_N - 1)))
     )
     hot_joined = left_hot.join(right_hot, [key, "_salt"]).drop("_salt")
     return cold.unionByName(hot_joined)

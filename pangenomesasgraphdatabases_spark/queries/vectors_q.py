@@ -460,17 +460,19 @@ def emb_cosine_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cross.unionByName(within)
 
 
-def emb_cosine_near_dup_exact(
-    spark: SparkSession, sf_dir: str, max_vectors: int = 20_000
-) -> DataFrame:
+# emb_cosine_near_dup_exact's corpus gate: a pair space of ~2e8.
+EXACT_MAX_VECTORS = 20_000
+
+
+def emb_cosine_near_dup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact all-pairs near-dup baseline — O(n^2) by construction, so
-    gated: refuses corpora where the pair space exceeds ~2e8.  Use the
-    LSH-bucketed emb_cosine_near_dup at scale."""
+    gated: refuses corpora of more than EXACT_MAX_VECTORS vectors.  Use
+    the LSH-bucketed emb_cosine_near_dup at scale."""
     e = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     n = e.count()
-    if n > max_vectors:
+    if n > EXACT_MAX_VECTORS:
         raise ValueError(
-            f"exact all-pairs gated to n<={max_vectors} vectors (got {n}); "
+            f"exact all-pairs gated to n<={EXACT_MAX_VECTORS} vectors (got {n}); "
             "use emb_cosine_near_dup (LSH-bucketed) instead"
         )
     a = e.select(F.col("vec_id").alias("vec1"), F.col("embedding").alias("e1"))

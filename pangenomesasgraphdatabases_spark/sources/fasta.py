@@ -15,14 +15,14 @@ from pyspark.sql import functions as F
 
 # filename stem = first '.'-segment of the basename (the reference uses
 # filename.split('.')[0], pirateToDatabase.py:26, 121, 166)
-_STEM = r"([^/]+?)\.[^/]*$"
+FILE_STEM = r"([^/]+?)\.[^/]*$"
 
 
 def _wholetext(spark: SparkSession, path: str) -> DataFrame:
     return (
         spark.read.text(path, wholetext=True)
         .withColumn("file", F.input_file_name())
-        .withColumn("stem", F.regexp_extract("file", _STEM, 1))
+        .withColumn("stem", F.regexp_extract("file", FILE_STEM, 1))
     )
 
 

@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-_STEM = r"([^/]+?)\.[^/]*$"
+from pangenomesasgraphdatabases_spark.sources.fasta import FILE_STEM
 
 _FEATURE_SCHEMA = T.StructType(
     [
@@ -373,7 +373,7 @@ def _iter_record_sequence(rec: str) -> str:
 def _wholetext(spark: SparkSession, path: str) -> DataFrame:
     return (
         spark.read.text(path, wholetext=True)
-        .withColumn("file", F.regexp_extract(F.input_file_name(), _STEM, 1))
+        .withColumn("file", F.regexp_extract(F.input_file_name(), FILE_STEM, 1))
         .select("file", "value")
     )
 
@@ -692,7 +692,6 @@ def load_type_map(spark: SparkSession, path: str) -> DataFrame:
 def with_so_type(
     df: DataFrame,
     type_map: dict | DataFrame | None = None,
-    on_conflict: str = "error",
 ) -> DataFrame:
     """Add an ``so_type`` column: the Sequence Ontology term for the
     GenBank feature key (bp_genbank2gff3.pl map_types, :1180), keys
@@ -712,18 +711,14 @@ def with_so_type(
       chained CASE would blow up the expression tree, while the map
       side stays trivially broadcastable.
 
-    ``on_conflict`` governs the table path when one ``ft_key`` maps
-    to DIFFERENT ``so_type`` values (the dict path makes such
-    conflicts impossible, so silently picking a winner would mask a
-    data error — ADVICE r13).  Exact-duplicate rows always dedup
-    harmlessly; genuine conflicts either
-
-    * ``"error"`` (default) — raise at EXECUTION time (a lazy
-      ``raise_error`` branch: building the plan stays jobless, per
-      the test_plans no-eager-actions contract) for any conflicted
-      key a feature row actually resolves through, naming the key;
-    * ``"max"`` — keep the deterministic lexicographic-max winner
-      (the pre-r14 behavior, for callers that curate the table)."""
+    On the table path one ``ft_key`` may map to DIFFERENT ``so_type``
+    values (the dict path makes such conflicts impossible, so silently
+    picking a winner would mask a data error — ADVICE r13).
+    Exact-duplicate rows dedup harmlessly; a genuine conflict raises
+    at EXECUTION time (a lazy ``raise_error`` branch: building the
+    plan stays jobless, per the test_plans no-eager-actions contract)
+    for any conflicted key a feature row actually resolves through,
+    naming the key."""
     ft = F.col("feature_type")
     if type_map is None or isinstance(type_map, dict):
         literal = FT_SO_SUBSET if type_map is None else type_map
@@ -731,8 +726,6 @@ def with_so_type(
         for k, v in sorted(literal.items()):
             expr = F.when(ft == k, F.lit(v)).otherwise(expr)
         return df.withColumn("so_type", expr)
-    if on_conflict not in ("error", "max"):
-        raise ValueError(f"on_conflict must be 'error' or 'max': {on_conflict}")
     # A duplicate ft_key row in a user-supplied map table would
     # silently FAN OUT feature rows through the join — impossible in
     # the dict path, so the table path must dedup (ADVICE r12).
@@ -749,19 +742,17 @@ def with_so_type(
         .groupBy("__ft_key")
         .agg(F.max("__so").alias("__so"), F.count(F.lit(1)).alias("__n"))
     )
-    so = F.coalesce(F.col("__so"), ft)
-    if on_conflict == "error":
-        so = F.when(
-            F.col("__n") > 1,
-            F.raise_error(
-                F.concat(
-                    F.lit("with_so_type: conflicting so_type values for "
-                          "ft_key '"),
-                    F.col("__ft_key"),
-                    F.lit("' in the supplied type map"),
-                )
-            ).cast("string"),
-        ).otherwise(so)
+    so = F.when(
+        F.col("__n") > 1,
+        F.raise_error(
+            F.concat(
+                F.lit("with_so_type: conflicting so_type values for "
+                      "ft_key '"),
+                F.col("__ft_key"),
+                F.lit("' in the supplied type map"),
+            )
+        ).cast("string"),
+    ).otherwise(F.coalesce(F.col("__so"), ft))
     return (
         df.join(F.broadcast(m), ft == F.col("__ft_key"), "left")
         .withColumn("so_type", so)

@@ -23,8 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pangenomesasgraphdatabases_spark.functions.sequence import has_premature_stop
-
-_STEM = r"([^/]+?)\.[^/]*$"
+from pangenomesasgraphdatabases_spark.sources.fasta import FILE_STEM
 
 GFF_COLS = [
     "file",
@@ -47,7 +46,7 @@ def parse_gff_features(spark: SparkSession, path: str) -> DataFrame:
     the FASTA tail dropped."""
     lines = (
         spark.read.text(path)
-        .withColumn("file", F.regexp_extract(F.input_file_name(), _STEM, 1))
+        .withColumn("file", F.regexp_extract(F.input_file_name(), FILE_STEM, 1))
         .withColumn("value", F.regexp_replace("value", ",", ""))
     )
     # Mark FASTA-tail lines per file: a running max over the ##FASTA
@@ -87,7 +86,7 @@ def read_gff_scaffolds(spark: SparkSession, path: str) -> DataFrame:
     """FASTA tail -> one row per scaffold: (file, seqid, seq)."""
     whole = (
         spark.read.text(path, wholetext=True)
-        .withColumn("file", F.regexp_extract(F.input_file_name(), _STEM, 1))
+        .withColumn("file", F.regexp_extract(F.input_file_name(), FILE_STEM, 1))
         .withColumn("value", F.regexp_replace("value", ",", ""))
     )
     tail = whole.select(

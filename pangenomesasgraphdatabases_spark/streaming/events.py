@@ -96,10 +96,14 @@ def session_window_stream(events: DataFrame) -> DataFrame:
     )
 
 
-def dedup_stream(events: DataFrame, watermark: str = "10 minutes") -> DataFrame:
+# How long dedup_stream keeps a fingerprint's state.
+DEDUP_WATERMARK = "10 minutes"
+
+
+def dedup_stream(events: DataFrame) -> DataFrame:
     """Ingest-time exact deduplication (training-pipeline extension):
-    re-deliveries carrying the same content fingerprint within the
-    watermark are dropped before they reach storage, so the batch
+    re-deliveries carrying the same content fingerprint within
+    DEDUP_WATERMARK are dropped before they reach storage, so the batch
     dedup pass (queries/text_q.doc_exact_dedup) only handles
     cross-partition-file duplicates.  dropDuplicatesWithinWatermark
     keeps per-key state only until the watermark passes — bounded
@@ -114,7 +118,7 @@ def dedup_stream(events: DataFrame, watermark: str = "10 minutes") -> DataFrame:
     )
     return (
         events.withColumn("fingerprint", fp)
-        .withWatermark("ts", watermark)
+        .withWatermark("ts", DEDUP_WATERMARK)
         .dropDuplicatesWithinWatermark(["fingerprint"])
     )
 

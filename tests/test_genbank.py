@@ -821,8 +821,8 @@ def test_so_type_mapping_table_driven(spark):
 def test_so_type_map_duplicate_key_does_not_fan_out(spark):
     """ADVICE r12: a duplicate ft_key row in a user-supplied map
     table must not duplicate feature rows through the broadcast join
-    — the table path dedups deterministically, so row count is
-    preserved and (under on_conflict='max') the survivor is stable."""
+    — the table path dedups exact re-statements of one mapping, so
+    the row count is preserved."""
     from pangenomesasgraphdatabases_spark.sources.genbank import with_so_type
 
     feats = spark.createDataFrame(
@@ -830,21 +830,19 @@ def test_so_type_map_duplicate_key_does_not_fan_out(spark):
         ["feature_id", "feature_type"],
     )
     dup_map = spark.createDataFrame(
-        [("CDS", "CDS"), ("CDS", "zzz_conflicting"), ("tRNA", "tRNA")],
+        [("CDS", "CDS"), ("CDS", "CDS"), ("tRNA", "tRNA"), ("tRNA", "tRNA")],
         ["ft_key", "so_type"],
     )
-    out = with_so_type(feats, type_map=dup_map, on_conflict="max").collect()
+    out = with_so_type(feats, type_map=dup_map).collect()
     assert len(out) == 3  # no fan-out
     got = {r.feature_id: r.so_type for r in out}
-    assert got == {"f1": "zzz_conflicting", "f2": "tRNA",
-                   "f3": "zzz_conflicting"}
+    assert got == {"f1": "CDS", "f2": "tRNA", "f3": "CDS"}
 
 
 def test_so_type_map_conflicting_values_raise_by_default(spark):
     """ADVICE r13: one ft_key mapping to DIFFERENT so_type values is
     a data error the dict path cannot express — the table path must
-    not silently pick a winner.  Default on_conflict='error' raises
-    at execution (lazily — plan construction stays jobless) naming
+    not silently pick a winner.  It raises at execution (lazily — plan construction stays jobless) naming
     the key; exact-duplicate re-statements of ONE mapping still
     dedup harmlessly."""
     import pytest
@@ -878,8 +876,6 @@ def test_so_type_map_conflicting_values_raise_by_default(spark):
     )
     got2 = with_so_type(only_trna, type_map=conflict_map).collect()
     assert got2[0].so_type == "tRNA"
-    with pytest.raises(ValueError, match="on_conflict"):
-        with_so_type(feats, type_map=dup_map, on_conflict="nope")
 
 
 def test_gff_qualifier_passthrough_escaping_and_multivalues(spark, tmp_path):

@@ -293,20 +293,27 @@ def test_jpeg12_flat_blocks_bit_exact():
             assert (out[..., c] == want).all(), mid
 
 
-def test_jpeg12_gradient_psnr_with_16bit_table():
-    """Default x16 quality table: entries genuinely exceed 255 (the
-    Pq=1 byte-width matters) and a smooth 12-bit gradient survives
-    encode/decode within a PSNR floor on the scaled 8-bit surface."""
+def _qt12(quality: int) -> np.ndarray:
+    """The quality-scaled Annex K luma table x16: quantization step
+    per sample bit as on the 8-bit path, with entries above 255 so the
+    Pq=1 wire format is value-exercised, not just parsed."""
     from pangenomesasgraphdatabases_spark.operators.jpeg_codec import (
         QT_LUMA,
         quality_scale,
     )
 
-    assert (quality_scale(QT_LUMA, 90).astype(np.int64) * 16).max() > 255
+    return np.clip(quality_scale(QT_LUMA, quality).astype(np.int64) * 16, 1, 65535)
+
+
+def test_jpeg12_gradient_psnr_with_16bit_table():
+    """x16 quality table: entries genuinely exceed 255 (the Pq=1
+    byte-width matters) and a smooth 12-bit gradient survives
+    encode/decode within a PSNR floor on the scaled 8-bit surface."""
+    assert _qt12(90).max() > 255
     h, w = 40, 56
     y, x = np.mgrid[0:h, 0:w]
     g = (y / (h - 1) * 2047 + x / (w - 1) * 2048).astype(np.uint16)
-    out = decode_jpeg(encode_jpeg12(g, quality=90))
+    out = decode_jpeg(encode_jpeg12(g, qtab=_qt12(90)))
     want = np.round(g.astype(np.float64) * 255.0 / 4095.0)
     err = out[..., 0].astype(np.float64) - want
     psnr = 10 * np.log10(255.0**2 / max(float((err**2).mean()), 1e-9))
@@ -340,7 +347,7 @@ def test_jpeg12_roundtrip_property():
             0,
             4095,
         ).astype(np.uint16)
-        out = decode_jpeg(encode_jpeg12(g, quality=q))
+        out = decode_jpeg(encode_jpeg12(g, qtab=_qt12(q)))
         assert out.shape == (h, w, 3) and out.dtype == np.uint8
         want = np.round(g.astype(np.float64) * 255.0 / 4095.0)
         assert np.abs(out[..., 0] - want).mean() < 12.0
@@ -350,9 +357,9 @@ def test_jpeg12_roundtrip_property():
 
 def test_jpeg12_input_validation():
     with pytest.raises(ValueError, match="uint16"):
-        encode_jpeg12(np.zeros((8, 8), dtype=np.uint8))
+        encode_jpeg12(np.zeros((8, 8), dtype=np.uint8), qtab=_qt12(85))
     with pytest.raises(ValueError, match="4095"):
-        encode_jpeg12(np.full((8, 8), 5000, dtype=np.uint16))
+        encode_jpeg12(np.full((8, 8), 5000, dtype=np.uint16), qtab=_qt12(85))
     with pytest.raises(ValueError, match="qtab"):
         encode_jpeg12(
             np.zeros((8, 8), dtype=np.uint16),

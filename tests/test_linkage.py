@@ -284,30 +284,6 @@ def test_scalable_linkage_gate_is_one_action(spark, monkeypatch):
     }
 
 
-def test_scalable_linkage_exact_ids_matches_hashed(spark):
-    """exact_ids=True (collision-free monotonic ids) must produce the
-    same partition as the default xxhash64 path."""
-    from pangenomesasgraphdatabases_spark.graph.rgp_analysis import (
-        linkage_clusters_scalable,
-    )
-
-    rng = random.Random(23)
-    items = [f"w{i}" for i in range(40)]
-    pairs = []
-    for i in range(40):
-        for j in range(i + 1, 40):
-            if rng.random() < 0.2:
-                pairs.append((items[i], items[j], round(rng.random(), 3)))
-    df = spark.createDataFrame(pairs, "item1 string, item2 string, dist double")
-    t = 0.3
-    hashed = {r.item: r.cluster for r in
-              linkage_clusters_scalable(df, t, exact_max_pairs=0).collect()}
-    exact = {r.item: r.cluster for r in
-             linkage_clusters_scalable(
-                 df, t, exact_max_pairs=0, exact_ids=True).collect()}
-    assert hashed == exact  # cluster labels are min item strings — id-scheme free
-
-
 def test_dice_fanout_gate(spark, pangenome):
     from pangenomesasgraphdatabases_spark.graph.rgp import find_rgps
     from pangenomesasgraphdatabases_spark.graph.rgp_analysis import (

@@ -42,25 +42,6 @@ def test_flagship_single_shuffle(spark):
     assert plan.count("Exchange hashpartitioning") <= 1
 
 
-def test_bucketed_join_has_no_shuffle(spark, pangenome, tmp_path_factory):
-    from pangenomesasgraphdatabases_spark.graph.storage import save_bucketed_tables
-
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        save_bucketed_tables(pangenome, spark, database="pg_test", n_buckets=4)
-        f = spark.table("pg_test.features_by_fid")
-        o = spark.table("pg_test.ortholog_by_fid")
-        joined = f.join(o, "feature_id").select("feature_id", "cluster_id", "strain")
-        plan = _plan(joined)
-        assert "SortMergeJoin" in plan
-        # Co-located buckets: no shuffle exchange anywhere in the join.
-        assert "Exchange hashpartitioning" not in plan
-        assert joined.count() == pangenome.ortholog.count()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-        spark.sql("DROP DATABASE IF EXISTS pg_test CASCADE")
-
-
 def test_gi_scan_shuffles_features_once(spark, tmp_path_factory):
     """gi_scan joins features straight to the saved ortholog table and
     the broadcast cluster dimension, so the strain window's exchange is
@@ -746,17 +727,11 @@ def test_seed_align_width_pin_is_broadcast_proof(spark):
     (the round-robin repartition that stops AQE's byte-based
     coalescing from serializing the CPU-bound mapInPandas stage —
     the measured 88 s -> 13 s trap) must survive the sequence-attach
-    joins on BOTH sides of the auto-broadcast threshold:
-
-    * default regime: the sequence dims join under EXPLICIT
-      F.broadcast hints, so even with autoBroadcastJoinThreshold
-      DISABLED the joins are BroadcastHashJoin and the pinned
-      round-robin exchange is the mapInPandas stage's parent — no
-      silent sort-merge fallback can re-shuffle the candidates by
-      key and undo the pin;
-    * broadcast_seqs=False (big-corpus regime): the joins shuffle,
-      and the pin re-applies AFTER them — the round-robin exchange
-      sits between the mapInPandas and the joins."""
+    joins: the sequence dims join under EXPLICIT F.broadcast hints,
+    so even with autoBroadcastJoinThreshold DISABLED the joins are
+    BroadcastHashJoin and the pinned round-robin exchange is the
+    mapInPandas stage's parent — no silent sort-merge fallback can
+    re-shuffle the candidates by key and undo the pin."""
     from pangenomesasgraphdatabases_spark.operators.seed_align import (
         builtin_blast_hits,
     )
@@ -779,25 +754,6 @@ def test_seed_align_width_pin_is_broadcast_proof(spark):
         seg = plan[mp:rr]
         assert seg.count("BroadcastHashJoin") == 2
         assert "SortMergeJoin" not in seg and "ShuffledHashJoin" not in seg
-
-        plan2 = _plan(builtin_blast_hits(*base, broadcast_seqs=False))
-        # with the threshold disabled and no hints, nothing broadcasts
-        assert "BroadcastHashJoin" not in plan2
-        mp2, rr2 = plan2.index("MapInPandas"), plan2.index(
-            "RoundRobinPartitioning"
-        )
-        # pin AFTER the joins: the exchange is the stage's direct
-        # child (no join between them)...
-        assert mp2 < rr2
-        seg2 = plan2[mp2:rr2]
-        assert "SortMergeJoin" not in seg2 and "ShuffledHashJoin" not in seg2
-        # ...and the attach joins below it really did shuffle
-        # (seeding + 2 sequence attaches = 3 shuffle joins)
-        below = plan2[rr2:]
-        assert (
-            below.count("SortMergeJoin") + below.count("ShuffledHashJoin")
-            >= 3
-        )
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 

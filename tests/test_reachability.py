@@ -1,6 +1,7 @@
 """Package censuses, stdlib ast: every top-level function and class of
 the package (and every method of one) is reachable by name from a root;
-every defaulted parameter is set by some call; every import is used."""
+every defaulted parameter is set by some call outside the tests; every
+import is used."""
 
 from __future__ import annotations
 
@@ -31,7 +32,6 @@ ROOTS = (
     ("anchor_pair_distance_stats", "RGPs.ipynb cells 47-67"),
     ("to_spark", "the fixture graph the tests build"),
     ("write_raw_pirate_dir", "fixtures_data/pirate_raw, the PIRATE output fixture"),
-    ("save_bucketed_tables", "co-located saved graph, ROADMAP direction 2"),
 )
 # Plain-python references the tests check Spark results against.
 TEST_REFERENCES = (
@@ -39,6 +39,13 @@ TEST_REFERENCES = (
     ("_xdrop_extend", "x-drop extension reference for seed_align"),
     ("hilbert_d_py", "Hilbert index reference for lineitem_hilbert_layout"),
     ("emb_cosine_near_dup_exact", "exact reference for the LSH near-dup query"),
+)
+# Options only tests set, each to build an input the decoders must read.
+TEST_INPUTS = (
+    ("encode_jpeg(restart_interval)", "restart markers for the JPEG decoder"),
+    ("encode_png_palette(depth)", "palettes of fewer than 8 bits per pixel for the PNG decoder"),
+    ("build_ogg_page(continued)", "a packet continued across Ogg pages"),
+    ("build_ogg_page(open_ended)", "a packet left open at an Ogg page end"),
 )
 # Scripts whose every name counts as used.
 SCRIPTS = ("bench.py", "__spark_entry__.py", "tools/*.py", "perfbench/**/*.py")
@@ -113,10 +120,16 @@ def _defaulted(fn: ast.FunctionDef, method: bool) -> list:
     ]
 
 
+def _callee(f) -> str | None:
+    return f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+
+
 def test_every_option_is_set_by_some_call():
-    """A defaulted parameter that no call sets is a constant with an
-    option's cost: every caller, test and benchmark runs its one value.
-    Paper steps in ROOTS await their callers and are exempt."""
+    """A defaulted parameter that no call outside tests/ sets is a
+    constant with an option's cost: every caller and benchmark runs its
+    one value, and a test that needs another monkeypatches a module
+    constant instead. Paper steps in ROOTS await their callers, and
+    the TEST_INPUTS options build decoder inputs; both are exempt."""
     options = []
     for path in _files(*PACKAGE):
         rel = os.path.relpath(path, os.path.join(REPO, PKG)).replace(os.sep, "/")
@@ -129,21 +142,34 @@ def test_every_option_is_set_by_some_call():
                 continue
             for fn, method in fns:
                 if fn.name not in dict(ROOTS):
-                    options += [(rel, fn.name, p, i) for p, i in _defaulted(fn, method)]
+                    options += [
+                        (rel, fn.name, p, i)
+                        for p, i in _defaulted(fn, method)
+                        if f"{fn.name}({p})" not in dict(TEST_INPUTS)
+                    ]
     # Per callee name: the keywords its calls pass and how many
     # positional arguments each passes; "*" when a call unpacks
     # *args or **kwargs, which may set anything.
     sets: dict = {}
-    for path in _files(*PACKAGE, *SCRIPTS, *TESTS):
-        for call in (n for n in ast.walk(_parse(path)) if isinstance(n, ast.Call)):
-            f = call.func
-            name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
-            s = sets.setdefault(name, set())
-            if any(isinstance(a, ast.Starred) for a in call.args) or any(
-                k.arg is None for k in call.keywords
-            ):
-                s.add("*")
-            s |= {k.arg for k in call.keywords} | {len(call.args)}
+    for path in _files(*PACKAGE, *SCRIPTS):
+        tree = _parse(path)
+        # `x = a` and `x = a if c else b`: a call of x calls a or b.
+        aliases: dict = {}
+        for n in ast.walk(tree):
+            if isinstance(n, ast.Assign) and len(n.targets) == 1 and isinstance(n.targets[0], ast.Name):
+                v = n.value
+                picks = (v.body, v.orelse) if isinstance(v, ast.IfExp) else (v,)
+                if all(isinstance(x, (ast.Name, ast.Attribute)) for x in picks):
+                    aliases.setdefault(n.targets[0].id, set()).update(map(_callee, picks))
+        for call in (n for n in ast.walk(tree) if isinstance(n, ast.Call)):
+            name = _callee(call.func)
+            for callee in {name} | aliases.get(name, set()):
+                s = sets.setdefault(callee, set())
+                if any(isinstance(a, ast.Starred) for a in call.args) or any(
+                    k.arg is None for k in call.keywords
+                ):
+                    s.add("*")
+                s |= {k.arg for k in call.keywords} | {len(call.args)}
     unset = []
     for rel, fn, p, i in options:
         s = sets.get(fn, set())

@@ -226,10 +226,12 @@ def test_lsh_candidate_pairs_bucket_cap_logs_and_drops(spark, caplog):
     )
 
 
-def test_within_group_pairs_block_path_matches_plain(spark):
+def test_within_group_pairs_block_path_matches_plain(spark, monkeypatch):
     """The block-pair decomposition for big groups emits exactly the
     same pair set as the plain single-key join: force it for every
-    group (big_min=0) over mixed group sizes and compare."""
+    group (AUTO_BIG_MIN 0, a members estimate past any broadcast
+    threshold) over mixed group sizes and compare."""
+    from pangenomesasgraphdatabases_spark.operators import rep_collapse
     from pangenomesasgraphdatabases_spark.operators.rep_collapse import (
         within_group_pairs,
     )
@@ -238,23 +240,25 @@ def test_within_group_pairs_block_path_matches_plain(spark):
     for g, size in [(100, 37), (200, 5), (300, 1), (400, 2), (500, 19)]:
         rows += [(g + i, g) for i in range(size)]
     members = spark.createDataFrame(rows, "_id long, _rep long")
+    huge = 10**12
 
     plain = {
         (r.a, r.b) for r in within_group_pairs(members, "a", "b").collect()
     }
+    monkeypatch.setattr(rep_collapse, "AUTO_BIG_MIN", 0)
     for blocks in (1, 3, 16):
+        monkeypatch.setattr(rep_collapse, "BLOCKS", blocks)
         blocked = [
             (r.a, r.b)
-            for r in within_group_pairs(
-                members, "a", "b", big_min=0, blocks=blocks
-            ).collect()
+            for r in within_group_pairs(members, "a", "b", members_rows=huge).collect()
         ]
         assert len(blocked) == len(plain), f"dup pairs at blocks={blocks}"
         assert set(blocked) == plain, f"pair set differs at blocks={blocks}"
     # mixed: threshold between the two group sizes
+    monkeypatch.setattr(rep_collapse, "AUTO_BIG_MIN", 20)
     mixed = {
         (r.a, r.b)
-        for r in within_group_pairs(members, "a", "b", big_min=20).collect()
+        for r in within_group_pairs(members, "a", "b", members_rows=huge).collect()
     }
     assert mixed == plain
     spark.catalog.clearCache()

@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from pangenomesasgraphdatabases_spark.graph import fixtures as fx
+from pangenomesasgraphdatabases_spark.graph import rgp
 from pangenomesasgraphdatabases_spark.graph.rgp import anchor_pairs, find_rgps
 
 
@@ -61,8 +62,11 @@ def test_no_rgp_without_mobile_gene(pangenome):
     assert find_rgps(g2).count() == 0
 
 
-def test_hop_bounds(pangenome):
-    # min_hops above the planted gap (7 relationships) -> nothing.
-    assert find_rgps(pangenome, min_hops=8).count() == 0
-    # max_hops below it -> nothing.
-    assert find_rgps(pangenome, max_hops=6).count() == 0
+def test_hop_bounds(pangenome, monkeypatch):
+    # MIN_HOPS above the planted gap (7 relationships) -> nothing.
+    monkeypatch.setattr(rgp, "MIN_HOPS", 8)
+    assert find_rgps(pangenome).count() == 0
+    # MAX_HOPS below it -> nothing.
+    monkeypatch.undo()
+    monkeypatch.setattr(rgp, "MAX_HOPS", 6)
+    assert find_rgps(pangenome).count() == 0

@@ -6,8 +6,7 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import functions as F
-
+from pangenomesasgraphdatabases_spark.operators import seed_align
 from pangenomesasgraphdatabases_spark.operators.seed_align import (
     KA_K,
     KA_LAMBDA,
@@ -80,9 +79,9 @@ def test_xdrop_terminates_at_junk_boundary(spark):
     assert h.score >= 38
 
 
-def test_overrepresented_kmer_cap_blocks_polyA(spark):
+def test_overrepresented_kmer_cap_blocks_polyA(spark, monkeypatch):
     """A poly-A query against poly-A-rich subjects: every 11-mer
-    exceeds max_kmer_df, so no seeds form (BLAST's low-complexity
+    exceeds MAX_KMER_DF, so no seeds form (BLAST's low-complexity
     trade) — while a unique query still hits."""
     polyA = "A" * 200
     uniq = _seq(4, 200)
@@ -91,7 +90,8 @@ def test_overrepresented_kmer_cap_blocks_polyA(spark):
         [("qA", "A" * 40), ("qU", uniq[60:120])],
         [(f"s{i}", polyA) for i in range(3)] + [("sU", uniq)],
     )
-    hits = builtin_blast_hits(q, s, max_kmer_df=16).collect()
+    monkeypatch.setattr(seed_align, "MAX_KMER_DF", 16)
+    hits = builtin_blast_hits(q, s).collect()
     by_q = {}
     for h in hits:
         by_q.setdefault(h.query_id, []).append(h)
@@ -281,78 +281,6 @@ def test_scored_and_gapped_registered_queries_match_oracle(spark):
         assert got == want and len(got) == 24, name
 
 
-def test_dust_masking_blocks_repeat_seeds(spark):
-    """mask_low_complexity=True (blastn -dust yes analog): a
-    short-period repeat tract shared by query and subject stops
-    seeding — even when it is RARE in the database, so the
-    corpus-frequency cap cannot catch it — while a genuine
-    high-complexity hit in the same run is untouched, in both the
-    ungapped and gapped paths."""
-    from pangenomesasgraphdatabases_spark.operators.seed_align import (
-        builtin_blast_hits,
-        builtin_blast_hits_gapped,
-    )
-
-    uniq = _seq(21, 300)
-    repeat = "AT" * 30  # (AT)n: every 11-mer has 2 distinct triplets
-    subj = uniq[:150] + repeat + uniq[150:]
-    q, s = _frames(
-        spark,
-        [("q_rep", repeat[:40]), ("q_ok", uniq[40:100])],
-        [("s1", subj)],
-    )
-    unmasked = {h.query_id for h in builtin_blast_hits(q, s).collect()}
-    assert unmasked == {"q_rep", "q_ok"}  # df cap alone misses (AT)n
-    masked = builtin_blast_hits(q, s, mask_low_complexity=True).collect()
-    by_q = {h.query_id for h in masked}
-    assert by_q == {"q_ok"}
-    ok = [h for h in masked if h.query_id == "q_ok"]
-    assert ok[0].n_matches >= 60 and ok[0].s_start == 41
-
-    gm = builtin_blast_hits_gapped(q, s, mask_low_complexity=True).collect()
-    assert {h.query_id for h in gm} == {"q_ok"}
-
-
-def test_effective_length_evalue():
-    """effective_lengths=True: the length adjustment is the fixed
-    point of l = ln(K(m-l)(n-l))/H (checked against its own
-    equation), shrinks the e-value search space, and leaves the bit
-    score untouched."""
-    import math
-
-    from pangenomesasgraphdatabases_spark.operators.seed_align import (
-        KA_H,
-        KA_K,
-        effective_length_adjustment,
-    )
-
-    m, n = 500, 100_000
-    adj = effective_length_adjustment(m, n)
-    want = math.log(KA_K * (m - adj) * (n - adj)) / KA_H
-    assert abs(adj - want) <= 1.0  # integer floor of the fixed point
-    assert 0 < adj < m
-
-
-def test_effective_length_evalue_spark(spark):
-    """Spark side: raw vs effective e-values differ by exactly the
-    search-space ratio; bit scores identical."""
-    from pangenomesasgraphdatabases_spark.operators.seed_align import (
-        builtin_blast_hits,
-        effective_length_adjustment,
-        with_bitscore,
-    )
-
-    subj = _seq(31, 300)
-    q, s = _frames(spark, [("q1", subj[50:110])], [("s1", subj)])
-    hits = builtin_blast_hits(q, s)
-    raw = with_bitscore(hits, m=60, n=300).collect()[0]
-    eff = with_bitscore(hits, m=60, n=300, effective_lengths=True).collect()[0]
-    adj = effective_length_adjustment(60, 300)
-    assert eff.bit_score == raw.bit_score
-    ratio = ((60 - adj) * (300 - adj)) / (60 * 300)
-    assert abs(eff.evalue / raw.evalue - ratio) < 1e-12
-
-
 def test_banded_sw_batch_matches_scalar():
     """Property: the vectorized batch DP (_banded_sw_batch) is
     bit-identical to the scalar _banded_sw — same scores, same
@@ -537,35 +465,6 @@ def test_gapped_bitscore_parameters(spark):
     ).collect()
     by_key = {(r.q_start, r.s_start): r for r in ungapped}
     assert h.bit_score < by_key[(h.q_start, h.s_start)].bit_score
-
-
-def test_dust_threshold_scales_with_word_size(spark):
-    """ADVICE r13: the DUST cutoff scales with word_size — a period-4
-    repeat (4 distinct triplets) passes the classic <=3 at the
-    default word_size=11 but IS masked at word_size=28, where the
-    cutoff grows to max(3, 26//3) = 8."""
-    from pangenomesasgraphdatabases_spark.operators.seed_align import (
-        _low_complexity,
-    )
-
-    rep4 = ("ACGG" * 10)[:28]
-    uniq = _seq(13, 28)
-    df = spark.createDataFrame([(rep4,), (uniq,)], ["kmer"])
-    got11 = {
-        r.kmer: r.m
-        for r in df.select(
-            "kmer",
-            _low_complexity(F.substring("kmer", 1, 11), 11).alias("m"),
-        ).collect()
-    }
-    assert got11[rep4] is False  # classic threshold lets period-4 by
-    got28 = {
-        r.kmer: r.m
-        for r in df.select(
-            "kmer", _low_complexity(F.col("kmer"), 28).alias("m")
-        ).collect()
-    }
-    assert got28[rep4] is True and got28[uniq] is False
 
 
 def test_builtin_gapped_enrich_registered_query_matches_oracle(spark):

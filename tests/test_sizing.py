@@ -10,6 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from pangenomesasgraphdatabases_spark.operators import sizing
 from pangenomesasgraphdatabases_spark.operators.sizing import (
     DEFAULT_CAP,
     session_shuffle_floor,
@@ -33,9 +34,10 @@ def test_large_inputs_scale_linearly():
     assert sized_shuffle_width(138_600_000, floor=32) == 139
 
 
-def test_cap_bounds_runaway_estimates():
+def test_cap_bounds_runaway_estimates(monkeypatch):
     assert sized_shuffle_width(10**12, floor=32) == DEFAULT_CAP
-    assert sized_shuffle_width(10**12, floor=32, cap=512) == 512
+    monkeypatch.setattr(sizing, "DEFAULT_CAP", 512)
+    assert sized_shuffle_width(10**12, floor=32) == 512
 
 
 def test_missing_stats_fall_back_to_floor():
@@ -44,8 +46,9 @@ def test_missing_stats_fall_back_to_floor():
     assert sized_shuffle_width(-5, floor=16) == 16
 
 
-def test_custom_target_rows():
-    assert sized_shuffle_width(10_000, floor=2, target_rows=1_000) == 10
+def test_custom_target_rows(monkeypatch):
+    monkeypatch.setattr(sizing, "DEFAULT_TARGET_ROWS", 1_000)
+    assert sized_shuffle_width(10_000, floor=2) == 10
 
 
 def test_session_floor_reads_conf(spark):

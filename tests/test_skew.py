@@ -5,9 +5,10 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 
-def test_hot_key_salted_join_matches_plain(spark):
+def test_hot_key_salted_join_matches_plain(spark, monkeypatch):
     """hot_key_salted_join == plain inner join, with and without a
-    genuinely hot key, and with hot_min=0 (every key salted)."""
+    genuinely hot key, and with HOT_MIN=0 (every key salted)."""
+    from pangenomesasgraphdatabases_spark.operators import skew
     from pangenomesasgraphdatabases_spark.operators.skew import (
         hot_key_salted_join,
     )
@@ -20,18 +21,18 @@ def test_hot_key_salted_join_matches_plain(spark):
     right = spark.createDataFrame(items, ["doc1", "shingle"])
 
     plain = {tuple(r) for r in left.join(right, "doc1").collect()}
+    monkeypatch.setattr(skew, "SALT_N", 4)
     for hot_min in (0, 50, 10**9):
+        monkeypatch.setattr(skew, "HOT_MIN", hot_min)
         got = {
             tuple(r)
-            for r in hot_key_salted_join(
-                left, right, "doc1", "doc2", hot_min=hot_min, salt_n=4
-            ).collect()
+            for r in hot_key_salted_join(left, right, "doc1", "doc2").collect()
         }
         assert got == plain, f"hot_min={hot_min}"
     spark.catalog.clearCache()
 
 
-def test_capped_pair_rows_hot_list_fallback(spark):
+def test_capped_pair_rows_hot_list_fallback(spark, monkeypatch):
     """VERDICT r15 #3: a posting list longer than the cap must take the
     chunked expansion (bounded in-row pair batches) and still produce
     the identical pair multiset — planted hot element (60 ids > cap=16,
@@ -39,10 +40,12 @@ def test_capped_pair_rows_hot_list_fallback(spark):
     compared against the exact combination set."""
     from itertools import combinations
 
+    from pangenomesasgraphdatabases_spark.operators import skew
     from pangenomesasgraphdatabases_spark.operators.skew import (
         capped_pair_rows,
     )
 
+    monkeypatch.setattr(skew, "PAIR_EXPANSION_CAP", 16)
     rows = (
         # hot element: 60 distinct ids -> ceil(60/16) = 4 chunks
         [("hot", i) for i in range(60)]
@@ -57,7 +60,7 @@ def test_capped_pair_rows_hot_list_fallback(spark):
     )
     got = sorted(
         (r.lo, r.hi)
-        for r in capped_pair_rows(posts, "oks", cap=16).collect()
+        for r in capped_pair_rows(posts, "oks").collect()
     )
     want = sorted(
         list(combinations(range(60), 2))
@@ -67,7 +70,7 @@ def test_capped_pair_rows_hot_list_fallback(spark):
     assert got == want
     # plan evidence: single lineage — chunking adds generates, never a
     # join or a second aggregation of the posting frame
-    plan = capped_pair_rows(posts, "oks", cap=16)._jdf \
+    plan = capped_pair_rows(posts, "oks")._jdf \
         .queryExecution().executedPlan().toString()
     assert plan.count("Generate") == 3  # chunk, chunk-pair, pair batch
     for node in (
@@ -80,12 +83,13 @@ def test_capped_pair_rows_hot_list_fallback(spark):
     spark.catalog.clearCache()
 
 
-def test_capped_pair_rows_empty_and_exact_boundary(spark):
+def test_capped_pair_rows_empty_and_exact_boundary(spark, monkeypatch):
     """Cap-boundary lists (size == cap) stay single-chunk; an all-null
     group collects an empty array and yields no pairs (the
     greatest(n_chunks, 1) guard, not a sequence(0,-1) error)."""
     from itertools import combinations
 
+    from pangenomesasgraphdatabases_spark.operators import skew
     from pangenomesasgraphdatabases_spark.operators.skew import (
         capped_pair_rows,
     )
@@ -103,6 +107,7 @@ def test_capped_pair_rows_empty_and_exact_boundary(spark):
             StructField("ok", IntegerType(), nullable=True),
         ]
     )
+    monkeypatch.setattr(skew, "PAIR_EXPANSION_CAP", 8)
     rows = [("b", i) for i in range(8)] + [("nulls", None)]
     sets = spark.createDataFrame(rows, schema)
     posts = sets.groupBy("pk").agg(
@@ -110,7 +115,7 @@ def test_capped_pair_rows_empty_and_exact_boundary(spark):
     )
     got = sorted(
         (r.lo, r.hi)
-        for r in capped_pair_rows(posts, "oks", cap=8).collect()
+        for r in capped_pair_rows(posts, "oks").collect()
     )
     assert got == sorted(combinations(range(8), 2))
     spark.catalog.clearCache()

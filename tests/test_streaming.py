@@ -72,7 +72,7 @@ def test_dedup_stream_drops_planted_redeliveries(spark, tmp_path):
         spark.readStream.schema(src.schema).format("parquet").load(path)
     )
     got = run_available_now(
-        dedup_stream(stream, watermark="1 hour"), spark, output_mode="append"
+        dedup_stream(stream), spark, output_mode="append"
     )
     fps = [r.fingerprint for r in got.collect()]
     assert len(fps) == 10 and len(set(fps)) == 10

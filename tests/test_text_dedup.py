@@ -104,7 +104,7 @@ def test_connected_components_transitive_chain(spark):
     assert got == {(1, 1), (2, 1), (3, 1), (4, 1), (10, 10), (11, 10)}
 
 
-def test_connected_components_long_chain_boundary(spark):
+def test_connected_components_long_chain_boundary(spark, monkeypatch):
     """Adversarial depth (VERDICT r4 #8, upgraded r12): with star
     contraction the iterative path converges in O(log n) rounds, so a
     201-node path — which plain min-propagation could never finish in
@@ -115,6 +115,7 @@ def test_connected_components_long_chain_boundary(spark):
     the component undetected)."""
     import pytest
 
+    from pangenomesasgraphdatabases_spark.operators import components
     from pangenomesasgraphdatabases_spark.operators.components import (
         connected_components,
     )
@@ -122,23 +123,27 @@ def test_connected_components_long_chain_boundary(spark):
     deep = spark.createDataFrame(
         [(i, i + 1) for i in range(200)], ["src", "dst"]
     )
-    # r12: star contraction finishes the 201-node chain in ~8 rounds
-    got_deep = connected_components(deep, max_iter=20, small_graph_edges=0)
-    assert {r.component for r in got_deep.collect()} == {0}
+    # The union-find fast path solves the deep chain exactly (no
+    # iteration bound applies there).
+    monkeypatch.setattr(components, "MAX_ITER", 2)
+    uf = connected_components(deep)
+    assert {r.component for r in uf.collect()} == {0}
+    # Force the iterative path from here on.
+    monkeypatch.setattr(components, "SMALL_GRAPH_EDGES", 0)
     # the no-fixpoint guard still raises when the budget truly is
     # too small (2 rounds reach only a few hops even with jumping)
     with pytest.raises(RuntimeError, match="no fixpoint"):
-        connected_components(deep, max_iter=2, small_graph_edges=0).collect()
+        connected_components(deep).collect()
+    # r12: star contraction finishes the 201-node chain in ~8 rounds
+    monkeypatch.setattr(components, "MAX_ITER", 20)
+    got_deep = connected_components(deep)
+    assert {r.component for r in got_deep.collect()} == {0}
 
     shallow = spark.createDataFrame(
         [(i, i + 1) for i in range(15)], ["src", "dst"]
     )
-    got = connected_components(shallow, max_iter=20, small_graph_edges=0)
+    got = connected_components(shallow)
     assert {r.component for r in got.collect()} == {0}
-    # The union-find fast path solves the same deep chain exactly (no
-    # iteration bound applies there).
-    uf = connected_components(deep, max_iter=20)
-    assert {r.component for r in uf.collect()} == {0}
 
 
 def test_ngram_jaccard_dedup_groups_planted_chain(spark, tmp_path):
@@ -243,12 +248,13 @@ def test_dedup_increment_against_corpus(spark):
     assert kept == [103, 105]
 
 
-def test_connected_components_matches_union_find(spark):
+def test_connected_components_matches_union_find(spark, monkeypatch):
     """Distributed min-label propagation must agree with a sequential
     union-find on deterministic random graphs (including a long chain,
     the propagation worst case)."""
     import random
 
+    from pangenomesasgraphdatabases_spark.operators import components
     from pangenomesasgraphdatabases_spark.operators.components import (
         connected_components,
     )
@@ -281,10 +287,8 @@ def test_connected_components_matches_union_find(spark):
         # (default gate) and the distributed min-label iteration
         # (gate forced off).
         for gate in (2_000_000, 0):
-            got = {
-                r.node: r.component
-                for r in connected_components(df, small_graph_edges=gate).collect()
-            }
+            monkeypatch.setattr(components, "SMALL_GRAPH_EDGES", gate)
+            got = {r.node: r.component for r in connected_components(df).collect()}
             assert got == expected, f"gate={gate}"
 
 
@@ -1001,12 +1005,13 @@ def test_bpe_pair_depth_precondition():
                 segs[w] = out
 
 
-def test_connected_components_star_vs_union_find_randomized(spark):
+def test_connected_components_star_vs_union_find_randomized(spark, monkeypatch):
     """r12 star-contraction rewrite: the iterative path must agree
     with the single-task union-find fast path on random graphs
     (mixed component shapes, hashed-looking ids including negatives)."""
     import random
 
+    from pangenomesasgraphdatabases_spark.operators import components
     from pangenomesasgraphdatabases_spark.operators.components import (
         connected_components,
     )
@@ -1020,16 +1025,10 @@ def test_connected_components_star_vs_union_find_randomized(spark):
             a, b = rng.sample(ids, 2)
             edges.append((a, b))
         df = spark.createDataFrame(edges, "src long, dst long")
-        it = {
-            (r.node, r.component)
-            for r in connected_components(
-                df, max_iter=30, small_graph_edges=0
-            ).collect()
-        }
-        uf = {
-            (r.node, r.component)
-            for r in connected_components(df).collect()
-        }
+        uf = {(r.node, r.component) for r in connected_components(df).collect()}
+        with monkeypatch.context() as m:
+            m.setattr(components, "SMALL_GRAPH_EDGES", 0)
+            it = {(r.node, r.component) for r in connected_components(df).collect()}
         assert it == uf, f"trial {trial}: iterative != union-find"
 
 

@@ -29,7 +29,8 @@ def test_ann_lsh_recall_vs_bruteforce(spark):
     assert recall >= 0.8, f"ANN LSH recall {recall:.2f} < 0.8"
 
 
-def test_near_dup_bucketed_subset_of_exact(spark):
+def test_near_dup_bucketed_subset_of_exact(spark, monkeypatch):
+    from pangenomesasgraphdatabases_spark.queries import vectors_q
     from pangenomesasgraphdatabases_spark.queries.vectors_q import (
         emb_cosine_near_dup,
         emb_cosine_near_dup_exact,
@@ -42,8 +43,9 @@ def test_near_dup_bucketed_subset_of_exact(spark):
 
     import pytest
 
+    monkeypatch.setattr(vectors_q, "EXACT_MAX_VECTORS", 10)
     with pytest.raises(ValueError, match="gated"):
-        emb_cosine_near_dup_exact(spark, SF, max_vectors=10)
+        emb_cosine_near_dup_exact(spark, SF)
 
 
 def test_vector_lsh_paths_have_no_cartesian(spark):
